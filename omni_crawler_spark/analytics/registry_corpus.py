@@ -78,10 +78,10 @@ _PASSAGES_SQL = f"""
     "100 TB shape (operators/dedup.py::passage_dup_pairs): ONE "
     "shuffle, keyed on xxhash64(passage) (8 bytes shuffled per chunk "
     "vs ~120), hot passages removed by a count-pre-pass + broadcast "
-    "anti-join BEFORE the self-join — a boilerplate passage repeated "
-    "across 10^5 docs can never expand to 10^10 join rows (blowup "
-    "bound pytest-pinned on a degenerate corpus). Output feeds the "
-    "same connected-components keeper as minhash "
+    "anti-join BEFORE bucket_pairs expands pairs — a boilerplate "
+    "passage repeated across 10^5 docs can never expand to 10^10 "
+    "pair rows (blowup bound pytest-pinned on a degenerate corpus). "
+    "Output feeds the same connected-components keeper as minhash "
     "(registry_sim.py::dedup_cluster_cc). Word-level chunking means "
     "a single-word edit disturbs only its own chunk, unlike "
     "byte-offset blocks",

@@ -209,14 +209,15 @@ def _mm_meta(d):
     "[32,8192], fmt in {{png,jpeg}} — planted invalid rows at "
     "doc_id%37/%41/%29). Both engines derive the identical metadata "
     "table from `documents` (arithmetic dims/fmt + md5-derived "
-    "phash), the Spark side runs the REAL banded operator "
-    "(operators/dedup.py::hamming_near_dups, 9-band pigeonhole, full "
-    "recall under the bucket cap) while the oracle computes the "
-    "all-pairs ground truth — so the count match also re-proves "
-    "banded recall == exhaustive on this corpus. The decode/PSNR/"
-    "resize stages cannot be oracled and stay pytest-pinned in "
-    "pipeline_multimodal. 100 TB shape: the dedup is the banded "
-    "self-join (never n^2); validation is a scan predicate",
+    "phash), the Spark side runs the REAL blocking operator "
+    "(operators/dedup.py::hamming_near_dups, multi-index probing "
+    "through bucket_pairs, full recall under the bucket cap) while "
+    "the oracle computes the all-pairs ground truth — so the count "
+    "match also re-proves blocked recall == exhaustive on this "
+    "corpus. The decode/PSNR/resize stages cannot be oracled and "
+    "stay pytest-pinned in "
+    "pipeline_multimodal. 100 TB shape: the dedup is bucket_pairs "
+    "blocking (never n^2); validation is a scan predicate",
 )
 def pipeline_multimodal_counts(spark, sf_dir):
     from omni_crawler_spark.operators import dedup as D
@@ -233,21 +234,19 @@ def pipeline_multimodal_counts(spark, sf_dir):
     # whose buckets blow past the cap as the corpus grows, silently
     # voiding the pigeonhole recall the oracle's all-pairs ground
     # truth checks. probe_parts=3: multi-index probing (3 parts of 20
-    # bits, radius-1 probes) replaces the 9-band pigeonhole self-join
-    # — same full-recall guarantee vs the oracle's all-pairs ground
-    # truth, but candidates drop from ~117M join rows (9 bands of
-    # ~6.7 bits over 50k random signatures at sf1.0) to ~1.6M.
-    # Eagerly materialize the pair list (it is collision-bounded
-    # small) — three of the four stage counts hang off it, and
-    # without the checkpoint each count job re-runs the banded join
-    # from scratch.
+    # bits, radius-1 probes) replaces 9-band pigeonhole blocking —
+    # same full-recall guarantee vs the oracle's all-pairs ground
+    # truth, but candidates drop from ~117M pair rows (9 bands of
+    # ~6.7 bits over 50k random signatures at sf1.0) to ~1.6M. The
+    # returned pair list is already local-checkpointed, so the three
+    # stage counts that hang off it do not recompute the blocking.
     pairs = D.hamming_near_dups(
         meta.select("image_id", F.col("phash").alias("sig")),
         "image_id",
         max_hamming=8,
         sig_bits=60,
         probe_parts=3,
-    ).localCheckpoint()
+    )
     drops = pairs.select(F.col("id_b").alias("image_id")).distinct()
     deduped = meta.join(F.broadcast(drops), "image_id", "left_anti")
     valid = deduped.filter(

@@ -174,8 +174,9 @@ def dedup_embedding_cosine(spark, sf_dir):
     "dedup_embedding_lsh",
     None,
     doc="embedding near-dup SCALE PATH — banded random-hyperplane LSH "
-    "bucketing with a max_bucket_size cap bounding the self-join "
-    "(operators/similarity.py::embedding_near_dups); found-pairs parity "
+    "bucketing with a max_bucket_size cap bounding pair expansion "
+    "(operators/similarity.py::embedding_near_dups via "
+    "operators/dedup.py::bucket_pairs); found-pairs parity "
     "vs the exact dedup_embedding_cosine asserted on planted duplicates "
     "in tests/test_similarity.py. Runs over the same planted-twin "
     "corpus as dedup_embedding_cosine so the recorded row count is "

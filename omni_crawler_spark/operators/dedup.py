@@ -7,13 +7,17 @@ standard near-dup family. Scale notes per operator:
 
 - exact: hash-groupBy → one shuffle on a 64-hex key; at 10^10 rows
   pre-bucket by hash prefix so AQE coalesces balanced partitions.
+- blocking: every near-dup generator (MinHash+LSH, passage chunks,
+  SimHash/pHash hamming, embedding LSH, the incremental index's
+  intra-batch pass) turns bucket-keyed rows into candidate pairs
+  through ONE primitive, ``bucket_pairs``: oversized buckets dropped
+  by a count pre-pass + broadcast anti-join, then ONE shuffle — a
+  groupBy per bucket with executor-side pair expansion; candidate
+  output is bounded by collision count, not n².
 - MinHash+LSH: vectorized numpy signatures (one matrix op per doc
-  inside an Arrow batch), band keys columnar, then ONE shuffle — a
-  groupBy per (band, bucket) with executor-side pair expansion gated
-  by ``max_bucket_size``; candidate output is bounded by collision
-  count, not n².
+  inside an Arrow batch), band keys columnar, then ``bucket_pairs``.
 - SimHash: vectorized pandas UDF (64 bit-planes don't express well
-  as columns); near-dup = banded hamming join.
+  as columns); near-dup = banded/probed hamming blocking.
 - n-gram Jaccard: exact verify step for LSH candidates (or blocked
   pairs), computed by an Arrow-batched set kernel — Spark interprets
   HOF lambdas, so array_intersect/array_union stay off the hot path.
@@ -43,6 +47,78 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
         .agg(F.min(id_col).alias(id_col))
     )
     return df.join(keep, id_col, "left_semi")
+
+
+# ---------------------------------------------------------------------------
+# Blocking: bucket-keyed rows → candidate id pairs (one shared primitive)
+# ---------------------------------------------------------------------------
+
+
+def drop_oversized(
+    df: DataFrame, key_cols: list[str], max_bucket_size: int | None
+) -> DataFrame:
+    """``df`` minus the rows of every ``key_cols`` bucket holding more
+    than ``max_bucket_size`` rows (``None`` keeps all). A cheap count
+    aggregation finds the oversized KEYS, a broadcast anti-join drops
+    them (the key set is tiny by construction), so no later aggregation
+    ever buffers a degenerate bucket's full member array. Such buckets
+    hold boilerplate that exact-hash dedup owns; their pairs are
+    sacrificed by design. ``df`` is read twice: persist it if costly."""
+    if max_bucket_size is None:
+        return df
+    oversized = (
+        df.groupBy(*key_cols)
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") > max_bucket_size)
+        .select(*key_cols)
+    )
+    return df.join(F.broadcast(oversized), key_cols, "left_anti")
+
+
+def bucket_pairs(
+    df: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    max_bucket_size: int | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(id_a, id_b, <c>_a..., <c>_b...)`` for rows sharing a
+    ``key_cols`` bucket — the blocking step of every near-dup
+    generator (a partitioned bucket set-join, HERO SIGMOD'24).
+
+    ``drop_oversized`` cap → ONE shuffle (groupBy key, sorted
+    ``(id, *carry)`` members) → executor-side posexplode+slice
+    expansion; output is bounded by collisions, and a self-join would
+    shuffle the keyed rows twice. Rows equal those of the ``a.id <
+    b.id`` self-join: strictly ``id_a < id_b`` (a repeated id never
+    pairs with itself) with multiset multiplicity kept; callers
+    ``distinct()`` for a set. ``carry`` columns ride along for the
+    verify step. Unlike an equi-join, a NULL key forms a bucket (which
+    the cap never matches): every current key is a non-null hash, or
+    a hamming band whose NULL distance the verify filter drops."""
+    members = F.array_sort(
+        F.collect_list(F.struct(F.col(id_col).alias("id"), *carry))
+    )
+    buckets = (
+        drop_oversized(df, key_cols, max_bucket_size)
+        .groupBy(*key_cols)
+        .agg(members.alias("_m"))
+        .filter(F.size("_m") >= 2)
+    )
+    return (
+        buckets.select(F.posexplode("_m").alias("_i", "_a"), "_m")
+        .select(
+            "_a",
+            F.explode(F.slice("_m", F.col("_i") + 2, F.size("_m"))).alias("_b"),
+        )
+        .filter(F.col("_a.id") < F.col("_b.id"))
+        .select(
+            F.col("_a.id").alias("id_a"),
+            F.col("_b.id").alias("id_b"),
+            *[F.col(f"_a.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"_b.{c}").alias(f"{c}_b") for c in carry],
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -138,14 +214,11 @@ def minhash_lsh_candidates(
     """Candidate near-dup pairs (id_a < id_b) via MinHash banding.
 
     Plan shape: scan → vectorized signature → explode(bands) →
-    groupBy(band, band_hash) → executor-side pair expansion. ONE
-    shuffle (the bucket groupBy); pair expansion happens after the
-    ``max_bucket_size`` gate, so a bucket bigger than the cap is
-    dropped before any quadratic work. Oversized buckets hold
-    boilerplate/near-universal content — the standard web-dedup move
-    is to skip them (exact-hash dedup or stop-shingle handling
-    catches those). Without the cap, a corpus where everything
-    resembles everything degenerates to n² pairs.
+    ``bucket_pairs`` over (band, band_hash). Pair expansion happens
+    after the ``max_bucket_size`` gate, so a bucket bigger than the
+    cap is dropped before any quadratic work. Without the cap, a
+    corpus where everything resembles everything degenerates to n²
+    pairs.
     """
     rows_per_band = num_perm // bands
     sig_udf = minhash_signature_udf(num_perm, shingle_k)
@@ -171,38 +244,8 @@ def minhash_lsh_candidates(
             lsh_band_keys(F.col("sig"), bands, rows_per_band)
         ).alias("bk"),
     ).select(id_col, "bk.band", "bk.band_hash")
-    # When the cap is set, oversized bucket KEYS are found first with
-    # a cheap count aggregation and removed by a broadcast anti-join
-    # BEFORE collect_list — so no agg buffer ever materializes a
-    # degenerate bucket's full id array (a boilerplate bucket at 10^10
-    # docs would otherwise build an unbounded array in one aggregation
-    # row). The oversized key set is tiny by construction (each key
-    # holds > max_bucket_size rows), hence the broadcast.
-    if max_bucket_size is not None:
-        oversized = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band", "band_hash")
-        )
-        banded = banded.join(
-            F.broadcast(oversized), ["band", "band_hash"], "left_anti"
-        )
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
     pairs = (
-        buckets.select(F.posexplode("ids").alias("_i", "id_a"), "ids")
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    "ids", F.col("_i") + 2, F.greatest(F.lit(0), F.size("ids"))
-                )
-            ).alias("id_b"),
-        )
+        bucket_pairs(banded, id_col, ["band", "band_hash"], max_bucket_size)
         .distinct()
         # eager: the (collision-bounded) pair set is materialized here
         # so the signature cache can be released before returning —
@@ -340,14 +383,13 @@ def passage_dup_pairs(
     dedup.
 
     Scale shape: the chunker is pure codegen (split/sequence/slice/
-    explode, zero Python); the self-join keys on ``xxhash64(passage)``
-    — 8 bytes shuffled per chunk instead of the ~`passage_w`-word
-    string — and hot passages are removed by the same count-pre-pass +
-    broadcast anti-join as every other blocking operator here: a
+    explode, zero Python); ``bucket_pairs`` keys on
+    ``xxhash64(passage)`` — 8 bytes shuffled per chunk instead of the
+    ~`passage_w`-word string — and its cap removes hot passages: a
     boilerplate passage repeated across 10^5 docs would otherwise
-    expand to 10^10 join rows before the groupBy. Dropped (oversized)
-    passages sacrifice their pairs by design — universal boilerplate
-    is not dedup signal. Hash collisions can in principle merge two
+    expand to 10^10 pair rows. Dropped (oversized) passages sacrifice
+    their pairs by design — universal boilerplate is not dedup signal.
+    Hash collisions can in principle merge two
     distinct passages into one key (~2^-64 per pair); the downstream
     consumer is a near-dup verify/CC stage, which tolerates that.
     """
@@ -378,39 +420,9 @@ def passage_dup_pairs(
             ).alias("ph"),
         )
     )
-    if max_bucket_size is not None:
-        oversized = (
-            p.groupBy("ph")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("ph")
-        )
-        p = p.join(F.broadcast(oversized), "ph", "left_anti")
-    # bucket expansion instead of a self-join: ONE shuffle of the
-    # chunk keys builds each passage's (cap-bounded) sorted id list,
-    # pairs expand executor-side via posexplode+slice — the self-join
-    # alternative shuffles the chunk set twice (once per side). The
-    # sorted-multiset expansion reproduces the join's multiplicity
-    # exactly (docs sharing k passages pair k times; a doc repeating
-    # a passage internally multiplies like the join would), so the
-    # DuckDB join-based oracle stays value-identical.
-    buckets = (
-        p.groupBy("ph")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    pairs = (
-        buckets.select(F.posexplode("ids").alias("_i", "id_a"), "ids")
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    "ids", F.col("_i") + 2, F.greatest(F.lit(0), F.size("ids"))
-                )
-            ).alias("id_b"),
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
+    # bucket_pairs keeps the self-join's multiplicity, so the DuckDB
+    # join-based oracle stays value-identical
+    pairs = bucket_pairs(p, id_col, ["ph"], max_bucket_size)
     return pairs.groupBy("id_a", "id_b").agg(
         F.count(F.lit(1)).alias("n_shared_passages")
     )
@@ -485,20 +497,19 @@ def hamming_near_dups(
     Blocking: split the signature into ``n_bands`` contiguous bands —
     a pair within hamming distance d can differ in at most d bands,
     so with ``n_bands >= d+1`` (pigeonhole) it must agree on at least
-    one band, and the self-join on (band_id, band_value) finds every
-    such pair without an n² comparison. ``n_bands`` defaults to
-    ``max_hamming + 1`` (the minimum that guarantees full recall);
-    callers may raise it to shrink per-band widths further.
+    one band, and ``bucket_pairs`` on (band_id, band_value) finds
+    every such pair without an n² comparison, carrying the signature
+    for the popcount verify. ``n_bands`` defaults to ``max_hamming +
+    1`` (the minimum that guarantees full recall); callers may raise
+    it to shrink per-band widths further.
 
     ``max_bucket_size`` drops degenerate buckets (e.g. the all-zeros
     SimHash of empty/near-empty text, constant boilerplate bands)
-    BEFORE the self-join — one hot (band, val) bucket otherwise
-    expands to n² join rows. Size gating is a cheap count groupBy +
-    join, mirroring minhash_lsh_candidates/embedding_near_dups.
-    NOTE: the cap SACRIFICES the pigeonhole recall guarantee for
-    pairs whose only agreeing band is a dropped bucket — a pair may
-    agree on other (non-dropped) bands and still be found, but that
-    is not guaranteed. Pass ``max_bucket_size=None`` for the
+    BEFORE pair expansion — one hot (band, val) bucket otherwise
+    expands to n² pair rows. NOTE: the cap SACRIFICES the pigeonhole
+    recall guarantee for pairs whose only agreeing band is a dropped
+    bucket — a pair may agree on other (non-dropped) bands and still
+    be found, but that is not guaranteed. Pass ``max_bucket_size=None`` for the
     unconditional-recall (and unbounded-blowup) behavior; production
     web dedup keeps the cap and routes boilerplate to exact-hash
     dedup instead.
@@ -517,11 +528,11 @@ def hamming_near_dups(
     ``r = max_hamming // probe_parts`` (pigeonhole: a pair within
     ``max_hamming`` has some part within r) and ``q = ceil(r/2)``
     (symmetric balls of radius q intersect whenever the part distance
-    is <= 2q >= r — pick the midpoint value). Same full-recall
-    guarantee as the banded path whenever no probe bucket exceeds the
-    cap, but the candidate count collapses: the d+1-band minimum
-    forces ~sig_bits/(d+1)-bit bands whose buckets grow linearly with
-    the corpus (n=50k random 60-bit sigs at d=8 → 9 bands of ~7 bits
+    is <= 2q >= r — pick the midpoint value); banding is the q = 0
+    case of the same plan. Same full-recall guarantee as the banded
+    path whenever no probe bucket exceeds the cap, but the candidate
+    count collapses: the d+1-band minimum forces ~sig_bits/(d+1)-bit
+    bands whose buckets grow linearly with the corpus (n=50k random 60-bit sigs at d=8 → 9 bands of ~7 bits
     → ~117M candidate rows), while 3 parts of 20 bits with radius-1
     probes cost 21 probe rows/part/doc and collide at
     ~|ball(2)|/2^20 ≈ 2e-4 per random pair (~1.6M rows, 73x less).
@@ -529,111 +540,38 @@ def hamming_near_dups(
     + probe_parts - 1); a larger max_hamming/parts ratio raises
     ValueError rather than silently losing recall.
     """
-    if probe_parts is not None:
-        return _hamming_near_dups_probed(
-            sig, id_col, max_hamming, probe_parts, max_bucket_size, sig_bits
-        )
     if n_bands is None:
         n_bands = max_hamming + 1
-    if not 1 <= n_bands <= sig_bits <= 64:
+    name, n_parts = (
+        ("n_bands", n_bands) if probe_parts is None
+        else ("probe_parts", probe_parts)
+    )
+    if not 1 <= n_parts <= sig_bits <= 64:
         raise ValueError(
-            f"need 1 <= n_bands <= sig_bits <= 64, got "
-            f"n_bands={n_bands}, sig_bits={sig_bits}"
+            f"need 1 <= {name} <= sig_bits <= 64, got "
+            f"{name}={n_parts}, sig_bits={sig_bits}"
         )
-    if n_bands < max_hamming + 1:
+    if probe_parts is None and n_parts < max_hamming + 1:
         raise ValueError(
-            f"n_bands={n_bands} cannot guarantee recall at "
+            f"n_bands={n_parts} cannot guarantee recall at "
             f"max_hamming={max_hamming}: pigeonhole needs >= "
             f"{max_hamming + 1} bands"
         )
-    # variable-width contiguous bands covering all sig_bits bits
-    bounds = [(b * sig_bits) // n_bands for b in range(n_bands + 1)]
-    band_structs = []
-    for b in range(n_bands):
-        lo, width = bounds[b], bounds[b + 1] - bounds[b]
-        mask = (1 << width) - 1
-        band_structs.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("sig"), lo)
-                .bitwiseAND(F.lit(mask))
-                .alias("val"),
-            )
-        )
-    bands = sig.select(
-        id_col,
-        "sig",
-        F.explode(F.array(*band_structs)).alias("bk"),
-    ).select(id_col, "sig", "bk.band", "bk.val")
-    if max_bucket_size is not None:
-        sizes = bands.groupBy("band", "val").agg(F.count("*").alias("_n"))
-        bands = bands.join(
-            sizes.filter(F.col("_n") <= max_bucket_size), ["band", "val"]
-        ).drop("_n")
-    a, b = bands.alias("a"), bands.alias("b")
-    # hamming (a pure function of the pair) is filtered BEFORE the
-    # distinct: the popcount is codegen'd and nearly free per join
-    # row, while distinct is a full shuffle of the join output — on
-    # random signatures almost every candidate fails the threshold,
-    # so filtering first shrinks that shuffle from the collision
-    # count to the true-pair count. Same rows out (the filter
-    # commutes with distinct because hamming is determined by the
-    # pair).
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64_cols(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return pairs
-
-
-def _hamming_near_dups_probed(
-    sig: DataFrame,
-    id_col: str,
-    max_hamming: int,
-    probe_parts: int,
-    max_bucket_size: int | None,
-    sig_bits: int,
-) -> DataFrame:
-    """Multi-index-probing body of ``hamming_near_dups`` (see its
-    docstring): wide parts + radius-q probe balls instead of d+1
-    narrow exact-match bands. One shuffle (the bucket groupBy), pair
-    expansion executor-side after the cap gate — the same shape as
-    minhash_lsh_candidates, with the full signature carried through
-    the 8-byte bucket rows so the exact popcount verify needs no
-    extra join."""
-    if not 1 <= probe_parts <= sig_bits <= 64:
-        raise ValueError(
-            f"need 1 <= probe_parts <= sig_bits <= 64, got "
-            f"probe_parts={probe_parts}, sig_bits={sig_bits}"
-        )
-    r = max_hamming // probe_parts
+    r = max_hamming // n_parts  # 0 for bands: pigeonhole holds
     q = (r + 1) // 2
     if q > 1:
         raise ValueError(
             f"probe radius {q} > 1 not implemented: raise probe_parts "
             f"(need max_hamming // probe_parts <= 2, got "
-            f"{max_hamming} // {probe_parts} = {r})"
+            f"{max_hamming} // {n_parts} = {r})"
         )
-    bounds = [(b * sig_bits) // probe_parts for b in range(probe_parts + 1)]
-    # two-level explode: one struct per PART carrying its extracted
-    # value and a literal array of XOR masks (ball of radius q),
-    # instead of one struct per PROBE each repeating the shift/mask
-    # extraction — probe_parts*(width+1) copies of that subexpression
-    # made the generated code an order of magnitude larger for the
-    # same rows out.
+    # contiguous parts over all sig_bits bits; a band is a part probed
+    # at radius 0 (XOR masks [0]). One struct per PART carrying its
+    # masks, not one per PROBE: repeating the shift/mask extraction per
+    # probe made the generated code an order of magnitude larger.
+    bounds = [(b * sig_bits) // n_parts for b in range(n_parts + 1)]
     part_structs = []
-    for b in range(probe_parts):
+    for b in range(n_parts):
         lo, width = bounds[b], bounds[b + 1] - bounds[b]
         mask = (1 << width) - 1
         xor_masks = [0] + ([1 << i for i in range(width)] if q == 1 else [])
@@ -646,14 +584,11 @@ def _hamming_near_dups_probed(
                 F.array(*[F.lit(m) for m in xor_masks]).alias("masks"),
             )
         )
-    # hash-repartition before the probe explode: the upstream is often
-    # a single-row-group parquet scan (one task), and the explode fans
-    # each row out ~probe_parts*(width+1)x — without the exchange both
-    # the cap pre-pass and the bucket aggregation would rebuild the
-    # whole probe stream serially. The persist shares the exploded
-    # probes between the two consumers instead of computing them twice.
+    # repartition: the upstream is often a one-task parquet scan and
+    # the explode fans each row out up to n_parts*(width+1)x; persist:
+    # the cap pre-pass and the bucket groupBy both read the probes.
     par = sig.sparkSession.sparkContext.defaultParallelism
-    bands = (
+    probes = (
         sig.repartition(par, F.col(id_col))
         .select(
             id_col,
@@ -675,53 +610,24 @@ def _hamming_near_dups_probed(
         )
         .persist()
     )
-    if max_bucket_size is not None:
-        oversized = (
-            bands.groupBy("band", "val")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band", "val")
-        )
-        bands = bands.join(
-            F.broadcast(oversized), ["band", "val"], "left_anti"
-        )
-    buckets = (
-        bands.groupBy("band", "val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "sig"))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
+    # filter before distinct: the codegen'd popcount is ~free per pair
+    # while distinct shuffles, and most candidates fail the threshold
     pairs = (
-        buckets.select(
-            F.posexplode("members").alias("_i", "a"), "members"
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("a.sig").alias("sig_a"),
-            F.explode(
-                F.slice(
-                    "members",
-                    F.col("_i") + 2,
-                    F.greatest(F.lit(0), F.size("members")),
-                )
-            ).alias("b"),
+        bucket_pairs(
+            probes, id_col, ["band", "val"], max_bucket_size, carry=("sig",)
         )
         .select(
             "id_a",
-            F.col("b.id").alias("id_b"),
-            hamming64_cols(F.col("sig_a"), F.col("b.sig")).alias("hamming"),
+            "id_b",
+            hamming64_cols(F.col("sig_a"), F.col("sig_b")).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-        # eager: the confirmed-pair set is threshold-bounded tiny;
-        # materializing it here lets the probe cache be released
-        # before returning (no cached blocks outlive the call).
+        # eager, so the probe cache is released before returning (no
+        # cached blocks outlive the call)
         .localCheckpoint()
     )
-    bands.unpersist()
+    probes.unpersist()
     return pairs
 
 

@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
 from omni_crawler_spark.lakehouse.table import SnapshotTable
 from omni_crawler_spark.operators.dedup import (
+    bucket_pairs,
+    drop_oversized,
     lsh_band_keys,
     minhash_signature_udf,
 )
@@ -261,29 +263,21 @@ class MinHashIndex:
         corpus-side probe is a BroadcastHashJoin (batch keys
         broadcast, index streamed — ZERO shuffle of index bytes,
         pinned by tests/test_dedup_incremental.py); intra-batch pairs
-        use the same capped banding as the one-shot operator. The
-        batch's banded rows are persisted once and reused by the
-        probe, the intra pass, and the final append (the signature
-        UDF runs exactly once per batch doc), then unpersisted before
-        returning — no cached blocks outlive the call (``dropped`` is
-        eagerly localCheckpointed first and is collision-bounded
-        small; ``kept`` depends only on ``batch`` + ``dropped``).
+        use the same capped ``bucket_pairs`` blocking as the one-shot
+        operators. The batch's banded rows are persisted once and
+        reused by the probe, the intra pass, and the final append (the
+        signature UDF runs exactly once per batch doc), then
+        unpersisted before returning — no cached blocks outlive the
+        call (``dropped`` is eagerly localCheckpointed first and is
+        collision-bounded small; ``kept`` depends only on ``batch`` +
+        ``dropped``).
         """
         b = self.banded(batch, id_col, text_col).persist()
 
         # drop degenerate (boilerplate) buckets within the batch
-        if self.max_bucket_size is not None:
-            oversized = (
-                b.groupBy("band", "band_hash")
-                .agg(F.count("*").alias("_n"))
-                .filter(F.col("_n") > self.max_bucket_size)
-                .select("band", "band_hash")
-            )
-            b_probe = b.join(
-                F.broadcast(oversized), ["band", "band_hash"], "left_anti"
-            )
-        else:
-            b_probe = b
+        b_probe = drop_oversized(
+            b, ["band", "band_hash"], self.max_bucket_size
+        )
 
         # cross probe: index streamed, batch broadcast (skipped when
         # the index is empty — first-ever batch bootstraps it)
@@ -296,22 +290,12 @@ class MinHashIndex:
         else:
             cross = self._cross_probe(spark, b_probe)
 
-        # intra-batch: keep the min doc_id of every near-dup pair
-        a = b_probe.select(
-            F.col("doc_id").alias("id_a"),
-            "band",
-            "band_hash",
-            F.col("sig").alias("sig_a"),
-        )
-        c = b_probe.select(
-            F.col("doc_id").alias("id_b"),
-            "band",
-            "band_hash",
-            F.col("sig").alias("sig_b"),
-        )
+        # intra-batch (b_probe is already capped): keep the min doc_id
+        # of every near-dup pair
         intra = (
-            a.join(c, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
+            bucket_pairs(
+                b_probe, "doc_id", ["band", "band_hash"], None, carry=("sig",)
+            )
             .select(
                 F.col("id_b").alias("new_id"),
                 F.col("id_a").alias("dup_of_intra"),

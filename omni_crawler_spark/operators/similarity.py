@@ -7,8 +7,8 @@ are bit-reproducible across engines/partitionings.
 
 Scale path: random-hyperplane LSH bucketing — at 10^10 vectors the
 broadcast-queries pattern still works (queries are small), but
-all-pairs near-dup needs bucketing so the self-join is bounded by
-collisions, not n².
+all-pairs near-dup needs bucketing so pair expansion is bounded by
+collisions, not n² (``operators/dedup.py::bucket_pairs``).
 """
 
 from __future__ import annotations
@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
+
+from omni_crawler_spark.operators.dedup import bucket_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -197,13 +199,13 @@ def embedding_near_dups(
     embedding dedup (the exact O(n²) twin is the oracle query only).
 
     Plan shape: one Arrow pass tags every vector with ``n_tables``
-    LSH bucket ids → posexplode → self-join on (table, bucket) →
-    distinct pairs → vectorized cosine verify. Two guarantees at
-    scale: the self-join is an equi-join bounded by bucket collisions
-    (never n²), and ``max_bucket_size`` skips degenerate buckets
-    (e.g. the all-zeros signature of boilerplate embeddings) whose
-    pairwise expansion is quadratic — mirroring the MinHash cap in
-    operators/dedup.py::minhash_lsh_candidates.
+    LSH bucket ids → posexplode → ``bucket_pairs`` on (table, bucket)
+    → distinct pairs → vectorized cosine verify. Two guarantees at
+    scale: pair expansion is bounded by bucket collisions (never n²),
+    and ``max_bucket_size`` skips degenerate buckets (e.g. the
+    all-zeros signature of boilerplate embeddings) whose pairwise
+    expansion is quadratic — the same blocking primitive as every
+    generator in operators/dedup.py.
 
     Banding is tuned to the verify threshold exactly like the r5
     MinHash (bands,rows) retune: for pairs at cosine s the per-plane
@@ -214,7 +216,7 @@ def embedding_near_dups(
     pairs for 20k vectors at sf1.0, to confirm 25 true dups).
     (16 planes, 48 tables) RAISES recall at s=0.9 to 0.985 and cuts
     the random admission rate 43x to 48·2^-16 ≈ 0.07% (~150k
-    candidates). Identical join shape; the tagging matmul grows to
+    candidates). Identical blocking shape; the tagging matmul grows to
     768 planes — still one Arrow batch op."""
     tagger = lsh_table_buckets_udf(dim, n_planes, n_tables)
     # hash-repartition before the Arrow tagger: a single-row-group
@@ -230,29 +232,12 @@ def embedding_near_dups(
         .select(
             id_col, F.posexplode("_bks").alias("table", "bucket")
         )
-        # both sides of the self-join read this; don't re-run the UDF
+        # the cap pre-pass and the bucket groupBy both read this;
+        # don't re-run the UDF
         .persist()
     )
-    if max_bucket_size is not None:
-        sizes = tagged.groupBy("table", "bucket").agg(
-            F.count("*").alias("_bucket_n")
-        )
-        tagged = tagged.join(
-            sizes.filter(F.col("_bucket_n") <= max_bucket_size),
-            ["table", "bucket"],
-        ).drop("_bucket_n")
-    a, b = tagged.alias("a"), tagged.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        bucket_pairs(tagged, id_col, ["table", "bucket"], max_bucket_size)
         .distinct()
         # eager: materialize the (collision-bounded) candidate pairs
         # so the tagged cache is released before returning — repeated

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.operators import dedup as D
+from omni_crawler_spark.operators import similarity as S
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the market economy "
@@ -269,3 +270,70 @@ def test_minhash_realistic_corpus_recovers_only_planted(spark):
     for r in rows:
         if (r.id_a, r.id_b) in planted:
             assert r.jaccard >= 0.8
+
+
+def _repeated_id_corpus(spark):
+    """Doc 1 sits on two identical rows, doc 3 copies doc 1 (one sig
+    bit and a tiny embedding shift apart), doc 2 is unrelated."""
+    import random
+
+    rng = random.Random(3)
+    vocab = [f"word{k}" for k in range(400)]
+    other = " ".join(rng.sample(vocab, 60))
+    e1 = [rng.uniform(-1, 1) for _ in range(64)]
+    e2 = [rng.uniform(-1, 1) for _ in range(64)]
+    e3 = [x + 0.001 for x in e1]
+    s1 = 0x0123456789ABCDEF
+    rows = [
+        (1, BASE, s1, e1),
+        (1, BASE, s1, e1),
+        (2, other, ~s1, e2),
+        (3, BASE, s1 ^ 1, e3),
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, sig long, emb array<double>"
+    )
+
+
+PAIR_GENERATORS = {
+    "minhash_lsh": lambda df: D.minhash_lsh_candidates(
+        df, "doc_id", "text", num_perm=32, bands=8
+    ),
+    "hamming_banded": lambda df: D.hamming_near_dups(
+        df.select("doc_id", "sig"), "doc_id", max_hamming=3
+    ),
+    "hamming_probed": lambda df: D.hamming_near_dups(
+        df.select("doc_id", "sig"), "doc_id", max_hamming=3, probe_parts=3
+    ),
+    "passage": lambda df: D.passage_dup_pairs(df),
+    "embedding": lambda df: S.embedding_near_dups(
+        df, threshold=0.9, id_col="doc_id", vec_col="emb"
+    ),
+}
+
+
+@pytest.mark.parametrize("gen", sorted(PAIR_GENERATORS))
+def test_generators_never_pair_an_id_with_itself(spark, gen):
+    """A repeated id must not pair with itself: every generator emits
+    strictly id_a < id_b, and still finds the planted 1~3 pair."""
+    got = [(r.id_a, r.id_b) for r in PAIR_GENERATORS[gen](
+        _repeated_id_corpus(spark)).collect()]
+    assert all(a < b for a, b in got), got
+    assert (1, 3) in got
+
+
+def test_minhash_dedup_keeps_repeated_id(spark):
+    kept = D.minhash_dedup(
+        _repeated_id_corpus(spark).select("doc_id", "text"),
+        "doc_id", "text", threshold=0.8, num_perm=32, bands=8,
+    )
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 1, 2]
+
+
+@pytest.mark.parametrize("gen", sorted(PAIR_GENERATORS))
+def test_generators_release_their_cache(spark, gen):
+    """No cached blocks outlive a generator call: repeated calls in one
+    session would otherwise accumulate them."""
+    spark.catalog.clearCache()
+    PAIR_GENERATORS[gen](_repeated_id_corpus(spark)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

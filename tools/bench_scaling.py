@@ -17,9 +17,12 @@ BASELINE.md.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _arg(name, default):
@@ -31,7 +34,7 @@ N_SMALL, N_LARGE = _arg("--small", 8), _arg("--large", 32)
 
 def run(cpus: int, urls: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/drain_once.py",
+        [sys.executable, os.path.join(ROOT, "tools", "drain_once.py"),
          "--cpus", str(cpus), "--urls", str(urls)],
         capture_output=True, text=True, timeout=1800, check=True,
     )
@@ -87,7 +90,7 @@ def main() -> None:
             f"{p['large_urls_per_sec']} | {p['efficiency']} |"
             for p in pairs
         )
-        with open("/root/repo/BASELINE.md", "a") as fh:
+        with open(os.path.join(ROOT, "BASELINE.md"), "a") as fh:
             fh.write(
                 "\n## Measured scaling evidence (this round — "
                 f"median of {repeats} interleaved pairs)\n\n"

@@ -11,6 +11,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -46,7 +47,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from omni_crawler_spark.analytics import REGISTRY
     from omni_crawler_spark.analytics.tables import TABLE_NAMES
     from omni_crawler_spark.session import get_spark

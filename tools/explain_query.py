@@ -11,7 +11,7 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from omni_crawler_spark.analytics import REGISTRY  # noqa: E402
 from omni_crawler_spark.session import get_spark  # noqa: E402

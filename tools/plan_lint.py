@@ -16,9 +16,10 @@ Exit 0 = all plans clean; prints one line per query.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FORBIDDEN = ("BatchEvalPython", "CartesianProduct")
 
