@@ -27,6 +27,7 @@ from omni_crawler_spark.analytics.tables import load_table
 from omni_crawler_spark.functions import enrich as E
 from omni_crawler_spark.functions import text as T
 from omni_crawler_spark.functions import urls as U
+from omni_crawler_spark.session import spread
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -360,11 +361,9 @@ def agg_pivot_daily_type(spark, sf_dir):
     doc="A8 — tokenize, stopword-filter, top-15 (content_enricher.py:164-178)",
 )
 def agg_word_topk(spark, sf_dir):
-    # hash-repartition off the single-task scan so the tokenize +
-    # explode + partial aggregation run in parallel; the post-shuffle
-    # word groupBy is tiny either way (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread so the tokenize + explode + partial aggregation run in
+    # parallel; the post-shuffle word groupBy is tiny either way
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     stop = F.array(*[F.lit(w) for w in E.STOPWORDS])
     return (
         d.select(F.explode(T.words(F.col("text"))).alias("word"))

@@ -45,6 +45,7 @@ from omni_crawler_spark.analytics.registry import (
     ordered_small,
     register,
 )
+from omni_crawler_spark.session import spread
 
 # ---------------------------------------------------------------------------
 # Boilerplate-line removal
@@ -110,11 +111,9 @@ _BP_AUG_SQL = f"""
     "at sandbox scale)",
 )
 def clean_boilerplate_lines(spark, sf_dir):
-    # hash-repartition off the single-task scan: the line explode and
-    # its two consumers (frequency count + mark join) otherwise build
-    # the whole line stream serially (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread: the line explode feeds two consumers (frequency count +
+    # mark join)
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     aug = d.select(
         "doc_id",
         F.concat(
@@ -230,11 +229,9 @@ _PII_AUG_SQL = """
     "ordered output — codegen'd end to end, no Python",
 )
 def clean_pii_redact(spark, sf_dir):
-    # hash-repartition off the single-task scan so the triple
-    # regexp_replace + three regexp_count passes run across the
-    # cluster's cores instead of serially (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread: the triple regexp_replace + three regexp_count passes
+    # are the CPU cost
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     aug = d.select(
         "doc_id",
         F.concat(
@@ -335,10 +332,9 @@ _PPL_TAIL = 4.911
     "an Arrow UDF instead of a broadcast join",
 )
 def corpus_perplexity_buckets(spark, sf_dir):
-    # hash-repartition off the single-task scan: the token explode
-    # feeds both the vocabulary count and the scoring join (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread: the token explode feeds both the vocabulary count and
+    # the scoring join
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     w = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     )

@@ -28,6 +28,7 @@ from omni_crawler_spark.analytics.registry import (
     ordered_small,
     register,
 )
+from omni_crawler_spark.session import spread
 
 # ---------------------------------------------------------------------------
 # Passage-level exact dedup
@@ -77,8 +78,8 @@ _PASSAGES_SQL = f"""
     "(doc_id+100000) keep the oracle non-vacuous on word-soup text. "
     "100 TB shape (operators/dedup.py::passage_dup_pairs): ONE "
     "shuffle, keyed on xxhash64(passage) (8 bytes shuffled per chunk "
-    "vs ~120), hot passages removed by a count-pre-pass + broadcast "
-    "anti-join BEFORE bucket_pairs expands pairs — a boilerplate "
+    "vs ~120), hot passages removed by a windowed count over that "
+    "same shuffle BEFORE bucket_pairs expands pairs — a boilerplate "
     "passage repeated across 10^5 docs can never expand to 10^10 "
     "pair rows (blowup bound pytest-pinned on a degenerate corpus). "
     "Output feeds the same connected-components keeper as minhash "
@@ -166,13 +167,11 @@ def _bm25_oracle() -> str:
     "identical before ROUND",
 )
 def search_bm25(spark, sf_dir):
-    # repartition off the single-task scan (the per-term HOF tf
-    # filters are the CPU cost), and materialize the narrow per-doc
-    # stats once — BOTH the corpus-stats aggregate and the scoring
-    # join consume per_doc, which would otherwise re-run the
-    # tokenize/tf pass per consumer (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread (the per-term HOF tf filters are the CPU cost), and
+    # materialize the narrow per-doc stats once — BOTH the
+    # corpus-stats aggregate and the scoring join consume per_doc,
+    # which would otherwise re-run the tokenize/tf pass per consumer
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     words = F.split("text", " ")
 
     def _tf(term):
@@ -510,12 +509,10 @@ _CHUNK_STRIDE = 48  # overlap 16 words between consecutive windows
     "ordered output — the chunker never moves corpus bytes",
 )
 def corpus_chunk_windows(spark, sf_dir):
-    # hash-repartition off the single-task scan: the window md5 pass
-    # is the CPU cost, and the trailing orderBy's sampling job
-    # executes the (map-only) lineage a second time — parallel twice
-    # beats serial twice (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread: the window md5 pass is the CPU cost, and the trailing
+    # orderBy's sampling job executes the (map-only) lineage a second
+    # time — parallel twice beats serial twice
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     w = d.select(
         "doc_id",
         F.split("text", " ").alias("words"),
@@ -605,14 +602,11 @@ _DECON_EVAL = (0, 8, 89)  # stand-in "benchmark" docs
 )
 def filter_decontaminate(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    # hash-repartition before the sliding-gram explode: the
-    # single-row-group documents scan is ONE task, and the 13-word
-    # gram construction (an interpreted HOF per start position) would
-    # otherwise run serially over the whole corpus (guide §2.5). The
-    # eval-doc subtree's doc_id filter still pushes through the
-    # exchange to the scan, so eval_grams stays a 3-doc read.
-    par = spark.sparkContext.defaultParallelism
-    w = d.repartition(par, "doc_id").select(
+    # spread before the sliding-gram explode: the 13-word gram
+    # construction (an interpreted HOF per start position) is the CPU
+    # cost. The eval-doc subtree's doc_id filter still pushes through
+    # the exchange to the scan, so eval_grams stays a 3-doc read.
+    w = d.transform(spread, "doc_id").select(
         "doc_id",
         F.split("text", " ").alias("words"),
         F.size(F.split("text", " ")).alias("n"),
@@ -724,10 +718,8 @@ def pipeline_pretrain_corpus(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    # same single-task-scan fix as filter_decontaminate: spread the
-    # 13-gram HOF construction before exploding it
-    par = spark.sparkContext.defaultParallelism
-    w = d.repartition(par, "doc_id").select(
+    # spread the 13-gram HOF construction before exploding it
+    w = d.transform(spread, "doc_id").select(
         "doc_id",
         F.split("text", " ").alias("words"),
         F.size(F.split("text", " ")).alias("n"),
@@ -929,14 +921,8 @@ def _gram_ctes(k: int) -> str:
 def filter_gopher_quality(spark, sf_dir):
     from omni_crawler_spark.operators.quality import gopher_signals_udf
 
-    # the sandbox corpus is ONE parquet row-group → Spark plans a
-    # single input partition and the kernel runs on one core; spread
-    # the rows first (one cheap shuffle of the scan). At 100 TB the
-    # scan has orders of magnitude more splits than cores and this
-    # repartition is a no-op to drop.
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread: the signals kernel is the CPU cost
+    d = _t(spark, sf_dir, "documents").transform(spread)
     sig = d.select(
         "doc_id", gopher_signals_udf()(F.col("text")).alias("g")
     ).select(

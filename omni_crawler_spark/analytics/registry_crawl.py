@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from omni_crawler_spark.analytics.registry import _t, ordered_small, register
 from omni_crawler_spark.functions import text as T
 from omni_crawler_spark.functions import urls as U
+from omni_crawler_spark.session import spread
 
 # messy raw URL built from doc_id: exercises uppercase scheme, www.
 # prefix, default port, trailing slash, unsorted query, fragment
@@ -360,10 +361,9 @@ _BLOCKLIST = ["host3.example.com", "host7.example.com",
     "CASE so the filter pushes into the scan stage of any consumer",
 )
 def filter_url_blocklist(spark, sf_dir):
-    # hash-repartition off the single-task scan: canonicalize_url and
-    # the host/path regex extracts are the CPU cost here (guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    f = synthetic_frontier(spark, sf_dir).repartition(par, "doc_id")
+    # spread: canonicalize_url and the host/path regex extracts are
+    # the CPU cost here
+    f = synthetic_frontier(spark, sf_dir).transform(spread, "doc_id")
     parts = f.select(
         "doc_id",
         F.when(

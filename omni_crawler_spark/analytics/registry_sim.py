@@ -18,6 +18,7 @@ from omni_crawler_spark.analytics.registry import (
 )
 from omni_crawler_spark.operators import dedup as D
 from omni_crawler_spark.operators import similarity as S
+from omni_crawler_spark.session import spread
 
 _SHINGLES_SQL = (
     "list_distinct(list_transform("
@@ -62,15 +63,12 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
     a, b = blocked.alias("a"), blocked.alias("b")
     jac = F.round(D.jaccard_pair_udf(5)(F.col("txt_a"), F.col("txt_b")), 4)
-    # the block join fans 50k docs out to ~660k pairs at sf1.0, but
-    # AQE coalesces the post-join stage by shuffle BYTES (a few MB of
-    # text) onto 1-2 tasks — the hash repartition spreads the
-    # CPU-bound Jaccard kernel over the cluster's cores (guide §2.5).
-    # Partitioning by the BLOCK key (not the pair ids) keeps each
-    # block's pairs in one Arrow batch run, so the kernel's per-batch
-    # shingle memo gets ~blocksize hits per doc instead of ~0
-    # (measured 3.6s vs 8.4s for the verify stage at sf1.0).
-    par = spark.sparkContext.defaultParallelism
+    # the block join fans 50k docs out to ~660k pairs at sf1.0; spread
+    # them for the CPU-bound Jaccard kernel. Partitioning by the BLOCK
+    # key (not the pair ids) keeps each block's pairs in one Arrow
+    # batch run, so the kernel's per-batch shingle memo gets
+    # ~blocksize hits per doc instead of ~0 (measured 3.6s vs 8.4s for
+    # the verify stage at sf1.0).
     return (
         a.join(
             b,
@@ -86,7 +84,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
             F.col("a.text").alias("txt_a"),
             F.col("b.text").alias("txt_b"),
         )
-        .repartition(par, "lang", "len_bucket")
+        .transform(spread, "lang", "len_bucket")
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= 0.5)
         .transform(lambda df: ordered_small(df, "id_a", "id_b"))
@@ -236,13 +234,9 @@ def dedup_minhash_lsh(spark, sf_dir):
     "collision rates; recovery pytest-pinned in tests/test_dedup.py",
 )
 def dedup_minhash_realistic(spark, sf_dir):
-    # repartition BEFORE the per-word salting transform: the salting
-    # is an interpreted HOF over every word of every doc, and the
-    # single-row-group documents scan is one task — without the
-    # exchange the whole corpus construction runs serially (guide
-    # §2.5 input skew).
-    par = spark.sparkContext.defaultParallelism
-    d = _t(spark, sf_dir, "documents").repartition(par, "doc_id")
+    # spread BEFORE the per-word salting: it touches every word of
+    # every doc
+    d = _t(spark, sf_dir, "documents").transform(spread, "doc_id")
     # per-word salting via one codegen'd regexp_replace instead of the
     # interpreted transform-lambda over every word: the corpus texts
     # are strictly single-space-separated non-empty tokens (checked at
@@ -690,12 +684,10 @@ def pipeline_training_data(spark, sf_dir):
     a = exact.select("doc_id", "lang", "n_chars", "text").alias("a")
     b = exact.select("doc_id", "lang", "n_chars", "text").alias("b")
     jac = F.round(D.jaccard_pair_udf(5)(F.col("txt_a"), F.col("txt_b")), 4)
-    # repartition between the block join and the Jaccard kernel: AQE
-    # coalesces the post-join stage by shuffle bytes onto 1-2 tasks
-    # while the kernel is CPU-bound; partitioning by the BLOCK key
-    # keeps each block's pairs together for the kernel's per-batch
-    # shingle memo (same fix as dedup_ngram_jaccard)
-    par = spark.sparkContext.defaultParallelism
+    # spread between the block join and the CPU-bound Jaccard kernel;
+    # partitioning by the BLOCK key keeps each block's pairs together
+    # for the kernel's per-batch shingle memo (as in
+    # dedup_ngram_jaccard)
     near_drops = (
         a.join(
             b,
@@ -711,7 +703,7 @@ def pipeline_training_data(spark, sf_dir):
             F.col("a.text").alias("txt_a"),
             F.col("b.text").alias("txt_b"),
         )
-        .repartition(par, "lang", "n_chars")
+        .transform(spread, "lang", "n_chars")
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= 0.5)
         .select(F.col("id_b").alias("doc_id"))

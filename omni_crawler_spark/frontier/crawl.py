@@ -37,6 +37,7 @@ from omni_crawler_spark.frontier import politeness as P
 from omni_crawler_spark.frontier.fetch import fetch_extract_validate
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.lakehouse import SnapshotTable
+from omni_crawler_spark.session import spread
 
 
 def _indexed_fp() -> "F.Column":
@@ -261,7 +262,6 @@ class CrawlEngine:
         t0 = time.time()
         op = f"cycle-{cycle_id:05d}"
         stats: dict[str, float | int] = {"cycle_id": cycle_id}
-        par = spark.sparkContext.defaultParallelism
         _t = [time.time()]
 
         def mark(name: str) -> None:
@@ -284,7 +284,7 @@ class CrawlEngine:
         )
         mark("plan")
         plan = self.plan.read(spark)
-        todo = plan.filter(F.col("scheduled")).repartition(par)
+        todo = plan.filter(F.col("scheduled")).transform(spread)
 
         # -- job 2: fetch + extract + validate ----------------------------
         articles = fetch_extract_validate(todo)

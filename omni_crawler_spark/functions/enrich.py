@@ -131,13 +131,3 @@ def confidence_score(content: Column, n_entities: Column, n_keywords: Column) ->
         .otherwise(0.2)
     )
     return F.round((f_content + f_entities + f_keywords) / 3, 2)
-
-
-def keyword_array(text: Column, min_len: int = 4) -> Column:
-    """Non-stopword words of length > min_len (feeds the top-k
-    keyword aggregation, src/processing/content_enricher.py:164-178)."""
-    stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    return F.filter(
-        words(text),
-        lambda w: (~F.array_contains(stop, w)) & (F.length(w) >= min_len),
-    )

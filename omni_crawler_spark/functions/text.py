@@ -57,17 +57,6 @@ def word_count(text: Column) -> Column:
     return F.size(words(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
-def read_time_minutes(text: Column) -> Column:
-    """max(1, round(words/200)) (src/processing/content_enricher.py:195-203)."""
-    return F.greatest(
-        F.lit(1), F.round(word_count(text) / F.lit(200.0)).cast("int")
-    )
-
-
 def excerpt(text: Column, max_len: int = 200) -> Column:
     """First ``max_len`` chars cut back to a word boundary + '...'
     (src/processing/content_enricher.py:78-96, 300-304)."""
@@ -98,18 +87,6 @@ def is_error_page(text: Column) -> Column:
     for pat in ERROR_PAGE_PATTERNS:
         cond = cond | lowered.contains(pat)
     return cond
-
-
-def sentence_stats_ok(text: Column) -> Column:
-    """Sentence-structure sanity (src/utils/content_cleaner.py:260-274):
-    >=2 sentences and average words/sentence in (3, 50)."""
-    sentences = F.filter(
-        F.split(text, r"(?<=[.!?])\s+"), lambda s: F.trim(s) != ""
-    )
-    n_sent = F.size(sentences)
-    # try_divide: ANSI mode would throw on n_sent == 0
-    avg_words = F.try_divide(word_count(text), n_sent)
-    return (n_sent >= 2) & (avg_words > 3) & (avg_words < 50)
 
 
 def extract_title(html: Column, domain: Column) -> Column:

@@ -105,12 +105,6 @@ def url_seen_md5(url: Column) -> Column:
     return F.md5(url.cast("binary"))
 
 
-def seen_bucket(hash64: Column, num_buckets: int) -> Column:
-    """Stable bucket id in [0, num_buckets) for partitioning the
-    seen-set and its bloom filters. ``pmod`` keeps negatives positive."""
-    return F.pmod(hash64, F.lit(num_buckets)).cast("int")
-
-
 def trap_signals(url: Column) -> Column:
     """Crawl-trap admission signals from the URL string alone, as a
     struct (path_depth, max_seg_count, n_params, has_calendar,

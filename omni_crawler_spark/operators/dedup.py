@@ -10,10 +10,10 @@ standard near-dup family. Scale notes per operator:
 - blocking: every near-dup generator (MinHash+LSH, passage chunks,
   SimHash/pHash hamming, embedding LSH, the incremental index's
   intra-batch pass) turns bucket-keyed rows into candidate pairs
-  through ONE primitive, ``bucket_pairs``: oversized buckets dropped
-  by a count pre-pass + broadcast anti-join, then ONE shuffle — a
-  groupBy per bucket with executor-side pair expansion; candidate
-  output is bounded by collision count, not n².
+  through ONE primitive, ``bucket_pairs``: ONE shuffle on the bucket
+  key, a windowed count that drops oversized buckets, then a groupBy
+  per bucket with executor-side pair expansion; candidate output is
+  bounded by collision count, not n².
 - MinHash+LSH: vectorized numpy signatures (one matrix op per doc
   inside an Arrow batch), band keys columnar, then ``bucket_pairs``.
 - SimHash: vectorized pandas UDF (64 bit-planes don't express well
@@ -26,10 +26,12 @@ standard near-dup family. Scale notes per operator:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
+
+from omni_crawler_spark.session import spread
 
 
 # ---------------------------------------------------------------------------
@@ -58,21 +60,22 @@ def drop_oversized(
     df: DataFrame, key_cols: list[str], max_bucket_size: int | None
 ) -> DataFrame:
     """``df`` minus the rows of every ``key_cols`` bucket holding more
-    than ``max_bucket_size`` rows (``None`` keeps all). A cheap count
-    aggregation finds the oversized KEYS, a broadcast anti-join drops
-    them (the key set is tiny by construction), so no later aggregation
-    ever buffers a degenerate bucket's full member array. Such buckets
-    hold boilerplate that exact-hash dedup owns; their pairs are
-    sacrificed by design. ``df`` is read twice: persist it if costly."""
+    than ``max_bucket_size`` rows (``None`` keeps all). One pass: a
+    ``count`` window over the bucket key, then a filter, so ``df`` is
+    read once. The window's hash partitioning on ``key_cols`` is the
+    one a following ``groupBy(key_cols)`` needs, and its buffer spills
+    to disk, so no aggregation ever holds a degenerate bucket's full
+    member array. Such buckets hold boilerplate that exact-hash dedup
+    owns; their pairs are sacrificed by design. A NULL key is a bucket
+    like any other."""
     if max_bucket_size is None:
         return df
-    oversized = (
-        df.groupBy(*key_cols)
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket_size)
-        .select(*key_cols)
+    n = F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
+    return (
+        df.withColumn("_bucket_n", n)
+        .filter(F.col("_bucket_n") <= max_bucket_size)
+        .drop("_bucket_n")
     )
-    return df.join(F.broadcast(oversized), key_cols, "left_anti")
 
 
 def bucket_pairs(
@@ -86,16 +89,16 @@ def bucket_pairs(
     ``key_cols`` bucket — the blocking step of every near-dup
     generator (a partitioned bucket set-join, HERO SIGMOD'24).
 
-    ``drop_oversized`` cap → ONE shuffle (groupBy key, sorted
-    ``(id, *carry)`` members) → executor-side posexplode+slice
-    expansion; output is bounded by collisions, and a self-join would
-    shuffle the keyed rows twice. Rows equal those of the ``a.id <
-    b.id`` self-join: strictly ``id_a < id_b`` (a repeated id never
-    pairs with itself) with multiset multiplicity kept; callers
-    ``distinct()`` for a set. ``carry`` columns ride along for the
-    verify step. Unlike an equi-join, a NULL key forms a bucket (which
-    the cap never matches): every current key is a non-null hash, or
-    a hamming band whose NULL distance the verify filter drops."""
+    ONE shuffle on the key feeds both the ``drop_oversized`` cap and
+    the groupBy (sorted ``(id, *carry)`` members) → executor-side
+    posexplode+slice expansion; output is bounded by collisions, and a
+    self-join would shuffle the keyed rows twice. Rows equal those of
+    the ``a.id < b.id`` self-join: strictly ``id_a < id_b`` (a
+    repeated id never pairs with itself) with multiset multiplicity
+    kept; callers ``distinct()`` for a set. ``carry`` columns ride along for the
+    verify step. Unlike an equi-join, a NULL key forms a bucket (capped
+    like any other): every current key is a non-null hash, or a
+    hamming band whose NULL distance the verify filter drops."""
     members = F.array_sort(
         F.collect_list(F.struct(F.col(id_col).alias("id"), *carry))
     )
@@ -136,20 +139,6 @@ def char_shingles(text: Column, k: int = 5) -> Column:
             F.sequence(F.lit(1), F.greatest(F.lit(1), n - (k - 1))),
             lambda i: t.substr(i, F.lit(k)),
         )
-    )
-
-
-def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
-    """Array of ``num_perm`` min-hashes via nested higher-order
-    functions — fully declarative but INTERPRETED (Spark never
-    codegens HOF lambdas), measured ~150 s for 5k docs × 32 perms.
-    Kept as the reference implementation; the hot path uses
-    ``minhash_signature_udf`` (vectorized numpy, ~100x faster)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, i))
-        ),
     )
 
 
@@ -222,21 +211,12 @@ def minhash_lsh_candidates(
     """
     rows_per_band = num_perm // bands
     sig_udf = minhash_signature_udf(num_perm, shingle_k)
-    # signatures are the expensive stage (one numpy matmul per doc) —
-    # persist them so the size pre-pass and the bucket aggregation
-    # both read the cached (id, sig) rows instead of re-running the
-    # UDF; the cache is num_perm longs/doc, ~1/50 of the text bytes.
-    # The hash repartition unbinds the CPU-bound Arrow kernel from the
-    # scan's task count (a single-row-group parquet file scans as ONE
-    # task, serializing the whole signature pass on one core; guide
-    # §2.5 input skew) — partition count follows the cluster's core
-    # count, not a constant.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # spread: the signature pass (one numpy matmul per doc) is the
+    # CPU cost
     sig = (
         df.select(F.col(id_col), F.col(text_col))
-        .repartition(par, F.col(id_col))
+        .transform(spread, F.col(id_col))
         .select(F.col(id_col), sig_udf(F.col(text_col)).alias("sig"))
-        .persist()
     )
     banded = sig.select(
         id_col,
@@ -244,17 +224,13 @@ def minhash_lsh_candidates(
             lsh_band_keys(F.col("sig"), bands, rows_per_band)
         ).alias("bk"),
     ).select(id_col, "bk.band", "bk.band_hash")
-    pairs = (
+    return (
         bucket_pairs(banded, id_col, ["band", "band_hash"], max_bucket_size)
         .distinct()
-        # eager: the (collision-bounded) pair set is materialized here
-        # so the signature cache can be released before returning —
-        # no cached blocks outlive the call (repeated bench/pipeline
-        # invocations would otherwise accumulate them).
+        # eager: the (collision-bounded) pair set is materialized here,
+        # so the plans downstream start from it, not the signature pass
         .localCheckpoint()
     )
-    sig.unpersist()
-    return pairs
 
 
 def jaccard_pair_udf(shingle_k: int = 5):
@@ -335,14 +311,13 @@ def jaccard_verify(
     each left doc's pairs into one Arrow-batch run so the kernel's
     per-batch shingle memo hits on the left text; pair rows are
     small, so the extra exchange is noise next to the kernel."""
-    par = df.sparkSession.sparkContext.defaultParallelism
     txt = df.select(F.col(id_col), F.col(text_col).alias("_txt"))
     j = (
         candidates.join(
             txt.withColumnsRenamed({id_col: "id_a", "_txt": "txt_a"}), "id_a"
         )
         .join(txt.withColumnsRenamed({id_col: "id_b", "_txt": "txt_b"}), "id_b")
-        .repartition(par, "id_a")
+        .transform(spread, "id_a")
         .sortWithinPartitions("id_a")
         .withColumn(
             "jaccard",
@@ -393,10 +368,8 @@ def passage_dup_pairs(
     distinct passages into one key (~2^-64 per pair); the downstream
     consumer is a near-dup verify/CC stage, which tolerates that.
     """
-    # hash-repartition off the (often single-task) scan so the
-    # chunk-hash explode parallelizes (guide §2.5)
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    w = docs.repartition(par, F.col(id_col)).select(
+    # spread so the chunk-hash explode parallelizes
+    w = docs.transform(spread, F.col(id_col)).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("words")
     )
     p = (
@@ -584,12 +557,9 @@ def hamming_near_dups(
                 F.array(*[F.lit(m) for m in xor_masks]).alias("masks"),
             )
         )
-    # repartition: the upstream is often a one-task parquet scan and
-    # the explode fans each row out up to n_parts*(width+1)x; persist:
-    # the cap pre-pass and the bucket groupBy both read the probes.
-    par = sig.sparkSession.sparkContext.defaultParallelism
+    # spread: the explode fans each row out up to n_parts*(width+1)x
     probes = (
-        sig.repartition(par, F.col(id_col))
+        sig.transform(spread, F.col(id_col))
         .select(
             id_col,
             "sig",
@@ -608,11 +578,10 @@ def hamming_near_dups(
             "band",
             F.col("base").bitwiseXOR(F.col("m")).alias("val"),
         )
-        .persist()
     )
     # filter before distinct: the codegen'd popcount is ~free per pair
     # while distinct shuffles, and most candidates fail the threshold
-    pairs = (
+    return (
         bucket_pairs(
             probes, id_col, ["band", "val"], max_bucket_size, carry=("sig",)
         )
@@ -623,12 +592,10 @@ def hamming_near_dups(
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-        # eager, so the probe cache is released before returning (no
-        # cached blocks outlive the call)
+        # eager: the verified pair set is materialized here, so the
+        # plans downstream start from it, not the probe explode
         .localCheckpoint()
     )
-    probes.unpersist()
-    return pairs
 
 
 def simhash_candidates(

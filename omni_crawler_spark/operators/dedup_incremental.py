@@ -52,6 +52,7 @@ from omni_crawler_spark.operators.dedup import (
     lsh_band_keys,
     minhash_signature_udf,
 )
+from omni_crawler_spark.session import spread
 
 
 class MinHashIndex:
@@ -106,14 +107,10 @@ class MinHashIndex:
         """(doc_id, band, band_hash, sig) rows for ``df`` — one
         vectorized signature pass, then a codegen'd band explode."""
         sig_udf = minhash_signature_udf(self.num_perm, self.shingle_k)
-        # hash-repartition off the (often single-task) scan so the
-        # CPU-bound Arrow signature kernel spreads across the
-        # cluster's cores (guide §2.5; same fix as
-        # operators/dedup.py::minhash_lsh_candidates)
-        par = df.sparkSession.sparkContext.defaultParallelism
+        # spread: the Arrow signature kernel is the CPU cost
         sig = (
             df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-            .repartition(par, "doc_id")
+            .transform(spread, "doc_id")
             .select(
                 "doc_id",
                 sig_udf(F.col(text_col)).alias("sig"),

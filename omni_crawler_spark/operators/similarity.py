@@ -21,6 +21,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from omni_crawler_spark.operators.dedup import bucket_pairs
+from omni_crawler_spark.session import spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -82,11 +83,9 @@ def cosine_topk(
     q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")
     )
-    # hash-repartition the corpus side off its (often single-task)
-    # scan: the interpreted HOF-fold cosine below is the CPU cost and
-    # must spread across cores (guide §2.5)
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    c = embeddings.repartition(par, F.col(id_col)).select(
+    # spread the corpus side: the interpreted HOF-fold cosine below is
+    # the CPU cost
+    c = embeddings.transform(spread, F.col(id_col)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ne")
     )
     scored = (
@@ -219,46 +218,37 @@ def embedding_near_dups(
     candidates). Identical blocking shape; the tagging matmul grows to
     768 planes — still one Arrow batch op."""
     tagger = lsh_table_buckets_udf(dim, n_planes, n_tables)
-    # hash-repartition before the Arrow tagger: a single-row-group
-    # parquet scan is ONE task and would serialize the matmul pass
-    # (guide §2.5); partition count follows the cluster core count.
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
+    # spread before the Arrow tagger: its matmul pass is the CPU cost
     tagged = (
         embeddings.select(F.col(id_col), F.col(vec_col))
-        .repartition(par, F.col(id_col))
+        .transform(spread, F.col(id_col))
         .select(
             F.col(id_col), tagger(F.col(vec_col)).alias("_bks")
         )
         .select(
             id_col, F.posexplode("_bks").alias("table", "bucket")
         )
-        # the cap pre-pass and the bucket groupBy both read this;
-        # don't re-run the UDF
-        .persist()
     )
     pairs = (
         bucket_pairs(tagged, id_col, ["table", "bucket"], max_bucket_size)
         .distinct()
-        # eager: materialize the (collision-bounded) candidate pairs
-        # so the tagged cache is released before returning — repeated
-        # calls in one session (pipeline + lsh query in a bench run)
-        # must not accumulate cached blocks for the session lifetime.
+        # eager: the (collision-bounded) candidate pairs are
+        # materialized here, so the vector-attach joins below start
+        # from them, not the tagging pass
         .localCheckpoint()
     )
-    tagged.unpersist()
     va = embeddings.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
     vb = embeddings.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
     )
-    # repartition between the vector-attach joins and the cosine
-    # kernel: AQE coalesces the post-join stage by shuffle bytes and
-    # would run the CPU-bound verify on a couple of tasks.
+    # spread between the vector-attach joins and the cosine kernel,
+    # the CPU-bound verify
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .repartition(par, "id_a", "id_b")
+        .transform(spread, "id_a", "id_b")
         .withColumn(
             "sim", F.round(cosine_pair_udf()(F.col("va"), F.col("vb")), 4)
         )

@@ -9,14 +9,15 @@ One place to encode the configuration we would ship to a real
 - shuffle partitions sized to the local core count (on a cluster this
   would be ~2-3x total cores; AQE coalesces down after),
 - small broadcast threshold kept at default so dimension tables
-  (region/nation/hosts/rules) broadcast automatically.
+  (region/nation/hosts/rules) broadcast automatically,
+- one partition count for CPU-bound stages: ``spread``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -76,7 +77,12 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """``df`` repartitioned to the cluster's core count, hashed on
+    ``cols`` (round-robin when none): the engine's one parallelism
+    policy, applied with ``df.transform(spread, ...)`` before CPU-bound
+    work. Two reasons: a single-row-group parquet scan is ONE task and
+    would run the whole downstream stage on one core, and the explicit
+    partition count keeps AQE from coalescing a CPU-bound stage by its
+    (small) shuffle BYTES onto a couple of tasks."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)

@@ -153,6 +153,36 @@ def test_hamming_degenerate_bucket_capped(spark):
     assert got == {(2000, 2001)}
 
 
+def _bucket_frame(spark, rows):
+    return spark.createDataFrame(rows, "id long, k1 long, k2 long")
+
+
+@pytest.mark.parametrize("cap,n_pairs", [(2, 5), (3, 35)])
+def test_bucket_pairs_is_one_shuffle(spark, cap, n_pairs):
+    """Keys (i % 3, i % 5) over 40 rows: ten buckets of 3 and five of
+    2. A bucket of exactly ``cap`` rows keeps all its pairs and one of
+    ``cap + 1`` yields none (cap 2: 5 pairs; cap 3: 10·3 + 5 pairs).
+    The cap and the bucket groupBy share ONE hash exchange: no
+    broadcast pre-pass, no cached input."""
+    df = _bucket_frame(spark, [(i, i % 3, i % 5) for i in range(40)])
+    pairs = D.bucket_pairs(df, "id", ["k1", "k2"], cap)
+    assert len(pairs.collect()) == n_pairs
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastExchange" not in plan
+    assert "InMemoryRelation" not in plan
+
+
+@pytest.mark.parametrize("n_null,n_pairs", [(4, 6 + 1), (5, 1)])
+def test_bucket_pairs_caps_null_key(spark, n_null, n_pairs):
+    """A NULL key forms a bucket, capped like any other: at cap 4 a
+    4-row NULL bucket keeps its 6 pairs, a 5-row one yields none."""
+    rows = [(i, None, 1) for i in range(n_null)] + [(10, 2, 2), (11, 2, 2)]
+    got = D.bucket_pairs(_bucket_frame(spark, rows), "id", ["k1", "k2"], 4)
+    assert got.count() == n_pairs
+
+
 def test_jaccard_kernel_null_semantics(spark):
     """NULL text on either side → NULL jaccard (dropped by the
     threshold filter), matching the replaced column-expression plan —
@@ -172,7 +202,7 @@ def test_jaccard_kernel_null_semantics(spark):
 
 def test_minhash_degenerate_corpus_bounded(spark):
     """1k identical texts collapse into one bucket per band; the
-    count-based pre-filter removes the oversized bucket keys before
+    windowed bucket count drops the oversized buckets before
     collect_list, so no aggregation buffer holds the full id array and
     the expansion yields nothing."""
     rows = [(i, BASE) for i in range(1000)]

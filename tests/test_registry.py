@@ -65,6 +65,30 @@ def test_driver_window_covers_unchecked_queries():
     assert names[: len(expected)] == expected
 
 
+def test_one_parallelism_policy_and_single_pass_cap():
+    """Partition counts come from ``session.spread`` alone, and the
+    bucket cap reads its input once (no join, no broadcast)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "omni_crawler_spark"
+    users = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if "defaultParallelism" in f.read_text()
+    )
+    assert users == ["session.py"]
+    src = (pkg / "operators" / "dedup.py").read_text()
+    fn = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "drop_oversized"
+    )
+    calls = {
+        n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)
+    }
+    assert not calls & {"join", "broadcast", "persist", "cache"}, calls
+
+
 def test_budget_allocate_waterfill_invariants(spark, sf_dir):
     """Exact integer max-min fairness: the quotas must exhaust the
     budget, never exceed pending, and differ by at most 1 across
