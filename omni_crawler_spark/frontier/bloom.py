@@ -10,9 +10,10 @@ Design here (SURVEY §4.2):
   ``pmod(hash, num_buckets)`` — the same bucketing partitions the
   bloom side tables AND the candidate stream, so probe work is
   executor-local after one hash-partition exchange.
-- per bucket, one bitarray blob sized from the bucket's key count
-  (``m = -n·ln(p)/ln2²``, ``k = m/n·ln2``), built in one
-  ``applyInPandas`` pass (numpy bit ops, no per-row Python).
+- per bucket, one bitarray blob of a FIXED geometry sized from the
+  per-bucket capacity n (``m = -n·ln(p)/ln2²``, ``k = m/n·ln2``), so
+  each cycle's new keys OR into the persisted blobs (``merge_bloom``,
+  one ``applyInPandas`` pass, numpy bit ops, no per-row Python).
 - probe positions derive from the 64-bit key itself by double
   hashing ``pos_i = (h1 + i·h2) mod m`` — no string rehashing, and
   identical arithmetic in build and probe.
@@ -62,14 +63,6 @@ def bucket_of(hash_col, num_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(hash_col, F.lit(num_buckets)).cast("int")
 
 
-def _params(n: int, fpp: float) -> tuple[int, int]:
-    n = max(n, 1)
-    m = int(np.ceil(-n * np.log(fpp) / (np.log(2) ** 2)))
-    m = max(64, (m + 7) // 8 * 8)  # byte-align
-    k = max(1, int(round(m / n * np.log(2))))
-    return m, min(k, 16)
-
-
 def _positions(keys: np.ndarray, m: int, k: int) -> np.ndarray:
     """(len(keys), k) probe positions via double hashing of the
     64-bit key — pure uint64 arithmetic, vectorized."""
@@ -83,7 +76,11 @@ def _positions(keys: np.ndarray, m: int, k: int) -> np.ndarray:
 def fixed_params(capacity_per_bucket: int, fpp: float = DEFAULT_FPP) -> tuple[int, int]:
     """Fixed (m, k) geometry sized for a capacity — every bucket and
     every cycle shares it, which is what makes blobs OR-mergeable."""
-    return _params(capacity_per_bucket, fpp)
+    n = max(capacity_per_bucket, 1)
+    m = int(np.ceil(-n * np.log(fpp) / (np.log(2) ** 2)))
+    m = max(64, (m + 7) // 8 * 8)  # byte-align
+    k = max(1, int(round(m / n * np.log(2))))
+    return m, min(k, 16)
 
 
 def merge_bloom(
@@ -142,39 +139,6 @@ def merge_bloom(
         prev.unionByName(fresh)
         .groupBy("bucket")
         .applyInPandas(or_blobs, BLOOM_SCHEMA)
-    )
-
-
-def build_bloom(
-    seen: DataFrame,
-    hash_col: str = "url_hash",
-    num_buckets: int = DEFAULT_BUCKETS,
-    fpp: float = DEFAULT_FPP,
-) -> DataFrame:
-    """seen(url_hash) → one bloom blob row per bucket."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf[hash_col].to_numpy()
-        m, k = _params(len(keys), fpp)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        pos = _positions(keys, m, k).ravel()
-        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            [
-                {
-                    "bucket": int(pdf["bucket"].iloc[0]),
-                    "n_keys": len(keys),
-                    "m_bits": m,
-                    "k_hashes": k,
-                    "bitmap": bits.tobytes(),
-                }
-            ]
-        )
-
-    return (
-        seen.withColumn("bucket", bucket_of(F.col(hash_col), num_buckets))
-        .groupBy("bucket")
-        .applyInPandas(build, BLOOM_SCHEMA)
     )
 
 

@@ -16,6 +16,17 @@ latest manifest (or an explicit ``version``) and read exactly those
 files — a partially-written data dir that never got a manifest is
 invisible, which is what makes kill-anywhere resume safe.
 
+Pinned commits (the Iceberg optimistic-concurrency model): every
+writer goes through ``_write``, which computes its rows on top of the
+latest snapshot ``base`` and commits pinned to version ``base + 1``.
+If any other writer published after ``base``, the pinned commit fails
+with CommitConflict and the writer starts over from the new latest
+snapshot: ``upsert`` re-tags ``_v``, ``rewrite``/``compact`` re-read
+the table, so a racing writer's rows are never dropped. Parquet is
+rewritten only when the rows changed — an ``append``/``overwrite``
+retry is a driver-side JSON rewrite, never a Spark job. A retry whose
+op_id the winner already committed is a no-op.
+
 Schema evolution: each manifest records the parquet schema of every
 data dir (``dir_schemas``). A commit may add NEW columns relative to
 earlier snapshots (the reference's ad-hoc ``ALTER TABLE ADD COLUMN``
@@ -39,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -244,16 +256,12 @@ class SnapshotTable:
             os.unlink(tmp)
         return version
 
-    def _check_evolution(self, df: DataFrame) -> None:
-        """New snapshots may ADD columns; they may not re-type an
-        existing one (rename = old column goes NULL-backfilled + new
-        column appears, which is Iceberg's add-column semantics too —
-        a true rename needs a rewrite)."""
-        if self.current_version() == 0:
-            return
-        prior = self._read_manifest(self.current_version()).get("dir_schemas")
-        if not prior:
-            return
+    def _check_evolution(self, df: DataFrame, prior: dict[str, str]) -> None:
+        """New snapshots may ADD columns to ``prior`` (the base
+        snapshot's ``dir_schemas``); they may not re-type an existing
+        one (rename = old column goes NULL-backfilled + new column
+        appears, which is Iceberg's add-column semantics too — a true
+        rename needs a rewrite)."""
         from pyspark.sql.types import StructType
 
         existing: dict[str, str] = {}
@@ -270,116 +278,67 @@ class SnapshotTable:
                     "full rewrite"
                 )
 
-    def append(self, df: DataFrame, op_id: str | None = None) -> int:
-        """Append df as a new snapshot. No-op if op_id already
-        committed. The new snapshot may carry added columns
-        (schema evolution); see the module docstring."""
-        if op_id is not None and op_id in self.committed_op_ids():
-            return self.current_version()
-        self._check_evolution(df)
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(new_dir)
-        # Optimistic concurrency (the Iceberg commit model): on a
-        # version conflict, re-read the winner's state and retry the
-        # manifest write — the data files are already on disk, so a
-        # retry is a driver-side JSON rewrite, never a Spark job. If
-        # the winner turns out to have committed OUR op_id (two
-        # sessions racing the same idempotent bootstrap), the replay
-        # no-op check resolves the race with no duplicate data.
+    def _write(
+        self,
+        op: str,
+        op_id: str | None,
+        rows_at: Callable[[int], DataFrame],
+        keep_prior: bool,
+    ) -> int:
+        """The one write path (the pinned-commit rule is in the module
+        docstring). ``rows_at(base)`` gives the rows to commit on top
+        of snapshot ``base``; ``keep_prior`` keeps ``base``'s data dirs
+        (append, upsert) instead of replacing them."""
+        rows = new_dir = None
         for _ in range(100):
             if op_id is not None and op_id in self.committed_op_ids():
                 return self.current_version()
-            if self.current_version():
-                m = self._read_manifest(self.current_version())
-                prev = m["data_dirs"]
-                prev_schemas = m.get("dir_schemas") or {}
-            else:
-                prev, prev_schemas = [], {}
+            base = self.current_version()
+            prior = self._read_manifest(base) if keep_prior and base else {}
+            prior_schemas = prior.get("dir_schemas") or {}
+            df = rows_at(base)
+            if keep_prior:
+                self._check_evolution(df, prior_schemas)
+            if df is not rows:
+                rows = df
+                new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
+                df.write.mode("overwrite").parquet(new_dir)
             try:
                 return self._commit(
-                    prev + [new_dir],
-                    "append",
+                    prior.get("data_dirs", []) + [new_dir],
+                    op,
                     op_id,
-                    dir_schemas={**prev_schemas, new_dir: df.schema.json()},
+                    dir_schemas={**prior_schemas, new_dir: df.schema.json()},
+                    pin_version=base + 1,
                 )
             except CommitConflict:
                 continue
             except _OpAlreadyCommitted:
                 return self.current_version()
         raise CommitConflict(
-            f"append to {self.name} lost 100 consecutive commit races"
+            f"{op} to {self.name} lost 100 consecutive commit races"
         )
+
+    def append(self, df: DataFrame, op_id: str | None = None) -> int:
+        """Append df as a new snapshot. No-op if op_id already
+        committed. The new snapshot may carry added columns
+        (schema evolution); see the module docstring."""
+        return self._write("append", op_id, lambda b: df, keep_prior=True)
 
     def overwrite(self, df: DataFrame, op_id: str | None = None) -> int:
-        if op_id is not None and op_id in self.committed_op_ids():
-            return self.current_version()
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(new_dir)
-        try:
-            return self._commit(
-                [new_dir], "overwrite", op_id,
-                dir_schemas={new_dir: df.schema.json()},
-            )
-        except _OpAlreadyCommitted:
-            return self.current_version()
+        return self._write("overwrite", op_id, lambda b: df, keep_prior=False)
 
     def upsert(self, df: DataFrame, op_id: str | None = None) -> int:
-        """Keyed MERGE: append ``df`` tagged with its commit version;
-        ``read`` resolves per-key conflicts by ``on_conflict``. No-op
-        if ``op_id`` already committed (idempotent replay).
-
-        The ``_v`` tag must equal the version the commit actually
-        lands at — under the optimistic-concurrency retry a plain
-        append could lose a race and land at version+1 while its rows
-        still carried the stale tag, making merge resolution between
-        two racing upserts a nondeterministic tie. So upsert pins its
-        commit to the tagged version and, on losing a race, REWRITES
-        the parquet with the fresh tag before retrying (conflicts are
-        rare; the rewrite is the price of a correct last-committer-
-        wins order)."""
+        """Keyed MERGE: append ``df`` tagged ``_v`` with the version
+        its commit lands at; ``read`` resolves per-key conflicts by
+        ``on_conflict``. No-op if ``op_id`` already committed
+        (idempotent replay)."""
         if self.key is None:
             raise ValueError(f"table {self.name} has no key — use append()")
-        if op_id is not None and op_id in self.committed_op_ids():
-            return self.current_version()
-        self._check_evolution(df)
-        for _ in range(100):
-            if op_id is not None and op_id in self.committed_op_ids():
-                return self.current_version()
-            version = self.current_version() + 1
-            tagged = df.withColumn("_v", F.lit(version))
-            new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-            tagged.write.mode("overwrite").parquet(new_dir)
-            if self.current_version():
-                m = self._read_manifest(self.current_version())
-                prev = m["data_dirs"]
-                prev_schemas = m.get("dir_schemas") or {}
-            else:
-                prev, prev_schemas = [], {}
-            try:
-                return self._commit_pinned(
-                    version,
-                    prev + [new_dir],
-                    "append",
-                    op_id,
-                    dir_schemas={
-                        **prev_schemas, new_dir: tagged.schema.json()
-                    },
-                )
-            except CommitConflict:
-                continue  # stale _v tag — rewrite with a fresh one
-            except _OpAlreadyCommitted:
-                return self.current_version()
-        raise CommitConflict(
-            f"upsert to {self.name} lost 100 consecutive commit races"
+        return self._write(
+            "append", op_id, lambda b: df.withColumn("_v", F.lit(b + 1)),
+            keep_prior=True,
         )
-
-    def _commit_pinned(self, version: int, *args, **kw) -> int:
-        """_commit, but REQUIRED to land at exactly ``version`` (the
-        caller's row tags reference that number). The atomic link is
-        the arbiter: if the table moved to or past ``version``, that
-        manifest file exists and the link raises CommitConflict —
-        there is no window in which the commit can land elsewhere."""
-        return self._commit(*args, pin_version=version, **kw)
 
     def rewrite(self, spark: SparkSession, op_id: str | None = None) -> int:
         """File compaction for unkeyed tables: rewrite the current
@@ -388,18 +347,11 @@ class SnapshotTable:
         append-per-cycle table accumulates O(cycles) directories that
         every reader must list and open. Time travel to prior
         versions still works (old dirs are never deleted)."""
-        if op_id is not None and op_id in self.committed_op_ids():
-            return self.current_version()
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        cur = self.read(spark, _resolve=False)
-        cur.write.mode("overwrite").parquet(new_dir)
-        try:
-            return self._commit(
-                [new_dir], "rewrite", op_id,
-                dir_schemas={new_dir: cur.schema.json()},
-            )
-        except _OpAlreadyCommitted:
-            return self.current_version()
+        return self._write(
+            "rewrite", op_id,
+            lambda b: self.read(spark, version=b, _resolve=False),
+            keep_prior=False,
+        )
 
     def compact(self, spark: SparkSession, op_id: str | None = None) -> int:
         """Rewrite the resolved view as a single snapshot (keyed
@@ -409,18 +361,13 @@ class SnapshotTable:
         maintenance crash-replay-idempotent like any other commit."""
         if self.key is None:
             raise ValueError(f"table {self.name} has no key")
-        if op_id is not None and op_id in self.committed_op_ids():
-            return self.current_version()
-        resolved = self._resolve(self.read(spark, _resolve=False), keep_v=True)
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        resolved.write.mode("overwrite").parquet(new_dir)
-        try:
-            return self._commit(
-                [new_dir], "compact", op_id,
-                dir_schemas={new_dir: resolved.schema.json()},
-            )
-        except _OpAlreadyCommitted:
-            return self.current_version()
+        return self._write(
+            "compact", op_id,
+            lambda b: self._resolve(
+                self.read(spark, version=b, _resolve=False), keep_v=True
+            ),
+            keep_prior=False,
+        )
 
     # -- reads ---------------------------------------------------------------
 
@@ -436,54 +383,58 @@ class SnapshotTable:
         )
         return out if keep_v else out.drop("_v")
 
-    def _prev_dirs(self, version: int) -> set[str]:
-        """Data dirs of ``version - 1``, or empty when there is no
-        predecessor — including when it was expired by
-        ``expire_snapshots`` (the oldest surviving version then
-        reports its full contents as its own delta)."""
-        if version <= 1:
-            return set()
-        try:
-            return set(self._read_manifest(version - 1)["data_dirs"])
-        except FileNotFoundError:
-            return set()
+    def _added_dirs(self, version: int, strict: bool) -> list[str]:
+        """Data dirs ``version`` added over its predecessor. When the
+        predecessor was expired by ``expire_snapshots`` the delta is
+        unknowable: ``strict`` raises, otherwise the oldest surviving
+        version reports its full contents as its own delta."""
+        cur = self._read_manifest(version)["data_dirs"]
+        prev: set[str] = set()
+        if version > 1:
+            try:
+                prev = set(self._read_manifest(version - 1)["data_dirs"])
+            except FileNotFoundError:
+                if strict:
+                    raise ValueError(
+                        f"predecessor manifest {version - 1} of "
+                        f"{self.name} was expired — the delta of version "
+                        f"{version} is unknowable (a fallback would "
+                        "return the full table, not the delta); widen "
+                        "snapshot retention past the incremental-read "
+                        "horizon or use read()"
+                    ) from None
+        return [d for d in cur if d not in prev]
+
+    @staticmethod
+    def _footer_rows(dirs: list[str]) -> int:
+        """Row count of the parquet files under ``dirs`` from footer
+        METADATA (driver-side pyarrow read, no Spark job)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for d in dirs
+            for root, _, files in os.walk(d)
+            for f in files
+            if f.endswith(".parquet")
+        )
 
     def delta_bytes(self, version: int) -> int:
         """Bytes written by ``version`` (the files of its NEW data
         dirs) — the write-amplification gauge: an incremental append
         reports the delta's bytes, an overwrite/compact reports the
         full rewrite."""
-        cur = self._read_manifest(version)["data_dirs"]
-        prev = self._prev_dirs(version)
-        total = 0
-        for d in cur:
-            if d in prev:
-                continue
-            for root, _, files in os.walk(d):
-                total += sum(
-                    os.path.getsize(os.path.join(root, f)) for f in files
-                )
-        return total
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for d in self._added_dirs(version, strict=False)
+            for root, _, files in os.walk(d)
+            for f in files
+        )
 
     def delta_rows(self, version: int) -> int:
         """Row count of the files ``version`` added, from parquet
-        FOOTER METADATA (driver-side pyarrow read, no Spark job) —
-        lineage accounting shouldn't cost a cluster pass."""
-        import pyarrow.parquet as pq
-
-        cur = self._read_manifest(version)["data_dirs"]
-        prev = self._prev_dirs(version)
-        total = 0
-        for d in cur:
-            if d in prev:
-                continue
-            for root, _, files in os.walk(d):
-                total += sum(
-                    pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-        return total
+        footers — lineage accounting shouldn't cost a cluster pass."""
+        return self._footer_rows(self._added_dirs(version, strict=False))
 
     def read_delta(self, spark: SparkSession, version: int) -> DataFrame:
         """Read ONLY the rows added by ``version`` (its new data dirs,
@@ -491,31 +442,13 @@ class SnapshotTable:
         a cycle that needs just-its-own commit reads O(commit), never
         O(history), and no footer listing of prior dirs happens.
 
-        Raises when ``version``'s predecessor manifest was expired by
-        ``expire_snapshots``: the delta is then unknowable and the
-        lenient empty-prev fallback would silently return the ENTIRE
-        cumulative table — an incremental consumer near the retention
-        boundary would reprocess full history as "the delta" (the
-        empty-prev fallback stays only for the stats gauges
-        delta_bytes/delta_rows, where over-attribution is harmless)."""
-        cur = self._read_manifest(version)["data_dirs"]
-        if version > 1:
-            try:
-                prev: set[str] = set(
-                    self._read_manifest(version - 1)["data_dirs"]
-                )
-            except FileNotFoundError:
-                raise ValueError(
-                    f"predecessor manifest {version - 1} of "
-                    f"{self.name} was expired — the delta of version "
-                    f"{version} is unknowable (a fallback would "
-                    "return the full table, not the delta); widen "
-                    "snapshot retention past the incremental-read "
-                    "horizon or use read()"
-                ) from None
-        else:
-            prev = set()
-        delta = [d for d in cur if d not in prev]
+        Strict about an expired predecessor: the lenient fallback
+        would silently return the ENTIRE cumulative table, so an
+        incremental consumer near the retention boundary would
+        reprocess full history as "the delta" (the lenient form stays
+        only for the stats gauges delta_bytes/delta_rows, where
+        over-attribution is harmless)."""
+        delta = self._added_dirs(version, strict=True)
         if not delta:
             raise ValueError(f"version {version} added no data dirs")
         return spark.read.parquet(*delta)
@@ -596,17 +529,9 @@ class SnapshotTable:
         ``is_empty`` alone cannot say 'nothing in here')."""
         if self.is_empty():
             return 0
-        import pyarrow.parquet as pq
-
-        total = 0
-        for d in self._read_manifest(self.current_version())["data_dirs"]:
-            for root, _, files in os.walk(d):
-                total += sum(
-                    pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-        return total
+        return self._footer_rows(
+            self._read_manifest(self.current_version())["data_dirs"]
+        )
 
     # -- maintenance ---------------------------------------------------------
 

@@ -46,7 +46,9 @@ def test_bloom_no_false_negatives(spark):
     seen = spark.range(0, 5000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    blm = B.build_bloom(seen, num_buckets=16)
+    blm = B.merge_bloom(
+        None, seen, num_buckets=16, capacity_per_bucket=5000 // 16
+    )
     # every seen key must report maybe_seen=True (no false negatives)
     probed = B.probe_bloom(seen, blm, num_buckets=16)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
@@ -69,7 +71,9 @@ def test_seen_filter_exact_semantics(spark):
     seen = spark.range(1500, 4000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    blm = B.build_bloom(seen, num_buckets=8)
+    blm = B.merge_bloom(
+        None, seen, num_buckets=8, capacity_per_bucket=2500 // 8
+    )
     with_bloom = sorted(
         r.url_hash
         for r in B.seen_filter(cand, seen, blm, num_buckets=8).collect()

@@ -3,6 +3,8 @@ travel, idempotent op_ids, append vs overwrite."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from omni_crawler_spark.lakehouse import SnapshotTable
@@ -231,10 +233,116 @@ def test_concurrent_append_retries_and_resolves(spark, tmp_path):
     got = sorted(r.id for r in t1.read(spark).collect())
     assert got == [0, 1, 100, 101, 200, 201, 202]
     assert t1.committed_op_ids() >= {"base", "winner", "loser-retries"}
+    # one parquet dir per committed write: a retry rewrites no parquet
+    assert len(os.listdir(tmp_path / "t" / "data")) == 3
     # same-op_id race: replaying the op another session won is a no-op
     v = t1.current_version()
     assert t2.append(spark.range(300, 310), op_id="winner") == v
     assert t1.read(spark).count() == 7
+
+
+def test_append_retry_writes_parquet_once(spark, tmp_path):
+    """An append whose pinned commit loses a race retries with a new
+    manifest only: its parquet dir is written once and reused."""
+    t1 = SnapshotTable(str(tmp_path / "t"))
+    t2 = SnapshotTable(str(tmp_path / "t"))
+    t1.append(spark.range(0, 2), op_id="base")
+    orig = t2._commit
+    calls = []
+
+    def racy(*a, **kw):
+        if not calls:
+            t1.append(spark.range(100, 102), op_id="winner")
+        calls.append(kw.get("pin_version"))
+        return orig(*a, **kw)
+
+    t2._commit = racy  # type: ignore[method-assign]
+    assert t2.append(spark.range(200, 203), op_id="loser") == 3
+    assert calls == [2, 3]  # lost at 2, retried pinned at 3
+    got = sorted(r.id for r in t1.read(spark).collect())
+    assert got == [0, 1, 100, 101, 200, 201, 202]
+    assert len(os.listdir(tmp_path / "t" / "data")) == 3
+
+
+def _race_after_read(t, racer):
+    """Make ``racer()`` commit from another instance right after the
+    writer ``t`` reads its input (once)."""
+    orig = t.read
+    fired = []
+
+    def read(*a, **kw):
+        out = orig(*a, **kw)
+        if not fired:
+            fired.append(True)
+            racer()
+        return out
+
+    t.read = read  # type: ignore[method-assign]
+
+
+def test_rewrite_keeps_racing_append(spark, tmp_path):
+    """An append that lands after ``rewrite`` read its input must
+    survive: the rewrite's pinned commit loses and it re-reads."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    other = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.range(0, 2))
+    t.append(spark.range(2, 3))
+    _race_after_read(
+        t, lambda: other.append(spark.range(100, 102), op_id="racer")
+    )
+    t.rewrite(spark, op_id="rw")
+    assert sorted(r.id for r in other.read(spark).collect()) == [
+        0, 1, 2, 100, 101
+    ]
+    assert len(other._read_manifest(other.current_version())["data_dirs"]) == 1
+    assert other.committed_op_ids() >= {"racer", "rw"}
+
+
+def test_compact_keeps_racing_upsert(spark, tmp_path):
+    """An upsert that lands after ``compact`` read its input must
+    survive: the compaction's pinned commit loses and it re-resolves."""
+    t = SnapshotTable(str(tmp_path / "t"), key=["id"])
+    other = SnapshotTable(str(tmp_path / "t"), key=["id"])
+    t.upsert(spark.range(0, 2))
+    t.upsert(spark.range(1, 3))
+    _race_after_read(
+        t, lambda: other.upsert(spark.range(100, 102), op_id="racer")
+    )
+    t.compact(spark, op_id="cp")
+    assert sorted(r.id for r in other.read(spark).collect()) == [
+        0, 1, 2, 100, 101
+    ]
+    assert len(other._read_manifest(other.current_version())["data_dirs"]) == 1
+    assert other.committed_op_ids() >= {"racer", "cp"}
+
+
+def test_one_write_path():
+    """Every writer goes through ``_write``: the table module has one
+    DataFrame ``.write`` and one ``_commit`` call site, both in it."""
+    import ast
+
+    from omni_crawler_spark.lakehouse import table
+
+    with open(table.__file__) as fh:
+        tree = ast.parse(fh.read())
+    fns = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
+        fns += [n for n in cls.body if isinstance(n, ast.FunctionDef)]
+    writes, commits = [], []
+    for fn in fns:
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Attribute) and n.attr == "write":
+                writes.append(fn.name)
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "_commit"):
+                commits.append(fn.name)
+    assert writes == ["_write"]
+    assert set(commits) == {"_write"}
+    names = {n.id if isinstance(n, ast.Name) else n.attr
+             for n in ast.walk(tree)
+             if isinstance(n, (ast.Name, ast.Attribute))}
+    names |= {fn.name for fn in fns}
+    assert not names & {"_commit_pinned", "_prev_dirs"}
 
 
 def test_compact_preserves_resolved_view(spark, tmp_path):
