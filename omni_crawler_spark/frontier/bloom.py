@@ -8,37 +8,53 @@ Design here (SURVEY §4.2):
 
 - ``seen`` rows are 64-bit xxhash64 keys, bucketed by
   ``pmod(hash, num_buckets)`` — the same bucketing partitions the
-  bloom side tables AND the candidate stream, so probe work is
-  executor-local after one hash-partition exchange.
-- per bucket, one bitarray blob of a FIXED geometry sized from the
-  per-bucket capacity n (``m = -n·ln(p)/ln2²``, ``k = m/n·ln2``), so
-  each cycle's new keys OR into the persisted blobs (``merge_bloom``,
-  one ``applyInPandas`` pass, numpy bit ops, no per-row Python).
-- probe positions derive from the 64-bit key itself by double
-  hashing ``pos_i = (h1 + i·h2) mod m`` — no string rehashing, and
-  identical arithmetic in build and probe.
-- correctness contract: bloom=negative ⇒ *definitely unseen* (safe to
-  fetch without exact check); bloom=positive ⇒ maybe seen ⇒ exact
-  anti-join on the survivors only. A false positive can only cost an
-  extra exact lookup, never a dropped URL.
+  bloom table AND the candidate stream.
+- format: one row per bucket, ``bucket, n_keys, m_bits, k_hashes,
+  words``. ``words`` is an ``array<bigint>`` of ``m_bits / 64`` words;
+  bit position ``p`` is bit ``p & 63`` of word ``p >> 6``. The
+  geometry is FIXED, sized from the per-bucket capacity n
+  (``m = -n·ln(p)/ln2²`` rounded up to a multiple of 64,
+  ``k = m/n·ln2``), so each cycle's new keys OR into the persisted
+  words (``merge_bloom``: a numpy scatter in the commit phase — a
+  scatter has no Spark SQL form). A table still in the old ``binary``
+  bitmap format is refused loudly, never read as empty.
+- positions: double hashing ``pos_i = (h1 + i·h2) mod m`` from key
+  bits above the bucket bits: ``h1 = key >>> 32``,
+  ``h2 = ((key >>> 12) & 0xFFFFF) | 1``. A power-of-two factor
+  ``2^b`` of ``num_buckets`` makes the low ``b`` key bits constant
+  within a bucket, so bits shared with the bucket would pin a probe to
+  a fraction of the positions (the whole key as ``h1`` with 64 buckets
+  puts probe 0 only on positions ≡ bucket mod 16: FPR 0.015 at
+  capacity instead of 0.01). Positions read bits 12 and up, so
+  ``bucket_of`` refuses a ``num_buckets`` whose power-of-two factor
+  exceeds ``2^12 = 4096``. Every sum stays below 2^33, so the signed
+  Spark SQL arithmetic (ANSI overflow checks on) and numpy's uint64
+  agree exactly.
+- probe (``probe_bloom``): JVM-native — a join on ``bucket`` and a
+  bit test (``element_at`` on the word, shift, ``& 1``) under
+  ``forall(sequence(0, k_hashes - 1), ...)``. No Python worker, and
+  the words are read in place from the joined bucket row, never
+  copied per candidate. The same test unrolled into 16 ANDed terms
+  ran the probe about 2× slower at 14k candidates.
+- correctness contract: the bloom has no false negatives, so
+  bloom=negative ⇒ *definitely unseen*. ``seen_filter`` still sends
+  every candidate through the exact anti-join; ``maybe_seen`` is only
+  an extra condition on it, so a false positive costs nothing and can
+  never drop a URL.
 
-At 10^10 seen URLs / 4096 buckets / 1% fpp each blob is ~2.9 MB
-(total ~12 GB across the cluster but only ~3 MB per task) — the
-cogroup keeps each blob on the executor that owns its bucket; nothing
-is broadcast.
+At 10^10 seen URLs / 4096 buckets / 1% fpp each bucket is ~2.9 MB
+(~12 GB across the cluster): too big to broadcast, so the planner
+shuffles both sides by bucket and each task holds one bucket's words.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
+    ArrayType,
     IntegerType,
     LongType,
     StructField,
@@ -47,6 +63,7 @@ from pyspark.sql.types import (
 
 DEFAULT_BUCKETS = 64
 DEFAULT_FPP = 0.01
+BUCKET_BITS = 12  # key bits below this are left to the bucket
 
 BLOOM_SCHEMA = StructType(
     [
@@ -54,33 +71,60 @@ BLOOM_SCHEMA = StructType(
         StructField("n_keys", LongType()),
         StructField("m_bits", LongType()),
         StructField("k_hashes", IntegerType()),
-        StructField("bitmap", BinaryType()),
+        StructField("words", ArrayType(LongType())),
     ]
 )
 
 
 def bucket_of(hash_col, num_buckets: int = DEFAULT_BUCKETS):
+    if num_buckets & -num_buckets > 1 << BUCKET_BITS:
+        raise ValueError(
+            f"num_buckets={num_buckets}: a power-of-two factor above "
+            f"{1 << BUCKET_BITS} shares key bits with the probe positions"
+        )
     return F.pmod(hash_col, F.lit(num_buckets)).cast("int")
 
 
 def _positions(keys: np.ndarray, m: int, k: int) -> np.ndarray:
-    """(len(keys), k) probe positions via double hashing of the
-    64-bit key — pure uint64 arithmetic, vectorized."""
-    u = keys.astype(np.uint64)
-    h1 = u
-    h2 = ((u >> np.uint64(33)) << np.uint64(1)) | np.uint64(1)
+    """(len(keys), k) uint64 probe positions by double hashing — the
+    numpy twin of :func:`_position_col`."""
+    u = keys.astype(np.int64).view(np.uint64)
+    h1 = u >> np.uint64(32)
+    h2 = ((u >> np.uint64(BUCKET_BITS)) & np.uint64(0xFFFFF)) | np.uint64(1)
     i = np.arange(k, dtype=np.uint64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
+    return (h1[:, None] + i * h2[:, None]) % np.uint64(m)
+
+
+def _position_col(key: Column, m: Column, i: Column) -> Column:
+    h1 = F.shiftrightunsigned(key, 32)
+    h2 = (
+        F.shiftrightunsigned(key, BUCKET_BITS)
+        .bitwiseAND(F.lit(0xFFFFF))
+        .bitwiseOR(F.lit(1))
+    )
+    return (h1 + i * h2) % m
 
 
 def fixed_params(capacity_per_bucket: int, fpp: float = DEFAULT_FPP) -> tuple[int, int]:
     """Fixed (m, k) geometry sized for a capacity — every bucket and
-    every cycle shares it, which is what makes blobs OR-mergeable."""
+    every cycle shares it, which is what makes the words OR-mergeable.
+    ``m`` is a whole number of 64-bit words."""
     n = max(capacity_per_bucket, 1)
     m = int(np.ceil(-n * np.log(fpp) / (np.log(2) ** 2)))
-    m = max(64, (m + 7) // 8 * 8)  # byte-align
+    m = max(64, (m + 63) // 64 * 64)
     k = max(1, int(round(m / n * np.log(2))))
     return m, min(k, 16)
+
+
+def _check_format(bloom: DataFrame) -> None:
+    if "words" not in bloom.columns:
+        raise ValueError(
+            "bloom table is in the old binary-bitmap format (columns "
+            f"{bloom.columns}); it cannot be probed, and reading it as "
+            "empty would clear seen URLs for refetch. Rebuild it from the "
+            "full seen set: overwrite the bloom table with "
+            "merge_bloom(None, <full seen>)"
+        )
 
 
 def merge_bloom(
@@ -92,53 +136,50 @@ def merge_bloom(
     fpp: float = DEFAULT_FPP,
 ) -> DataFrame:
     """Incremental bloom maintenance: OR this cycle's new keys into
-    the persisted per-bucket blobs instead of rescanning the whole
+    the persisted per-bucket words instead of rescanning the whole
     seen table (at 10^10 rows a full rebuild per cycle IS the
-    bottleneck). Fixed geometry ⇒ bitmaps merge with a byte-OR;
-    ``n_keys`` accumulates so capacity overrun (fpp degradation — a
-    performance concern, never a correctness one: positives are
-    always exact-checked) is observable.
+    bottleneck). One cogroup of (prev bucket row, new keys) per
+    bucket; ``n_keys`` accumulates so capacity overrun (fpp
+    degradation — a performance concern, never a correctness one:
+    positives are always exact-checked) is observable.
 
     Crash-safe by construction: the merge is a pure function of
-    (prev blobs, cycle's new keys), so replaying a cycle produces an
+    (prev words, cycle's new keys), so replaying a cycle produces an
     identical table.
     """
     m, k = fixed_params(capacity_per_bucket, fpp)
-
-    def build_fixed(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf[hash_col].to_numpy()
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        pos = _positions(keys, m, k).ravel()
-        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            [{"bucket": int(pdf["bucket"].iloc[0]), "n_keys": len(keys),
-              "m_bits": m, "k_hashes": k, "bitmap": bits.tobytes()}]
-        )
-
-    fresh = (
-        new_keys.withColumn("bucket", bucket_of(F.col(hash_col), num_buckets))
-        .groupBy("bucket")
-        .applyInPandas(build_fixed, BLOOM_SCHEMA)
-    )
     if prev is None:
-        return fresh
+        prev = new_keys.sparkSession.createDataFrame([], BLOOM_SCHEMA)
+    _check_format(prev)
 
-    def or_blobs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        n = 0
-        for r in pdf.itertuples(index=False):
-            b = np.frombuffer(r.bitmap, dtype=np.uint8)
-            acc = b.copy() if acc is None else (acc | b)
-            n += int(r.n_keys)
+    def fold(old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
+        if len(old):
+            if (int(old["m_bits"].iloc[0]), int(old["k_hashes"].iloc[0])) != (m, k):
+                raise ValueError(
+                    f"bloom geometry {old['m_bits'].iloc[0]}/"
+                    f"{old['k_hashes'].iloc[0]} != merge geometry {m}/{k}"
+                )
+            bucket, n = int(old["bucket"].iloc[0]), int(old["n_keys"].iloc[0])
+            words = np.array(old["words"].iloc[0], dtype=np.int64).view(np.uint64)
+        else:
+            bucket, n = int(new["bucket"].iloc[0]), 0
+            words = np.zeros(m // 64, dtype=np.uint64)
+        pos = _positions(new[hash_col].to_numpy(), m, k).ravel()
+        np.bitwise_or.at(
+            words, pos >> np.uint64(6), np.uint64(1) << (pos & np.uint64(63))
+        )
         return pd.DataFrame(
-            [{"bucket": int(key[0]), "n_keys": n, "m_bits": m,
-              "k_hashes": k, "bitmap": acc.tobytes()}]
+            {"bucket": [bucket], "n_keys": [n + len(new)], "m_bits": [m],
+             "k_hashes": [k], "words": [words.view(np.int64)]}
         )
 
+    keys = new_keys.select(
+        hash_col, bucket_of(F.col(hash_col), num_buckets).alias("bucket")
+    )
     return (
-        prev.unionByName(fresh)
-        .groupBy("bucket")
-        .applyInPandas(or_blobs, BLOOM_SCHEMA)
+        prev.groupBy("bucket")
+        .cogroup(keys.groupBy("bucket"))
+        .applyInPandas(fold, BLOOM_SCHEMA)
     )
 
 
@@ -148,36 +189,31 @@ def probe_bloom(
     hash_col: str = "url_hash",
     num_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Adds ``maybe_seen`` to candidates. Bucket-aligned cogroup: each
-    task sees one bucket's candidate rows + that bucket's single blob
-    row — the blob is never replicated per candidate row and never
-    broadcast."""
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
+    """Adds ``maybe_seen`` to candidates: a left join on the bucket
+    and a bit test in Spark SQL, all in the JVM (format and position
+    derivation in the module docstring). Candidates whose bucket has
+    no bloom row (no seen keys yet) are ``False``."""
+    _check_format(bloom)
+    blm = bloom.select(
+        F.col("bucket").alias("_bucket"),
+        F.col("m_bits").alias("_m"),
+        F.col("k_hashes").alias("_k"),
+        F.col("words").alias("_words"),
     )
-    cand_cols = [f.name for f in candidates.schema.fields]
+    key, m = F.col(hash_col), F.col("_m")
 
-    def test(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        cand = cand.drop(columns=["bucket"])
-        if len(cand) == 0:
-            return cand.assign(maybe_seen=pd.Series(dtype=bool))
-        if len(blob) == 0:  # no seen keys in this bucket yet
-            return cand.assign(maybe_seen=False)
-        m = int(blob["m_bits"].iloc[0])
-        k = int(blob["k_hashes"].iloc[0])
-        bits = np.frombuffer(blob["bitmap"].iloc[0], dtype=np.uint8)
-        keys = cand[hash_col].to_numpy()
-        pos = _positions(keys, m, k)
-        hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return cand.assign(maybe_seen=hit.all(axis=1))
+    def bit_set(i: Column) -> Column:
+        pos = _position_col(key, m, i)
+        word = F.element_at("_words", F.shiftright(pos, 6).cast("int") + 1)
+        bit = F.call_function(
+            "shiftrightunsigned", word, pos.bitwiseAND(F.lit(63)).cast("int")
+        )
+        return bit.bitwiseAND(F.lit(1)) == 1
 
-    tagged = candidates.withColumn("bucket", bucket_of(F.col(hash_col), num_buckets))
-    return (
-        tagged.groupBy("bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(test, out_schema)
-        .select(*cand_cols, "maybe_seen")
-    )
+    hit = F.forall(F.sequence(F.lit(0), F.col("_k") - 1), bit_set)
+    return candidates.join(
+        blm, bucket_of(key, num_buckets) == F.col("_bucket"), "left"
+    ).select(*candidates.columns, F.coalesce(hit, F.lit(False)).alias("maybe_seen"))
 
 
 def seen_filter(
@@ -187,14 +223,21 @@ def seen_filter(
     hash_col: str = "url_hash",
     num_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """The full P1 anti-join with bloom pre-screen: rows the bloom
-    clears skip the exact join entirely; only maybe-seen rows pay the
-    shuffle against the (bucketed) seen table. Exact semantics of
-    ``candidates LEFT ANTI JOIN seen`` — the bloom only reduces work."""
+    """``candidates LEFT ANTI JOIN seen`` with a bloom pre-screen: one
+    probe, then one anti-join whose condition also requires
+    ``maybe_seen``. Exact because the bloom has no false negatives:
+    every seen candidate is ``maybe_seen``, so a cleared row is new.
+
+    The pre-screen saves no exact lookup: a left-side condition cannot
+    leave the anti-join, so every candidate is still hashed and looked
+    up in ``seen``. On ``crawl_steady`` (local[4], 4-core host) an
+    engine on the ``bloom=None`` path was no slower: 8.98 s against
+    9.75 s median per timed pass over 10 interleaved pairs."""
     if bloom is None:
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
     probed = probe_bloom(candidates, bloom, hash_col, num_buckets)
-    clear = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen.select(hash_col), hash_col, "left_anti")
-    return clear.unionByName(confirmed_new)
+    s = seen.select(F.col(hash_col).alias("_seen_hash"))
+    return probed.join(
+        s, (F.col(hash_col) == F.col("_seen_hash")) & F.col("maybe_seen"),
+        "left_anti",
+    ).drop("maybe_seen")

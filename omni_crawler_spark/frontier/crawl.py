@@ -272,7 +272,7 @@ class CrawlEngine:
         # -- job 1: the cycle plan ----------------------------------------
         seen = self._read_seen(spark)
         cand = self.candidates(spark)
-        # persisted incremental bloom: read blobs, never rescan `seen`
+        # persisted incremental bloom: read its words, never rescan `seen`
         # (at 10^10 rows the per-cycle full rebuild IS the bottleneck)
         bloom = None if self.bloom.is_empty() else self.bloom.read(spark)
         new = B.seen_filter(cand, seen, bloom, num_buckets=self.num_buckets)

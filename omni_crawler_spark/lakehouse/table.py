@@ -451,7 +451,10 @@ class SnapshotTable:
         delta = self._added_dirs(version, strict=True)
         if not delta:
             raise ValueError(f"version {version} added no data dirs")
-        return spark.read.parquet(*delta)
+        manifest = self._read_manifest(version)
+        return self._scan(
+            spark, {"data_dirs": delta, "dir_schemas": manifest.get("dir_schemas")}
+        )
 
     def read(
         self,
@@ -470,29 +473,28 @@ class SnapshotTable:
 
     def _scan(self, spark: SparkSession, manifest: dict) -> DataFrame:
         """Scan a manifest's data dirs, evolving heterogeneous schemas
-        to the column superset with typed-NULL backfill. Homogeneous
-        tables (the common case) take a single-scan fast path identical
-        to the pre-evolution behavior; dirs are grouped by schema
-        signature so the plan has one scan node per distinct schema
-        (O(#migrations)), and each scan gets its schema from the
-        manifest — no per-file footer sniffing (``mergeSchema``)."""
-        dirs = manifest["data_dirs"]
-        dir_schemas = manifest.get("dir_schemas") or {}
-        if len({dir_schemas.get(d) for d in dirs}) <= 1:
-            return spark.read.parquet(*dirs)
+        to the column superset with typed-NULL backfill. Dirs are
+        grouped by schema signature so the plan has one scan node per
+        distinct schema (O(#migrations)), and each scan gets its schema
+        from the manifest: no footer inference (a driver-side Spark
+        job per read) and no ``mergeSchema`` (every file footer). Only
+        legacy dirs committed before ``dir_schemas`` still infer."""
         from pyspark.sql.types import StructField, StructType
 
+        dir_schemas = manifest.get("dir_schemas") or {}
         groups: dict[str | None, list[str]] = {}
-        for d in dirs:
+        for d in manifest["data_dirs"]:
             groups.setdefault(dir_schemas.get(d), []).append(d)
         scans: list[tuple[StructType, DataFrame]] = []
         for sig, ds in groups.items():
-            if sig is None:  # legacy dirs committed before dir_schemas
+            if sig is None:
                 df = spark.read.parquet(*ds)
                 scans.append((df.schema, df))
             else:
                 st = StructType.fromJson(json.loads(sig))
                 scans.append((st, spark.read.schema(st).parquet(*ds)))
+        if len(scans) == 1:
+            return scans[0][1]
         union_fields: dict[str, StructField] = {}
         for st, _ in scans:
             for fld in st.fields:

@@ -20,6 +20,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_MEMORY_GB = 24
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half the host's RAM in whole GiB
+    (at least 1g), capped at 24g. In local mode all tasks share the
+    driver heap; a heap larger than the host would be killed, not
+    collected. The half-of-RAM fraction is unmeasured: it leaves the
+    rest to the Python workers and off-heap buffers, but no run has
+    timed the default ``local[DEFAULT_CPUS]`` session with it."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, int(ram_gb / 2)))}g"
 
 
 def get_spark(
@@ -61,10 +76,7 @@ def get_spark(
         # deterministic session timezone so timestamp-derived results
         # are identical across runs/hosts (and match the DuckDB oracle)
         .config("spark.sql.session.timeZone", "UTC")
-        # local-mode: all tasks share one heap; size it for N concurrent
-        # parquet writers + shuffle buffers (measured: 8g thrashed GC at
-        # local[32], flattening scaling)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # zstd halves written bytes vs snappy on text-heavy tables; the
         # extra compression CPU parallelizes, the saved disk time doesn't
         # have to be paid serially by every writer

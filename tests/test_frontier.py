@@ -5,6 +5,8 @@ pure-Python reference simulator on the same seed list + budget."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,7 @@ from omni_crawler_spark.frontier.crawl import CrawlEngine
 from omni_crawler_spark.frontier.synthetic import generate_hosts, generate_seeds
 from omni_crawler_spark.frontier.xxh64 import xxh64_str
 from omni_crawler_spark.functions import urls as U
+from omni_crawler_spark.lakehouse import SnapshotTable
 
 from tests import reference_sim as SIM
 
@@ -62,26 +65,79 @@ def test_bloom_no_false_negatives(spark):
     assert fp / 5000 < 0.05
 
 
-def test_seen_filter_exact_semantics(spark):
+def test_seen_filter_exact_semantics(spark, tmp_path):
     """bloom + exact anti-join ≡ plain left_anti — the bloom is an
-    optimization, never a semantics change."""
+    optimization, never a semantics change. The probe runs in the JVM
+    and runs once: the executed plan has no Python node and scans the
+    bloom table once."""
     cand = spark.range(0, 3000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
     seen = spark.range(1500, 4000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    blm = B.merge_bloom(
-        None, seen, num_buckets=8, capacity_per_bucket=2500 // 8
+    table = SnapshotTable(str(tmp_path / "bloom"), "bloom")
+    table.overwrite(
+        B.merge_bloom(None, seen, num_buckets=8, capacity_per_bucket=2500 // 8)
     )
-    with_bloom = sorted(
-        r.url_hash
-        for r in B.seen_filter(cand, seen, blm, num_buckets=8).collect()
-    )
+    out = B.seen_filter(cand, seen, table.read(spark), num_buckets=8)
+    with_bloom = sorted(r.url_hash for r in out.collect())
     exact = sorted(
         r.url_hash for r in cand.join(seen, "url_hash", "left_anti").collect()
     )
     assert with_bloom == exact
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert plan.split("== Initial Plan ==")[0].count("FileScan parquet") == 1, plan
+
+
+@pytest.mark.parametrize("num_buckets", [B.DEFAULT_BUCKETS, 4096])
+def test_bloom_fpr_at_capacity(spark, num_buckets):
+    """One bucket of the default capacity filled to capacity answers
+    unseen keys of the same bucket at the designed FPR. All keys share
+    the bucket bits (low bits 0 → bucket 0), so probe positions that
+    reuse them would concentrate on a fraction of the bits."""
+    cap = inspect.signature(B.merge_bloom).parameters["capacity_per_bucket"].default
+
+    def keys(lo, n):
+        return spark.range(lo, lo + n).select(
+            F.xxhash64("id").bitwiseAND(F.lit(-num_buckets)).alias("url_hash")
+        )
+
+    blm = B.merge_bloom(None, keys(0, cap), num_buckets=num_buckets)
+    n = 200_000
+    fp = (
+        B.probe_bloom(keys(10**9, n), blm, num_buckets=num_buckets)
+        .filter("maybe_seen")
+        .count()
+    )
+    assert fp / n <= 1.2 * B.DEFAULT_FPP
+
+
+def test_bloom_refuses_buckets_sharing_position_bits(spark):
+    """Positions read key bits 12 and up, so a bucket count whose
+    power-of-two factor exceeds 4096 would fix some of them."""
+    keys = spark.range(10).select(F.col("id").alias("url_hash"))
+    with pytest.raises(ValueError, match="num_buckets=8192"):
+        B.merge_bloom(None, keys, num_buckets=8192)
+    B.merge_bloom(None, keys, num_buckets=3 * 4096)  # factor 4096 is fine
+
+
+def test_old_format_bloom_fails_loudly(spark, tmp_path):
+    """A bloom still holding ``binary`` bitmaps is refused with the fix
+    named. Read as empty, it would clear every seen URL for refetch."""
+    table = SnapshotTable(str(tmp_path / "bloom"), "bloom")
+    table.overwrite(spark.createDataFrame(
+        [(0, 1, 64, 1, bytearray(8))],
+        "bucket int, n_keys long, m_bits long, k_hashes int, bitmap binary",
+    ))
+    old = table.read(spark)
+    keys = spark.range(10).select(F.col("id").alias("url_hash"))
+    with pytest.raises(ValueError, match=r"merge_bloom\(None, <full seen>\)"):
+        B.seen_filter(keys, keys, old)
+    with pytest.raises(ValueError, match=r"merge_bloom\(None, <full seen>\)"):
+        B.merge_bloom(old, keys)
 
 
 def test_clean_content_parity_and_boilerplate_removed():

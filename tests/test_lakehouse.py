@@ -191,6 +191,46 @@ def test_schema_evolution_compact_folds_superset(spark, tmp_path):
     assert len(t._read_manifest(t.current_version())["data_dirs"]) == 1
 
 
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+@pytest.mark.parametrize("shape", ["homogeneous", "evolved", "legacy"])
+def test_reads_take_the_manifest_schema(spark, tmp_path, shape):
+    """``read`` and ``read_delta`` take each dir's schema from the
+    manifest: they schedule no footer-inference job before an action,
+    and return the schema that inferring from the footers gives. Dirs
+    of a legacy manifest (no ``dir_schemas``) still infer."""
+    import json
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([("u1", 10)], "url string, quality int"))
+    if shape == "evolved":
+        v = t.append(spark.createDataFrame(
+            [("u2", 20, "en")], "url string, quality int, lang string"))
+    else:
+        v = t.append(spark.createDataFrame([("u2", 20)], "url string, quality int"))
+    if shape == "legacy":
+        path = os.path.join(t.root, "snapshots", f"{v:08d}.json")
+        with open(path) as fh:
+            m = json.load(fh)
+        del m["dir_schemas"]
+        with open(path, "w") as fh:
+            json.dump(m, fh)
+    dirs = t._read_manifest(v)["data_dirs"]
+    want = spark.read.option("mergeSchema", "true").parquet(*dirs).schema
+    want_delta = spark.read.parquet(dirs[-1]).schema
+    before = _job_ids(spark)
+    got, got_delta = t.read(spark).schema, t.read_delta(spark, v).schema
+    jobs = _job_ids(spark) - before
+    assert got == want
+    assert got_delta == want_delta
+    if shape != "legacy":
+        assert not jobs
+
+
 def test_concurrent_commit_conflict_raises(spark, tmp_path):
     """Two writers racing the same version: exactly one wins, the
     loser fails loudly instead of clobbering the committed manifest

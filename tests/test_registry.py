@@ -89,6 +89,26 @@ def test_one_parallelism_policy_and_single_pass_cap():
     assert not calls & {"join", "broadcast", "persist", "cache"}, calls
 
 
+@pytest.mark.parametrize("ram_gib", [1, 3, 15, 64, 512])
+def test_driver_memory_default_fits_host(monkeypatch, ram_gib):
+    """The default driver heap is derived from host RAM: it never
+    exceeds the host's RAM nor 24g, and SPARK_DRIVER_MEMORY still
+    overrides it."""
+    import os
+
+    from omni_crawler_spark import session as S
+
+    page = 4096
+    sysconf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_gib * 2**30 // page}
+    monkeypatch.setattr(os, "sysconf", sysconf.__getitem__)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    heap = S.driver_memory()
+    assert heap.endswith("g")
+    assert 1 <= int(heap[:-1]) <= min(ram_gib, S.MAX_DRIVER_MEMORY_GB)
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert S.driver_memory() == "3g"
+
+
 def test_budget_allocate_waterfill_invariants(spark, sf_dir):
     """Exact integer max-min fairness: the quotas must exhaust the
     budget, never exceed pending, and differ by at most 1 across
