@@ -24,7 +24,7 @@ from omni_crawler_spark.analytics import REGISTRY  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the end-to-end frontier drain (seeds → canonicalize →
-    bloom seen-filter → robots → politeness schedule → batched fetch →
+    exact seen anti-join → robots → politeness schedule → batched fetch →
     extract/validate → snapshot commits), SURVEY §3.1/§7."""
     return REGISTRY["crawl_frontier_drain"].build(spark, "/root/testdata/sf0.001")
 

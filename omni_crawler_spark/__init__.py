@@ -15,7 +15,7 @@ Subpackages
   environment; the API mirrors append/overwrite/merge + time travel).
 - ``functions`` : pure-column scalar/enrichment expressions (URL
   canonicalization, HTML/text cleaning, validation, quality scoring).
-- ``frontier``  : the from-scratch URL frontier — bloom seen-filter,
+- ``frontier``  : the from-scratch URL frontier — exact seen anti-join,
   per-host politeness priority queue, batched fetch+validate.
 - ``operators`` : dedup (exact/minhash-LSH/simhash), similarity
   search, multimodal column plumbing.

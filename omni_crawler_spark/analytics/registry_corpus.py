@@ -597,8 +597,8 @@ _DECON_EVAL = (0, 8, 89)  # stand-in "benchmark" docs
     "few MB hashed) joined against the corpus's gram stream — "
     "map-side only, zero corpus shuffle before the per-doc count; in "
     "production the join key is xxhash64(gram) and the broadcast is "
-    "a bloom filter with exact confirm, same structure as the "
-    "frontier's seen-filter (frontier/bloom.py)",
+    "a bloom filter with exact confirm (the partitioned filter of "
+    "frontier/bloom.py)",
 )
 def filter_decontaminate(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")

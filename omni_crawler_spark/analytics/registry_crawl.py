@@ -100,9 +100,9 @@ def url_canonicalize(spark, sf_dir):
     ORDER BY f.doc_id
     """,
     doc="P1/J2 — seen-set anti-join: the reference's Redis SISMEMBER on "
-    "md5(url) (url_discovery_engine.py:108-115) as a left_anti join; at "
-    "10^10 scale the exact join is pre-screened by the partitioned bloom "
-    "filter (omni_crawler_spark/frontier/bloom.py)",
+    "md5(url) (url_discovery_engine.py:108-115) as a left_anti join — "
+    "the same plain exact anti-join the crawl engine's seen filter runs "
+    "(frontier/crawl.py); a bloom pre-screen saved no lookup there",
 )
 def frontier_seen_antijoin(spark, sf_dir):
     f = synthetic_frontier(spark, sf_dir).select(

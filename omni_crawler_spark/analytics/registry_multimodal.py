@@ -270,7 +270,7 @@ def pipeline_multimodal_counts(spark, sf_dir):
     "crawl_frontier_drain",
     None,
     doc="the flagship end-to-end pipeline (SURVEY §3.1): seeds → "
-    "canonicalize/hash → bloom+anti-join seen filter → robots → "
+    "canonicalize/hash → exact anti-join seen filter → robots → "
     "politeness schedule (host×lane) → batched fetch → extract/validate "
     "→ snapshot commits; parity vs the pure-Python reference simulator "
     "is pytest-verified (tests/test_frontier.py)",

@@ -1,5 +1,11 @@
 """Partitioned Bloom filter over canonical URL hashes.
 
+A library, off the crawl path: ``CrawlEngine``'s seen filter is the
+plain exact anti-join (see :func:`seen_filter` for why), and the engine
+neither reads nor writes a ``bloom`` table. The module stays because the
+benchmark's filter probe (``perfbench/crawl.py::probe_filters``) and its
+``bloom.*`` counters call it.
+
 The reference's "Bloom filter-like" seen-set is actually an exact
 Redis SET of md5 hex digests probed one network round-trip per URL
 (src/discovery/url_discovery_engine.py:108-123). At a 10^10-URL
@@ -230,9 +236,13 @@ def seen_filter(
 
     The pre-screen saves no exact lookup: a left-side condition cannot
     leave the anti-join, so every candidate is still hashed and looked
-    up in ``seen``. On ``crawl_steady`` (local[4], 4-core host) an
-    engine on the ``bloom=None`` path was no slower: 8.98 s against
-    9.75 s median per timed pass over 10 interleaved pairs."""
+    up in ``seen``. ``CrawlEngine`` therefore runs the plain anti-join
+    (the ``bloom=None`` path) and keeps no bloom. Taking the probe, the
+    per-cycle ``merge_bloom`` and the bloom rewrite off the crawl cycle
+    cut ``crawl_steady``'s median timed pass from 13.70 s to 9.48 s
+    (10 interleaved pairs, seeds 1 and 2, local[4] on a 4-core host;
+    the change won 10/10). This function stays for the benchmark's
+    filter probe."""
     if bloom is None:
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
     probed = probe_bloom(candidates, bloom, hash_col, num_buckets)

@@ -3,7 +3,7 @@
 One cycle = one pure DataFrame lineage:
 
     frontier ──dedup──▶ candidates
-      ──bloom+anti-join (seen)──▶ new URLs
+      ──exact anti-join (seen)──▶ new URLs
       ──robots filter──▶ allowed
       ──politeness schedule (host×lane)──▶ scheduled | deferred
       ──batched fetch──▶ raw pages
@@ -18,10 +18,16 @@ from the same deterministic inputs and produce identical bytes
 (asserted by the resume tests in tests/test_frontier.py).
 
 Replaces the reference's run_single_cycle
-(src/orchestrator/omni_orchestrator.py:73-117): Redis seen-set → bloom
-+ anti-join; asyncio semaphore → host×lane partitions; per-record
-SQLite writes → bulk snapshot commits; stats dict (:185-207) →
-lineage_metrics table rows per partition and phase.
+(src/orchestrator/omni_orchestrator.py:73-117): Redis seen-set → one
+exact ``left_anti`` join on ``url_hash``; asyncio semaphore →
+host×lane partitions; per-record SQLite writes → bulk snapshot
+commits; stats dict (:185-207) → lineage_metrics table rows per
+partition and phase.
+
+The seen filter has no bloom pre-screen: a pre-screen saves no exact
+lookup (a left-side condition cannot leave the anti-join) and cost a
+probe, a merge and a table rewrite per cycle. ``bloom.py`` stays as a
+library for the benchmark's filter probe.
 """
 
 from __future__ import annotations
@@ -62,7 +68,6 @@ class CrawlEngine:
     def __init__(
         self,
         warehouse: str,
-        num_buckets: int = B.DEFAULT_BUCKETS,
         cycle_budget_ms: int = 120_000,
         maintain_articles: bool = False,
         maintain_index: bool = False,
@@ -71,7 +76,8 @@ class CrawlEngine:
         trap_filter: bool = False,
     ):
         self.warehouse = warehouse
-        self.num_buckets = num_buckets
+        # read only by perfbench/crawl.py's filter probe
+        self.num_buckets = B.DEFAULT_BUCKETS
         self.cycle_budget_ms = cycle_budget_ms
         self.maintain_articles = maintain_articles
         self.maintain_index = maintain_index
@@ -100,6 +106,7 @@ class CrawlEngine:
         self.fetched = SnapshotTable(os.path.join(warehouse, "fetched"), "fetched")
         self.hosts = SnapshotTable(os.path.join(warehouse, "hosts"), "hosts")
         self.plan = SnapshotTable(os.path.join(warehouse, "plan"), "plan")
+        # never written or read here; perfbench/crawl.py reads its version
         self.bloom = SnapshotTable(os.path.join(warehouse, "bloom"), "bloom")
         self.lineage = SnapshotTable(os.path.join(warehouse, "lineage"), "lineage")
         # current-state article store (S5 ON CONFLICT DO UPDATE): one
@@ -272,10 +279,7 @@ class CrawlEngine:
         # -- job 1: the cycle plan ----------------------------------------
         seen = self._read_seen(spark)
         cand = self.candidates(spark)
-        # persisted incremental bloom: read its words, never rescan `seen`
-        # (at 10^10 rows the per-cycle full rebuild IS the bottleneck)
-        bloom = None if self.bloom.is_empty() else self.bloom.read(spark)
-        new = B.seen_filter(cand, seen, bloom, num_buckets=self.num_buckets)
+        new = cand.join(seen.select("url_hash"), "url_hash", "left_anti")
         hosts = self.hosts.read(spark)
         allowed = P.robots_filter(new, hosts)
         self.plan.overwrite(
@@ -301,7 +305,7 @@ class CrawlEngine:
         mark("fetch")
 
         # -- derived commits (scans of the two snapshots above) -----------
-        # seen / bloom / frontier / lineage derive from the committed
+        # seen / frontier / lineage derive from the committed
         # plan+fetched parquet and are mutually independent (separate
         # tables, separate op_ids) → submit them as concurrent Spark
         # jobs from driver threads; each stays atomic+idempotent.
@@ -331,18 +335,6 @@ class CrawlEngine:
             if cycle_id % self.frontier_compact_every == 0:
                 self.seen.rewrite(spark, op_id=f"{op}-seen-rewrite")
 
-        def commit_bloom() -> None:
-            # fold this cycle's attempted keys into the persisted bloom
-            self.bloom.overwrite(
-                B.merge_bloom(
-                    bloom,
-                    plan.filter(F.col("scheduled"))
-                    .select("url_hash")
-                    .distinct(),
-                    num_buckets=self.num_buckets,
-                ),
-                op_id=f"{op}-bloom",
-            )
         # next frontier = deferred rows ∪ links discovered this cycle
         # (dedup + seen-filter happen at the head of the next cycle)
         deferred = (
@@ -528,11 +520,11 @@ class CrawlEngine:
             else None
         )
 
-        with ThreadPoolExecutor(max_workers=6) as pool:
+        with ThreadPoolExecutor(max_workers=5) as pool:
             futures = [
                 pool.submit(fn)
-                for fn in (commit_seen, commit_bloom, commit_frontier,
-                           commit_lineage, commit_articles, commit_index)
+                for fn in (commit_seen, commit_frontier, commit_lineage,
+                           commit_articles, commit_index)
             ]
             for fut in futures:
                 fut.result()  # re-raise any commit failure
@@ -612,9 +604,8 @@ class CrawlEngine:
 
         1. re-seed the frontier with ``urls`` (source='recrawl',
            boosted priority so they schedule promptly);
-        2. remove their hashes from ``seen`` so the anti-join lets
-           them through (the bloom is only a pre-screen — a positive
-           goes to the exact anti-join, so no bloom rebuild needed).
+        2. remove their hashes from ``seen`` so the exact anti-join
+           lets them through (``seen`` is the only seen-state).
 
         The downstream stores then apply their replace-by-id
         semantics on the refetch: the ``articles`` keyed table
@@ -651,7 +642,7 @@ class CrawlEngine:
         )
 
     def reset_seen(self, spark: SparkSession, op_id: str) -> None:
-        """Operational re-crawl: clear the seen set (and its bloom) so
+        """Operational re-crawl: clear the seen set so
         the next cycle refetches everything still in the frontier —
         the analog of the reference's Redis cache expiry. The fetched
         log keeps every attempt; the keyed ``articles`` store then
@@ -664,14 +655,6 @@ class CrawlEngine:
         self.seen.overwrite(
             spark.createDataFrame([], "url_hash long, url_canonical string"),
             op_id=f"{op_id}-seen",
-        )
-        self.bloom.overwrite(
-            B.merge_bloom(
-                None,
-                spark.createDataFrame([], "url_hash long"),
-                num_buckets=self.num_buckets,
-            ),
-            op_id=f"{op_id}-bloom",
         )
         self.reindex_marker.append(
             spark.createDataFrame(

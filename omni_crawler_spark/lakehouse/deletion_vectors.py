@@ -29,7 +29,12 @@ UPDATE`` omni_storage.py:137-205, SQLite ``INSERT OR REPLACE``
   leg, and the fast path (no live tombstone ROWS — checked from
   parquet footers, not manifest count, since a cleared tombstone
   table keeps a nonzero version) skips both the floors join and the
-  two-leg dance.
+  two-leg dance. Both legs are pinned commits (``SnapshotTable``'s
+  one write path): the index leg applies the tombstones of one
+  version ``t`` to whatever index snapshot it commits on top of, so an
+  index append that lands meanwhile is kept, and the tombstone leg
+  clears only what version ``t`` held, so a tombstone that lands
+  meanwhile is kept.
 
 100 TB shape: the floors side is O(#ids-reindexed-since-compaction)
 and is broadcast; the index side streams with no shuffle.
@@ -135,13 +140,16 @@ class DeletionVectors:
 
     # -- reads ---------------------------------------------------------------
 
-    def floors(self, spark: SparkSession) -> DataFrame | None:
+    def floors(
+        self, spark: SparkSession, version: int | None = None
+    ) -> DataFrame | None:
         """(id, _floor) per tombstoned id — the NEWEST tombstone's
         min_gen (latest-wins by commit order), or None when no live
-        tombstones exist."""
+        tombstones exist. ``version`` reads the tombstones as of that
+        version (default latest)."""
         if self._tomb_rows() == 0:
             return None
-        t = self.tomb.read(spark)
+        t = self.tomb.read(spark, version=version)
         if "seq" not in t.columns:  # rounds-earlier tombstones
             t = t.withColumn("seq", F.lit(0))
         return t.groupBy(self.id_col).agg(
@@ -160,11 +168,14 @@ class DeletionVectors:
         """Index rows minus deletion-vector casualties. The floors
         side is broadcast (tiny by construction); the index side
         streams — no shuffle."""
-        df = self.table.read(spark)
+        return self._apply(self.table.read(spark), self.floors(spark), keep_gen)
+
+    def _apply(
+        self, df: DataFrame, fl: DataFrame | None, keep_gen: bool
+    ) -> DataFrame:
         if "gen" not in df.columns:  # pre-deletion-vector root
             df = df.withColumn("gen", F.lit(0))
         gen = F.coalesce(F.col("gen"), F.lit(0))
-        fl = self.floors(spark)
         if fl is not None:
             df = (
                 df.join(F.broadcast(fl), self.id_col, "left")
@@ -182,12 +193,32 @@ class DeletionVectors:
         compaction no-ops instead of re-running a full rewrite, and a
         crash between the legs is safe (re-applying tombstones to
         resolved rows is a no-op: every surviving row's gen >= its
-        floor)."""
+        floor).
+
+        The index leg applies the tombstones of version ``t`` (read
+        once) to the index snapshot it commits on top of, re-read when
+        its pinned commit loses a race; the tombstone leg then keeps
+        every tombstone committed after ``t``. A replay that finds the
+        index leg committed does not know which ``t`` it applied, so it
+        keeps every tombstone; the next compaction clears them."""
         op_p = None if op_id is None else f"{op_id}-post"
         op_t = None if op_id is None else f"{op_id}-tomb"
         if self._tomb_rows() == 0:
             return self.table.rewrite(spark, op_id=op_p)
-        live = self.live(spark, keep_gen=True)
-        v = self.table.overwrite(live, op_id=op_p)
-        self.tomb.overwrite(self.tomb.read(spark).limit(0), op_id=op_t)
+        t = self.tomb.current_version()
+        replay = op_p is not None and self.table.version_of(op_p) is not None
+        fl = self.floors(spark, version=t)
+        v = self.table._write(
+            "compact", op_p,
+            lambda b: self._apply(
+                self.table.read(spark, version=b), fl, keep_gen=True
+            ),
+            keep_prior=False,
+        )
+        applied = 0 if replay else t
+        self.tomb._write(
+            "compact", op_t,
+            lambda b: self.tomb.read_since(spark, applied, b),
+            keep_prior=False,
+        )
         return v

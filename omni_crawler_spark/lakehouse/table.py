@@ -456,6 +456,21 @@ class SnapshotTable:
             spark, {"data_dirs": delta, "dir_schemas": manifest.get("dir_schemas")}
         )
 
+    def read_since(
+        self, spark: SparkSession, base: int, version: int
+    ) -> DataFrame:
+        """Rows of ``version`` held in data dirs that ``base`` did not
+        list: what the commits after ``base`` added, as of ``version``
+        (``base`` 0 reads the whole version; no new dir reads empty)."""
+        manifest = self._read_manifest(version)
+        old = set(self._read_manifest(base)["data_dirs"]) if base else set()
+        new = [d for d in manifest["data_dirs"] if d not in old]
+        if not new:
+            return self.read(spark, version=version, _resolve=False).limit(0)
+        return self._scan(
+            spark, {"data_dirs": new, "dir_schemas": manifest.get("dir_schemas")}
+        )
+
     def read(
         self,
         spark: SparkSession,

@@ -258,6 +258,10 @@ def jaccard_pair_udf(shingle_k: int = 5):
     evaluates the kernel TWICE (two ArrowEvalPython nodes — once for
     the filter over every pair, once for the surviving projection);
     the function is pure, the marking only stops the duplication.
+    Use its result only in a Project (``select``/``withColumn``) or a
+    Filter: Spark's analyzer rejects a non-deterministic expression in
+    a join condition, an aggregate or a window spec, so project the
+    score into a column first and join, group or rank on that column.
     ``|A∪B|`` is computed arithmetically (|A|+|B|−|A∩B|) instead of
     materializing the union set — same value, one C-level set op per
     pair instead of two.

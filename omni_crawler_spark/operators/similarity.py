@@ -46,7 +46,13 @@ def cosine_pair_udf():
     """Vectorized cosine over an (a, b) vector-pair column: Arrow
     batch → two stacked float64 matrices → one rowwise einsum. Returns
     the RAW double; callers apply ``F.round`` JVM-side so rounding
-    semantics match the HOF/oracle version."""
+    semantics match the HOF/oracle version.
+
+    The UDF is marked non-deterministic (see below), so use its result
+    only in a Project (``select``/``withColumn``) or a Filter: Spark's
+    analyzer rejects a non-deterministic expression in a join
+    condition, an aggregate or a window spec. Project the score into a
+    column first and join, group or rank on that column."""
 
     @pandas_udf(DoubleType())
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:

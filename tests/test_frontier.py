@@ -462,16 +462,20 @@ def test_resume_continues_from_snapshot(spark, tmp_path):
 
 
 def test_incremental_bloom_covers_all_seen(spark, tmp_path):
-    """After multiple cycles the persisted bloom must report
-    maybe_seen for EVERY seen key (no false negatives across merges) —
-    the correctness contract of the incremental maintenance."""
+    """Folding each cycle's seen keys into the bloom through chained
+    ``merge_bloom`` calls must report maybe_seen for EVERY seen key (no
+    false negatives across merges) — the correctness contract of the
+    incremental maintenance. The keys are a real crawl's: the seen
+    commits of three engine cycles."""
     wh = str(tmp_path / "wh")
     eng = CrawlEngine(wh, cycle_budget_ms=4_000)
     eng.bootstrap(generate_seeds(spark, 600), generate_hosts(spark))
+    blm = None
     for c in (1, 2, 3):
         eng.run_cycle(spark, c)
+        v = eng.seen.version_of(f"cycle-{c:05d}-seen")
+        blm = B.merge_bloom(blm, eng.seen.read_delta(spark, v).select("url_hash"))
     seen = eng.seen.read(spark).select("url_hash")
-    blm = eng.bloom.read(spark)
     probed = B.probe_bloom(seen, blm)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     # and unseen keys still mostly clear (fpp sane after merges)
@@ -480,6 +484,35 @@ def test_incremental_bloom_covers_all_seen(spark, tmp_path):
     )
     fp = B.probe_bloom(unseen, blm).filter(F.col("maybe_seen")).count()
     assert fp / 3000 < 0.05
+
+
+def test_engine_neither_reads_nor_writes_the_bloom(spark, tmp_path):
+    """The seen filter is the exact anti-join alone: a warehouse whose
+    ``bloom`` table holds an old-format ``bitmap binary`` row (which
+    ``bloom.py`` refuses to probe or merge) crawls three cycles without
+    error, leaves the bloom table's version and files untouched, and
+    ends with the seen set and crawl order of a fresh warehouse."""
+    seeds, hosts = generate_seeds(spark, 400), generate_hosts(spark)
+    eng = CrawlEngine(str(tmp_path / "old"), cycle_budget_ms=BUDGET_MS)
+    eng.bloom.overwrite(spark.createDataFrame(
+        [(0, 1, 64, 1, bytearray(8))],
+        "bucket int, n_keys long, m_bits long, k_hashes int, bitmap binary",
+    ))
+    eng.bootstrap(seeds, hosts)
+    v_bloom = eng.bloom.current_version()
+    bloom_data = tmp_path / "old" / "bloom" / "data"
+    files = sorted(p.relative_to(bloom_data) for p in bloom_data.rglob("*.parquet"))
+    ref = CrawlEngine(str(tmp_path / "fresh"), cycle_budget_ms=BUDGET_MS)
+    ref.bootstrap(seeds, hosts)
+    for c in range(1, N_CYCLES + 1):
+        eng.run_cycle(spark, c, collect_stats=False)
+        ref.run_cycle(spark, c, collect_stats=False)
+    assert eng.bloom.current_version() == v_bloom
+    assert sorted(
+        p.relative_to(bloom_data) for p in bloom_data.rglob("*.parquet")
+    ) == files
+    assert ref.bloom.is_empty()
+    assert _order_and_seen(spark, eng) == _order_and_seen(spark, ref)
 
 
 def test_recrawl_updates_articles_in_place(spark, tmp_path):

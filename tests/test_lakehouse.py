@@ -356,6 +356,48 @@ def test_compact_keeps_racing_upsert(spark, tmp_path):
     assert other.committed_op_ids() >= {"racer", "cp"}
 
 
+def _dv(tmp_path):
+    from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
+
+    root = str(tmp_path / "ix")
+    return DeletionVectors(SnapshotTable(root, "ix"), root, "id")
+
+
+def test_dv_compact_keeps_racing_append(spark, tmp_path):
+    """An index append that lands after ``DeletionVectors.compact``
+    read the index must survive: the index leg's pinned commit loses
+    and it re-applies the tombstones to the new snapshot."""
+    dv, other = _dv(tmp_path), _dv(tmp_path)
+    dv.append(spark.range(0, 3))
+    dv.delete(spark.range(1, 2))
+    _race_after_read(
+        dv.table, lambda: other.append(spark.range(100, 102), op_id="racer")
+    )
+    dv.compact(spark, op_id="cp")
+    assert sorted(r.id for r in other.live(spark).collect()) == [0, 2, 100, 101]
+    assert sorted(r.id for r in other.table.read(spark).collect()) == [
+        0, 2, 100, 101
+    ]
+    assert other._tomb_rows() == 0
+    assert other.table.committed_op_ids() >= {"racer", "cp-post"}
+
+
+def test_dv_compact_keeps_racing_tombstone(spark, tmp_path):
+    """A tombstone that lands after ``DeletionVectors.compact`` read
+    the tombstones must survive the tombstone leg: only what the index
+    leg applied is cleared."""
+    dv, other = _dv(tmp_path), _dv(tmp_path)
+    dv.append(spark.range(0, 4))
+    dv.delete(spark.range(1, 2))
+    _race_after_read(
+        dv.tomb, lambda: other.delete(spark.range(2, 3), op_id="racer")
+    )
+    dv.compact(spark, op_id="cp")
+    assert sorted(r.id for r in other.live(spark).collect()) == [0, 3]
+    assert [r.id for r in other.tomb.read(spark).collect()] == [2]
+    assert other.tomb.committed_op_ids() >= {"racer", "cp-tomb"}
+
+
 def test_one_write_path():
     """Every writer goes through ``_write``: the table module has one
     DataFrame ``.write`` and one ``_commit`` call site, both in it."""
