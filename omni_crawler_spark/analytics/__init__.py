@@ -88,7 +88,6 @@ _DRIVER_WINDOW_PRIORITY = [
     # stable r03-green single-aggregation shape, locally re-verified
     # every session)
     "dedup_cluster_cc",
-    "dedup_cluster_cc_star",
     "enrich_entities_regex",
     "filter_decontaminate",
     "pipeline_pretrain_corpus",

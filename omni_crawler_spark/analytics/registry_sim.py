@@ -720,57 +720,6 @@ def pipeline_training_data(spark, sf_dir):
     )
 
 
-_CC_ORACLE = """
-    WITH RECURSIVE
-    e1 AS (SELECT a.doc_id AS a, b.doc_id AS b FROM documents a
-           JOIN documents b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 4 < 2),
-    e2 AS (SELECT a.doc_id AS a, b.doc_id AS b FROM documents a
-           JOIN documents b ON b.doc_id = a.doc_id + 10
-           WHERE a.doc_id % 20 = 0),
-    edges AS (SELECT * FROM e1 UNION ALL SELECT * FROM e2),
-    und AS (SELECT a AS src, b AS dst FROM edges
-            UNION ALL SELECT b, a FROM edges),
-    walk(node, label) AS (
-      SELECT DISTINCT src, src FROM und
-      UNION
-      SELECT u.dst, w.label FROM walk w JOIN und u ON u.src = w.node
-    )
-    SELECT node AS doc_id, MIN(label) AS cluster_id
-    FROM walk GROUP BY node ORDER BY doc_id
-    """
-
-
-@register(
-    "dedup_cluster_cc_star",
-    _CC_ORACLE,
-    doc="connected components by alternating large-star/small-star "
-    "contraction (operators/dedup.py::duplicate_clusters_star, Kiveris "
-    "et al. SoCC'14) — the O(log n)-round 10^10-edge scale path beside "
-    "the O(diameter) label propagation of dedup_cluster_cc; same "
-    "deterministic synthetic edge graph, same recursive-CTE oracle, so "
-    "the driver verifies BOTH implementations against the same "
-    "transitive closure",
-)
-def dedup_cluster_cc_star(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    a, b = d.alias("a"), d.alias("b")
-    e1 = a.join(
-        b,
-        (F.col("b.doc_id") == F.col("a.doc_id") + 1)
-        & (F.pmod(F.col("a.doc_id"), 4) < 2),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    e2 = a.join(
-        b,
-        (F.col("b.doc_id") == F.col("a.doc_id") + 10)
-        & (F.pmod(F.col("a.doc_id"), 20) == 0),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    clusters = D.duplicate_clusters_star(e1.unionAll(e2))
-    return clusters.select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    ).orderBy("doc_id")
-
-
 @register(
     "dedup_embedding_pipeline",
     None,

@@ -59,19 +59,6 @@ def rule_pattern(path: str) -> str | None:
     return "^" + pat + ("$" if anchor else "")
 
 
-def parse_robots_txt(robots_txt: "F.Column") -> "F.Column":
-    """robots.txt text → array of Disallow path prefixes. The legacy
-    single-group subset (kept for callers that only need prefixes);
-    the full per-agent/Allow-precedence path is
-    ``robots_rules_for_agent`` + ``robots_verdict``. Pure column
-    expression: one regexp_extract_all over the raw file text,
-    empty-prefix rules (allow-all) dropped."""
-    rules = F.regexp_extract_all(
-        robots_txt, F.lit(r"(?im)^\s*Disallow:\s*(\S+)\s*$"), F.lit(1)
-    )
-    return F.filter(rules, lambda p: (p != "") & (p != "/$"))
-
-
 def parse_robots_groups(
     text: str,
 ) -> list[tuple[list[str], list[tuple[str, bool]], float | None]]:
@@ -79,7 +66,8 @@ def parse_robots_groups(
     ...] with urllib.robotparser's grouping rules: consecutive
     User-agent lines head a group; a User-agent line after rules
     starts a new group; blank lines end a group; ``#`` starts a
-    comment. An empty Disallow value is the explicit allow-all rule
+    comment, and a comment-only line is skipped (it does not end the
+    group). An empty Disallow value is the explicit allow-all rule
     (path '', allow). ``Crawl-delay`` (the de-facto extension the
     reference's config flag stood in for) is captured per group."""
     groups: list[tuple[list[str], list[tuple[str, bool]], float | None]] = []
@@ -94,10 +82,10 @@ def parse_robots_groups(
         agents, rules, delay = [], [], None
 
     for raw in (text or "").splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line:
+        if not raw.strip():
             _flush()
             continue
+        line = raw.split("#", 1)[0].strip()
         if ":" not in line:
             continue
         key, val = line.split(":", 1)

@@ -89,18 +89,6 @@ def is_error_page(text: Column) -> Column:
     return cond
 
 
-def extract_title(html: Column, domain: Column) -> Column:
-    """<title> extraction with whitespace collapse, 500-char cap and
-    ``Article from {domain}`` fallback (src/crawler/simple_crawler.py:103-120)."""
-    raw = F.regexp_extract(html, r"(?is)<title[^>]*>(.*?)</title>", 1)
-    cleaned = F.substring(
-        F.trim(F.regexp_replace(raw, r"\s+", " ")), 1, 500
-    )
-    return F.when(cleaned == "", F.concat(F.lit("Article from "), domain)).otherwise(
-        cleaned
-    )
-
-
 def clean_html(html: Column) -> Column:
     """Regex HTML→text cascade mirroring the reference's fallback
     cleaner (src/utils/content_cleaner.py:276-288) plus its

@@ -14,9 +14,12 @@ UPDATE`` omni_storage.py:137-205, SQLite ``INSERT OR REPLACE``
 - the tombstone table records ``(id, min_gen, seq)``: rows of that id
   with ``gen < min_gen`` are dead. Resolution is LATEST-WINS on
   ``seq`` (the tombstone's commit order), NOT max(min_gen) — so a
-  ``delete`` (min_gen = 2^31−1) followed by a later ``reindex``
-  RESURRECTS the doc: the newer tombstone's floor equals the fresh
-  generation and the new rows pass it;
+  ``delete`` (min_gen = the first generation not yet written)
+  followed by a later ``reindex`` RESURRECTS the doc: the newer
+  tombstone's floor equals the fresh generation and the new rows pass
+  it. The delete's floor already spares those rows, so a ``compact``
+  between the reindex's two legs keeps them too. Tombstones written
+  by older code carry the floor 2^31−1 and keep it;
 - ``reindex`` commits the new rows first, the tombstone second, each
   under an op_id derived from the caller's. The tombstone's floor is
   recovered FROM THE COMMITTED ROWS (read_delta of the postings
@@ -48,10 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.lakehouse.table import SnapshotTable
-
-#: tombstone floor for a plain delete: no live generation remains
-#: (until a later reindex writes a newer tombstone)
-DELETED = 2**31 - 1
 
 
 class DeletionVectors:
@@ -135,8 +134,10 @@ class DeletionVectors:
         )
 
     def delete(self, ids: DataFrame, op_id: str | None = None) -> None:
-        """Drop ids from the index (rows reclaimed at compact)."""
-        self._tombstone(ids, DELETED, op_id)
+        """Drop ids from the index (rows reclaimed at compact). The
+        floor is the first generation not yet written: every row that
+        exists now dies, a row written later (a reindex) lives."""
+        self._tombstone(ids, self.next_gen(), op_id)
 
     # -- reads ---------------------------------------------------------------
 

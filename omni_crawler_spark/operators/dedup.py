@@ -628,7 +628,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """(node, cluster_id) for every node in the pair graph, where
     cluster_id = MIN node id of its connected component — turns
@@ -636,13 +635,19 @@ def duplicate_clusters(
     keep-one-per-cluster superset of minhash_dedup's per-edge rule).
 
     Algorithm: deterministic min-label propagation — each round every
-    node takes the min label among itself and its neighbors; converges
-    in O(diameter) rounds (near-dup components are small cliques, so
-    2-3 rounds in practice; ``max_iters`` bounds adversarial chains).
-    Each round is two shuffles (edge join + min aggregation) and the
-    label set is localCheckpoint'ed to truncate the iterative lineage.
-    At 10^10 edges you would switch to the large-star/small-star
-    variant (O(log n) rounds) — same join shapes.
+    node takes the min label among itself and its neighbors, and the
+    loop runs until no label changes. It always ends: a label only
+    decreases and is always some node's id, so a component settles in
+    at most diameter + 1 rounds. A round costs one hop, so a
+    long-diameter graph costs one round per hop (near-dup components
+    are small cliques: 2-3 rounds in practice). Each round is two
+    shuffles (edge join + min aggregation) and the label set is
+    localCheckpoint'ed to truncate the iterative lineage. A graph that
+    needs O(log n) rounds regardless of diameter wants large-star /
+    small-star contraction (Kiveris et al., SoCC'14); it lived in this
+    module until the commit after 872ae2a (``git show
+    872ae2a:omni_crawler_spark/operators/dedup.py``) and ran more Spark
+    jobs than this loop on both registry queries that build clusters.
     """
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -656,7 +661,7 @@ def duplicate_clusters(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    while True:
         msgs = und.join(
             labels.withColumnRenamed("node", "src"), "src"
         ).select(F.col("dst").alias("node"), "label")
@@ -679,96 +684,3 @@ def duplicate_clusters(
     return labels.select(
         F.col("node"), F.col("label").alias("cluster_id")
     )
-
-
-def duplicate_clusters_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the 10^10-edge scale path beside ``duplicate_clusters``.
-
-    Min-label propagation converges in O(diameter) rounds: a
-    2^20-node chain needs 2^20 rounds. Star contraction converges in
-    O(log n) rounds regardless of shape, because each round rewires
-    every edge toward the component minimum:
-
-    - large-star: per node u over the UNDIRECTED neighborhood,
-      connect every strictly-larger neighbor to m = min(Γ(u) ∪ {u});
-    - small-star: per node u over edges oriented (larger → smaller),
-      connect every smaller neighbor AND u itself to the minimum.
-
-    Both steps are groupBy-min + an equi-join re-emission — the same
-    two-shuffle round shape as label propagation, but the edge list
-    itself contracts. Convergence = the oriented edge set is stable
-    (order-insensitive xxhash64-sum + count checksum, checked per
-    round); at the fixpoint every edge is (node → component-min), so
-    the final projection IS the label assignment. Output matches
-    ``duplicate_clusters`` exactly: (node, cluster_id = component
-    min), one row per node incl. roots (pytest-pinned equivalence on
-    cliques/bridges/chains/random graphs)."""
-    E = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = E.select(F.col("u").alias("node")).union(
-        E.select(F.col("v").alias("node"))
-    ).distinct().localCheckpoint()
-
-    def checksum(edges: DataFrame) -> tuple:
-        # order-insensitive edge-set fingerprint; bit_xor cannot
-        # overflow (ANSI mode throws on a plain long sum)
-        r = edges.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (r.n, r.h)
-
-    prev = None
-    for _ in range(max_iters):
-        # ---- large-star ------------------------------------------------
-        und = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            und.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("u", "_mn").alias("m"))
-        )
-        ls = (
-            und.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star ------------------------------------------------
-        o = ls.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins2 = o.groupBy("u").agg(F.min("v").alias("m"))
-        ss_neighbors = (
-            o.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        ss_self = mins2.select("u", F.col("m").alias("v"))
-        E_new = (
-            ss_neighbors.union(ss_self)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()  # truncate iterative lineage
-        )
-        cs = checksum(E_new)
-        E = E_new
-        if cs == prev:
-            break
-        prev = cs
-    # fixpoint: E = (node → component min). Roots carry their own id.
-    labels = E.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    roots = nodes.join(
-        labels.select(F.col("node")), "node", "left_anti"
-    ).select("node", F.col("node").alias("cluster_id"))
-    return labels.unionByName(roots)

@@ -107,29 +107,6 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Vectorized random-hyperplane LSH signature: one int bucket per
-    vector. Arrow batches → one numpy matmul per batch (no per-row
-    Python)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @pandas_udf(LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if m.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        bits = (m @ planes.T) > 0
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return bucket
-
-
 def ann_lsh_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -144,8 +121,10 @@ def ann_lsh_topk(
     ~corpus/256 candidates instead of the full corpus. Recall is
     tunable via n_planes (fewer planes → bigger buckets → higher
     recall, more work)."""
-    bucket = lsh_bucket_udf(dim, n_planes)
-    tagged = embeddings.withColumn("bucket", bucket(F.col(vec_col)))
+    bucket = lsh_table_buckets_udf(dim, n_planes, 1)
+    tagged = embeddings.withColumn(
+        "bucket", F.element_at(bucket(F.col(vec_col)), 1)
+    )
     q = tagged.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"), "bucket"
     )

@@ -231,10 +231,30 @@ def test_duplicate_clusters_min_label(spark):
     }
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """large-star/small-star CC (O(log n) rounds) must produce the
-    exact labels of min-label propagation on cliques, bridges, long
-    chains (the propagation worst case), and a seeded random graph."""
+def _union_find_labels(edges):
+    """node -> min node id of its component, by plain union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_duplicate_clusters_matches_union_find(spark):
+    """Label propagation runs until no label changes, so it gives the
+    union-find labels on cliques, bridges, long chains (one round per
+    hop), a seeded random graph, a 21-edge chain (one hop more than
+    a 20-round cap reaches) and a node whose only pair is a self
+    pair."""
     import random
 
     rng = random.Random(7)
@@ -248,27 +268,14 @@ def test_star_contraction_matches_label_propagation(spark):
         ],
         "two_rings": [(i, (i + 1) % 10) for i in range(10)]
         + [(100 + i, 100 + (i + 1) % 7) for i in range(7)],
+        "chain_21": [(i, i + 1) for i in range(21)],
+        "self_pair": [(5, 5), (7, 8)],
     }
     for name, edges in graphs.items():
-        edges = [(a, b) for a, b in edges if a != b]
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        lp = {r.node: r.cluster_id
-              for r in D.duplicate_clusters(pairs, max_iters=200).collect()}
-        star = {r.node: r.cluster_id
-                for r in D.duplicate_clusters_star(pairs).collect()}
-        assert star == lp, name
-
-
-def test_star_contraction_round_count(spark):
-    """The point of star contraction: a 64-node chain converges in
-    O(log n) rounds, not O(n). Count rounds via the checksum loop by
-    instrumenting max_iters: the result at max_iters=12 must already
-    be the fixpoint (label propagation would need ~64 rounds)."""
-    edges = [(i, i + 1) for i in range(64)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.cluster_id
-           for r in D.duplicate_clusters_star(pairs, max_iters=12).collect()}
-    assert got == {n: 0 for n in range(65)}
+        got = {r.node: r.cluster_id
+               for r in D.duplicate_clusters(pairs).collect()}
+        assert got == _union_find_labels(edges), name
 
 
 def test_duplicate_clusters_with_minhash_pipeline(corpus):

@@ -398,6 +398,27 @@ def test_dv_compact_keeps_racing_tombstone(spark, tmp_path):
     assert other.tomb.committed_op_ids() >= {"racer", "cp-tomb"}
 
 
+def test_dv_compact_between_reindex_legs_keeps_resurrected_id(spark, tmp_path):
+    """A compaction that runs between ``reindex``'s row leg and its
+    tombstone leg applies the earlier delete's floor to the fresh rows.
+    That floor must not reach them: the delete's floor is the first
+    generation not yet written, so rows written after it stay live."""
+    dv, other = _dv(tmp_path), _dv(tmp_path)
+    dv.append(spark.range(0, 3))
+    dv.delete(spark.range(1, 2))
+    tombstone = dv._tombstone
+
+    def compact_then_tombstone(*a, **kw):
+        other.compact(spark, op_id="cp")
+        tombstone(*a, **kw)
+
+    dv._tombstone = compact_then_tombstone  # type: ignore[method-assign]
+    dv.reindex(spark, spark.range(1, 2), spark.range(1, 2), op_id="rx")
+    assert sorted(r.id for r in other.live(spark).collect()) == [0, 1, 2]
+    other.compact(spark, op_id="cp2")
+    assert sorted(r.id for r in other.table.read(spark).collect()) == [0, 1, 2]
+
+
 def test_one_write_path():
     """Every writer goes through ``_write``: the table module has one
     DataFrame ``.write`` and one ``_commit`` call site, both in it."""

@@ -123,7 +123,10 @@ def test_zero_delay_host_all_immediate(spark, hosts):
     assert max(r.start_ms for r in sched) <= 8
 
 
-def test_parse_robots_txt(spark):
+def test_robots_rules_for_agent_line_forms():
+    """Lower-case directives, an empty ``Disallow:`` (allow-all) and
+    trailing spaces, in file order; a Crawl-delay line adds no rule,
+    and a ``#`` comment line is skipped without ending the group."""
     txt = (
         "User-agent: *\n"
         "Disallow: /private\n"
@@ -134,10 +137,13 @@ def test_parse_robots_txt(spark):
         "Crawl-delay: 5\n"
         "Disallow: /search \n"
     )
-    df = spark.createDataFrame([(txt,)], "robots_txt string").select(
-        P.parse_robots_txt(F.col("robots_txt")).alias("rules")
-    )
-    assert df.collect()[0].rules == ["/private", "/tmp/cache", "/search"]
+    assert P.robots_rules_for_agent(txt, "x") == [
+        ("/private", False),
+        ("/tmp/cache", False),
+        ("/public", True),
+        ("", True),
+        ("/search", False),
+    ]
 
 
 def test_robots_filter_from_raw_txt(spark):
@@ -231,6 +237,7 @@ def test_robots_verdicts_match_urllib_robotparser(spark):
         "Disallow: /private\n\nUser-agent: *\nDisallow: /\n",
         "User-agent: *\nAllow: /a/b\nDisallow: /a\nDisallow: /c\n",
         "User-agent: other-bot\nDisallow: /\n\nUser-agent: *\nDisallow:\n",
+        "User-agent: *\nDisallow: /private\n# note\nDisallow: /tmp/cache\n",
     ]
     paths = [
         "/", "/private", "/private/ok", "/private/ok/deep", "/privateer",
