@@ -110,7 +110,7 @@ def _drain_once(spark) -> dict:
             generate_seeds(spark, DRAIN_URLS, partitions=32), generate_hosts(spark)
         )
         t0 = time.time()
-        stats = eng.run_cycle(spark, 1, collect_stats=False)
+        stats = eng.run_cycle(spark, 1)
         wall = time.time() - t0
         return {
             "wall_sec": round(wall, 3),

@@ -329,7 +329,7 @@ def pipeline_recrawl(spark, sf_dir):
     eng.bootstrap(
         generate_seeds(spark, 150, partitions=4), generate_hosts(spark)
     )
-    eng.run_cycle(spark, 1, collect_stats=False)
+    eng.run_cycle(spark, 1)
     targets = (
         eng.fetched.read(spark)
         .filter(F.col("valid"))
@@ -339,7 +339,7 @@ def pipeline_recrawl(spark, sf_dir):
         .localCheckpoint()
     )
     eng.recrawl(spark, targets.select("url"), op_id="rc-1")
-    eng.run_cycle(spark, 2, collect_stats=False)
+    eng.run_cycle(spark, 2)
     t_hashes = targets.select("url_hash")
     refetched = (
         eng.fetched.read(spark)
@@ -351,7 +351,7 @@ def pipeline_recrawl(spark, sf_dir):
     )
     probe_cols = ["url_hash", "fld", "boost10", "tok"]
     live = (
-        eng.index_dv.live(spark)
+        eng.index.postings(spark)
         .join(F.broadcast(t_hashes), "url_hash", "left_semi")
         .select(*probe_cols)
     )

@@ -43,6 +43,7 @@ from omni_crawler_spark.frontier import politeness as P
 from omni_crawler_spark.frontier.fetch import fetch_extract_validate
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.lakehouse import SnapshotTable
+from omni_crawler_spark.search_index import SearchIndex
 from omni_crawler_spark.session import spread
 
 
@@ -119,22 +120,16 @@ class CrawlEngine:
             key=["url_hash"], on_conflict="update",
         )
         # full-text inverted index over crawled articles (the engine's
-        # ES replacement, SURVEY §3.3): posting rows appended per
-        # cycle from that cycle's valid fetches — O(delta) index
-        # maintenance, probed by search() via the vocabulary-bounded
-        # fuzzy expansion of omni_crawler_spark/search.py. Re-crawled
-        # pages replace their postings through the shared
-        # deletion-vector machinery (lakehouse/deletion_vectors.py):
-        # probes anti-filter stale postings with one BROADCAST join
-        # of the tombstone floors instead of the corpus-sized
-        # newest-cycle groupBy the pre-round-5 probe paid.
-        from omni_crawler_spark.lakehouse.deletion_vectors import (
-            DeletionVectors,
+        # ES replacement, SURVEY §3.3): a SearchIndex whose postings
+        # run_cycle appends per cycle from that cycle's valid fetches
+        # — O(delta) index maintenance. Re-crawled pages replace their
+        # postings through the index's deletion vectors, so probes
+        # anti-filter stale postings with one broadcast join.
+        self.index = SearchIndex(
+            os.path.join(warehouse, "index"),
+            fields={"title": 30, "content": 20, "caption": 15},
+            id_col="url_hash",
         )
-
-        index_root = os.path.join(warehouse, "index")
-        self.index = SnapshotTable(index_root, "index")
-        self.index_dv = DeletionVectors(self.index, index_root, "url_hash")
         # which upcoming fetches are RE-crawls (their postings must be
         # replaced, not appended): recrawl() records the exact hashes,
         # reset_seen() records an 'all' marker. Empty on a pure
@@ -156,6 +151,26 @@ class CrawlEngine:
                 "url_hash": U.url_hash64(F.col("url_canonical")),
                 "host": U.url_host(F.col("url_canonical")),
             }
+        )
+
+    @classmethod
+    def _frontier_rows(
+        cls,
+        urls: DataFrame,
+        source: str,
+        priority: int,
+        discovery_ts: "F.Column",
+    ) -> DataFrame:
+        """Frontier rows for the ``url`` column of ``urls``: the given
+        source, priority and discovery time, no title."""
+        return cls._prepare_seeds(
+            urls.select(
+                "url",
+                F.lit(source).alias("source"),
+                F.lit(priority).alias("priority"),
+                discovery_ts.alias("discovery_ts"),
+                F.lit(None).cast("string").alias("title"),
+            )
         )
 
     def _admit(self, rows: DataFrame) -> DataFrame:
@@ -181,9 +196,7 @@ class CrawlEngine:
         self.hosts.overwrite(hosts, op_id="bootstrap-hosts")
         self._seed_robots_sitemaps(hosts)
 
-    def _seed_robots_sitemaps(
-        self, hosts: DataFrame, discovery_ts: str = "2025-01-01 00:00:00"
-    ) -> None:
+    def _seed_robots_sitemaps(self, hosts: DataFrame) -> None:
         """robots ``Sitemap:`` URLs → frontier seeds (priority 10,
         source 'sitemap-robots'). The sitemap URL itself is fetched
         like any page; its <loc> entries come back as that fetch's
@@ -198,16 +211,12 @@ class CrawlEngine:
             F.explode(
                 P.robots_sitemaps_udf()(F.col("robots_txt"))
             ).alias("url")
-        ).select(
-            "url",
-            F.lit("sitemap-robots").alias("source"),
-            F.lit(10).alias("priority"),
-            F.to_timestamp(F.lit(discovery_ts)).alias("discovery_ts"),
-            F.lit(None).cast("string").alias("title"),
         )
-        self.frontier.append(
-            self._admit(self._prepare_seeds(sm)), op_id="bootstrap-sitemaps"
+        rows = self._frontier_rows(
+            sm, "sitemap-robots", 10,
+            F.to_timestamp(F.lit("2025-01-01 00:00:00")),
         )
+        self.frontier.append(self._admit(rows), op_id="bootstrap-sitemaps")
 
     def add_seeds(self, seeds: DataFrame, op_id: str) -> None:
         """Append more discovery seeds mid-crawl (idempotent)."""
@@ -246,9 +255,13 @@ class CrawlEngine:
         )
 
     def run_cycle(
-        self, spark: SparkSession, cycle_id: int, collect_stats: bool = True
+        self,
+        spark: SparkSession,
+        cycle_id: int,
+        collect_stats: bool = False,  # unused; perfbench/crawl.py passes it
     ) -> dict:
-        """Run one crawl cycle; returns the cycle's phase counts.
+        """Run one crawl cycle; returns the cycle's phase timings,
+        scheduled and stored counts, and frontier-commit bytes.
 
         The cycle is TWO materialization jobs, everything else derives
         from their committed parquet:
@@ -268,6 +281,9 @@ class CrawlEngine:
         a crash between any two commits replays safely."""
         t0 = time.time()
         op = f"cycle-{cycle_id:05d}"
+        # one maintenance cadence: every Nth cycle compacts the
+        # frontier, seen, index and articles and expires old snapshots
+        is_compact = cycle_id % self.frontier_compact_every == 0
         stats: dict[str, float | int] = {"cycle_id": cycle_id}
         _t = [time.time()]
 
@@ -278,8 +294,9 @@ class CrawlEngine:
 
         # -- job 1: the cycle plan ----------------------------------------
         seen = self._read_seen(spark)
-        cand = self.candidates(spark)
-        new = cand.join(seen.select("url_hash"), "url_hash", "left_anti")
+        new = self.candidates(spark).join(
+            seen.select("url_hash"), "url_hash", "left_anti"
+        )
         hosts = self.hosts.read(spark)
         allowed = P.robots_filter(new, hosts)
         self.plan.overwrite(
@@ -332,7 +349,7 @@ class CrawlEngine:
             # file compaction on the same cadence as the frontier:
             # `seen` is read on EVERY cycle's anti-join, and one data
             # dir per cycle makes that read list O(cycles) directories
-            if cycle_id % self.frontier_compact_every == 0:
+            if is_compact:
                 self.seen.rewrite(spark, op_id=f"{op}-seen-rewrite")
 
         # next frontier = deferred rows ∪ links discovered this cycle
@@ -355,25 +372,14 @@ class CrawlEngine:
         # url. Trap admission (when enabled) is part of this map-side
         # chain — rejected links cost one predicate, never a frontier row.
         discovered = self._admit(
-            fetched_now.select(F.explode("links").alias("url"))
-            .withColumn("url_canonical", U.canonicalize_url(F.col("url")))
-            .withColumns(
-                {
-                    "url_hash": U.url_hash64(F.col("url_canonical")),
-                    "host": U.url_host(F.col("url_canonical")),
-                    "priority": F.lit(3),
-                    "source": F.lit("link"),
-                    "discovery_ts": F.to_timestamp(
-                        F.lit("2025-06-01 00:00:00")
-                    ) + F.make_interval(days=F.lit(cycle_id)),
-                    "title": F.lit(None).cast("string"),
-                }
-            )
-            .select(
-                "url_hash", "url_canonical", "host", "priority",
-                "discovery_ts", "source", "url", "title",
+            self._frontier_rows(
+                fetched_now.select(F.explode("links").alias("url")),
+                "link", 3,
+                F.to_timestamp(F.lit("2025-06-01 00:00:00"))
+                + F.make_interval(days=F.lit(cycle_id)),
             )
         )
+
         def commit_frontier() -> None:
             # O(delta) incremental commit: append ONLY this cycle's
             # discovered links. The frontier is an append-only
@@ -389,7 +395,7 @@ class CrawlEngine:
             # set (deferred ∪ discovered — exactly the old overwrite)
             # to bound the log scan; both commit forms are idempotent
             # under the same op_id, so crash-replay is unchanged.
-            if cycle_id % self.frontier_compact_every == 0:
+            if is_compact:
                 self.frontier.overwrite(
                     deferred.unionByName(discovered), op_id=f"{op}-frontier"
                 )
@@ -434,14 +440,11 @@ class CrawlEngine:
 
             valid_now = fetched_now.filter(F.col("valid"))
             postings = build_inverted_index(
-                valid_now,
-                fields={"title": 30, "content": 20, "caption": 15},
-                id_col="url_hash",
+                valid_now, self.index.fields, self.index.id_col
             )
             re_ids = self._pending_reindex_ids(spark, valid_now)
             if re_ids is None and (
-                self.index_dv.table.version_of(f"{op}-index-post")
-                is not None
+                self.index.table.version_of(f"{op}-index-post") is not None
             ):
                 # crash-replay of a reindex cycle whose marker was
                 # already consumed: the marker now reads empty, but
@@ -451,7 +454,7 @@ class CrawlEngine:
                 # legs then no-op under their committed op_ids.
                 re_ids = spark.createDataFrame([], "url_hash long")
             if re_ids is None:
-                self.index_dv.append(postings, op_id=f"{op}-index")
+                self.index.dv.append(postings, op_id=f"{op}-index")
             else:
                 re_ids = re_ids.localCheckpoint()
                 unchanged_recrawl = (
@@ -476,15 +479,15 @@ class CrawlEngine:
                         "url_hash",
                         "left_anti",
                     )
-                self.index_dv.reindex(
+                self.index.dv.reindex(
                     spark, postings, re_ids, op_id=f"{op}-index"
                 )
                 self._consume_reindex_marker(spark, valid_now, op)
-            if cycle_id % self.frontier_compact_every == 0:
+            if is_compact:
                 # compaction cadence: fold append-per-cycle dirs and
                 # apply the deletion vectors physically, bounding the
                 # probe-time read like the frontier log's compaction
-                self.index_dv.compact(spark, op_id=f"{op}-index-fold")
+                self.index.compact(spark, op_id=f"{op}-index-fold")
 
         def commit_articles() -> None:
             if not self.maintain_articles:
@@ -494,7 +497,7 @@ class CrawlEngine:
                 op_id=f"{op}-articles",
             )
             # periodic maintenance: bound merge-on-read amplification
-            if cycle_id % 8 == 0:
+            if is_compact:
                 self.articles.compact(spark, op_id=f"{op}-compact")
 
         # HTTP-304 analog (reference models carry the latent
@@ -537,7 +540,6 @@ class CrawlEngine:
         # the frontier size.
         v_frontier = self.frontier.version_of(f"{op}-frontier")
         frontier_bytes = self.frontier.delta_bytes(v_frontier)
-        is_compact = cycle_id % self.frontier_compact_every == 0
         stats["frontier_commit_bytes"] = frontier_bytes
         stats["frontier_commit_op"] = "overwrite" if is_compact else "append"
         self.lineage.append(
@@ -581,9 +583,6 @@ class CrawlEngine:
             ).collect()[0].v
             or 0
         )
-        if collect_stats:
-            stats["n_candidates"] = cand.count()
-            stats["n_new"] = new.count()
         stats["wall_sec"] = round(time.time() - t0, 3)
         return stats
 
@@ -592,8 +591,6 @@ class CrawlEngine:
         spark: SparkSession,
         urls: DataFrame,
         op_id: str,
-        priority: int = 10,
-        discovery_ts: str = "2025-07-01 00:00:00",
     ) -> None:
         """Route KNOWN (already-crawled) URLs back through the next
         cycle — the reference's implicit re-crawl story made explicit
@@ -603,30 +600,25 @@ class CrawlEngine:
         overwrites in place). Two idempotent commits:
 
         1. re-seed the frontier with ``urls`` (source='recrawl',
-           boosted priority so they schedule promptly);
+           boosted priority 10 so they schedule promptly);
         2. remove their hashes from ``seen`` so the exact anti-join
            lets them through (``seen`` is the only seen-state).
 
         The downstream stores then apply their replace-by-id
         semantics on the refetch: the ``articles`` keyed table
-        upserts last-writer-wins, and the inverted ``index`` resolves
-        to the newest cycle's postings (stale tokens stop matching —
-        frontier/crawl.py::search). The seen rewrite is O(seen): at a
+        upserts last-writer-wins, and the ``index`` tombstones the
+        stale postings of changed pages (stale tokens stop matching —
+        :meth:`search`). The seen rewrite is O(seen): at a
         10^10-URL seen set, batch recrawl requests and fold them in
         on the compaction cadence, or keep `seen` bucketed by
         url_hash so the anti-join rewrite is partition-local.
 
         ``urls`` needs a ``url`` column; other frontier columns are
-        defaulted (deterministic ``discovery_ts`` keeps scheduling
+        fixed (deterministic ``discovery_ts`` keeps scheduling
         reproducible for the resume/byte-parity tests)."""
-        seeds = urls.select(
-            "url",
-            F.lit("recrawl").alias("source"),
-            F.lit(priority).alias("priority"),
-            F.to_timestamp(F.lit(discovery_ts)).alias("discovery_ts"),
-            F.lit(None).cast("string").alias("title"),
+        prepared = self._frontier_rows(
+            urls, "recrawl", 10, F.to_timestamp(F.lit("2025-07-01 00:00:00"))
         )
-        prepared = self._prepare_seeds(seeds)
         self.frontier.append(prepared, op_id=f"{op_id}-seed")
         hashes = prepared.select("url_hash").distinct()
         self.seen.overwrite(
@@ -786,9 +778,9 @@ class CrawlEngine:
             # blanket re-crawl mode: any already-indexed fetched doc
             # is a re-crawl — intersect the index's id column
             # (streamed) with the broadcast batch
-            if self.index.is_empty():
+            if self.index.table.is_empty():
                 return None
-            indexed = self.index.read(spark).select("url_hash")
+            indexed = self.index.table.read(spark).select("url_hash")
             return indexed.join(
                 F.broadcast(batch_ids), "url_hash", "left_semi"
             ).distinct()
@@ -899,17 +891,6 @@ class CrawlEngine:
         incrementally-maintained inverted index — the engine's ES
         replacement (the reference's AdvancedSearchEngine queries the
         ES index its storage layer maintains; here run_cycle appends
-        each cycle's postings and this probes them). Re-crawled docs'
-        stale postings are anti-filtered by the deletion vectors —
-        ONE broadcast join of the tombstone floors, replacing the
-        corpus-sized newest-cycle groupBy the pre-round-5 probe paid
-        per query. Requires ``maintain_index=True``."""
-        from omni_crawler_spark import search as SE
-
-        live = self.index_dv.live(spark).select(
-            "url_hash", "fld", "boost10", "tok"
-        )
-        term_df = SE._parse_terms(spark, query, "AUTO")
-        return SE.multi_match_indexed(
-            live, term_df, id_col="url_hash", size=size
-        )
+        each cycle's postings and this probes them through
+        :meth:`SearchIndex.query`). Requires ``maintain_index=True``."""
+        return self.index.query(spark, query, size=size)

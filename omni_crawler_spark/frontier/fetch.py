@@ -49,6 +49,11 @@ from omni_crawler_spark.frontier.synthetic import (
     synth_page_html,
     synth_sitemap_xml,
 )
+from omni_crawler_spark.functions.enrich import CATEGORY_KEYWORDS
+from omni_crawler_spark.functions.text import (
+    ERROR_PAGE_PATTERNS,
+    WORD_SPLIT_RE,
+)
 
 _RE_HEAD = re.compile(r"(?is)<head[^>]*>.*?</head>")
 _RE_BLOCKS = re.compile(r"(?is)<(script|style|noscript|template)[^>]*>.*?</\1>")
@@ -59,23 +64,11 @@ _RE_TITLE = re.compile(r"(?is)<title[^>]*>(.*?)</title>")
 _RE_META_DESC = re.compile(r'(?i)<meta name="description" content="([^"]*)"')
 _RE_IMG = re.compile(r'(?i)<img src="/([^"]+)\.png"')
 _RE_LINK = re.compile(r'(?i)<a href="(/[^"]*)"')
-_RE_WORDS = re.compile(r"[^a-z0-9']+")
+_RE_WORDS = re.compile(WORD_SPLIT_RE)
 _RE_SENTS = re.compile(r"(?<=[.!?])\s+")
 _ENTITIES = [
     ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
     ("&quot;", '"'), ("&#39;", "'"), ("&apos;", "'"), ("&nbsp;", " "),
-]
-ERROR_PAGE_PATTERNS = [
-    "page not found", "404 error", "access denied", "forbidden",
-    "server error", "service unavailable",
-]
-CATEGORY_KEYWORDS = [
-    ("politics", ["election", "government", "president", "congress", "policy"]),
-    ("sports", ["game", "team", "player", "championship", "league"]),
-    ("technology", ["tech", "software", "ai", "computer", "startup"]),
-    ("business", ["market", "economy", "company", "stock", "trade"]),
-    ("health", ["health", "medical", "disease", "treatment", "hospital"]),
-    ("entertainment", ["movie", "music", "celebrity", "film", "show"]),
 ]
 
 

@@ -34,15 +34,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from omni_crawler_spark.functions import enrich
+from omni_crawler_spark.functions.text import WORD_SPLIT_RE
+
 NER_MAX_CHARS = 100_000   # content_enhancement.py:71
 PHRASE_MAX_CHARS = 5_000  # content_enhancement.py:139
 
-POSITIVE_WORDS = frozenset(
-    ["good", "great", "excellent", "positive", "success", "win", "growth"]
-)
-NEGATIVE_WORDS = frozenset(
-    ["bad", "terrible", "negative", "failure", "loss", "decline", "crisis"]
-)
+POSITIVE_WORDS = frozenset(enrich.POSITIVE_WORDS)
+NEGATIVE_WORDS = frozenset(enrich.NEGATIVE_WORDS)
 
 # regex-entity heuristics (content_enricher.py:112-162)
 _RE_PERSON = re.compile(r"\b([A-Z][a-z]+ [A-Z][a-z]+)\b")
@@ -51,7 +50,7 @@ _RE_ORG = re.compile(
     r"(?:Inc|Corp|Corporation|Company|Ltd|LLC|Group|Association))\b"
 )
 _RE_LOC = re.compile(r"\b(?:in|at|from|near) ([A-Z][a-z]+(?: [A-Z][a-z]+)?)\b")
-_RE_WORDS = re.compile(r"[^a-z0-9']+")
+_RE_WORDS = re.compile(WORD_SPLIT_RE)
 
 
 def _dedup_top(values: list[str], k: int = 10) -> list[str]:

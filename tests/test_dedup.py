@@ -289,6 +289,30 @@ def test_duplicate_clusters_with_minhash_pipeline(corpus):
     assert clusters.get(102) == 100
 
 
+def test_corpus_texts_fit_the_realistic_salting(sf_dir):
+    """dedup_minhash_realistic salts words with one regexp_replace of
+    the single spaces, which equals the per-word form only when every
+    ``documents.text`` is non-NULL and made of single-space-separated
+    non-empty tokens. Checked on every corpus the tests, the oracle
+    and the benchmark read."""
+    import pathlib
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted(
+        [*pathlib.Path(sf_dir).parent.glob("sf*/documents.parquet"),
+         *(repo / "perfbench" / "data").glob("sf*/documents.parquet")]
+    )
+    assert len(files) >= 2
+    for f in files:
+        text = pq.read_table(f, columns=["text"]).column("text")
+        assert text.null_count == 0, f
+        tokens = pc.match_substring_regex(text, r"^[^ ]+( [^ ]+)*$")
+        assert pc.all(tokens).as_py(), f
+
+
 def test_minhash_realistic_corpus_recovers_only_planted(spark):
     """The realistic-collision twin of dedup_minhash_lsh: doc-salted
     words kill organic shingle overlap, so the confirmed pairs are

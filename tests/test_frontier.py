@@ -16,6 +16,7 @@ from omni_crawler_spark.frontier.synthetic import generate_hosts, generate_seeds
 from omni_crawler_spark.frontier.xxh64 import xxh64_str
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.lakehouse import SnapshotTable
+from omni_crawler_spark.search_index import SearchIndex
 
 from tests import reference_sim as SIM
 
@@ -300,7 +301,7 @@ def test_frontier_incremental_commits_equivalent(spark, tmp_path):
         )
         eng.bootstrap(generate_seeds(spark, 500), generate_hosts(spark))
         for c in (1, 2, 3):
-            eng.run_cycle(spark, c, collect_stats=False)
+            eng.run_cycle(spark, c)
         outs.append(_order_and_seen(spark, eng))
     assert outs[0] == outs[1]
 
@@ -317,8 +318,8 @@ def test_frontier_commit_bytes_scale_with_delta(spark, tmp_path):
         frontier_compact_every=1000,  # never compact during the test
     )
     eng.bootstrap(generate_seeds(spark, 3000), generate_hosts(spark))
-    s1 = eng.run_cycle(spark, 1, collect_stats=False)
-    s2 = eng.run_cycle(spark, 2, collect_stats=False)
+    s1 = eng.run_cycle(spark, 1)
+    s2 = eng.run_cycle(spark, 2)
     assert s1["frontier_commit_op"] == "append"
     assert s2["frontier_commit_op"] == "append"
     # total bytes of the live frontier log vs the last delta
@@ -352,9 +353,9 @@ def test_incremental_index_matches_batch_and_searches(spark, tmp_path):
         # path: frontier overwrite, seen rewrite, index vector-fold
     )
     eng.bootstrap(generate_seeds(spark, 300), generate_hosts(spark))
-    eng.run_cycle(spark, 1, collect_stats=False)
+    eng.run_cycle(spark, 1)
     eng.reset_seen(spark, "recrawl")  # cycle 2 refetches (new content)
-    eng.run_cycle(spark, 2, collect_stats=False)
+    eng.run_cycle(spark, 2)
 
     arts = eng.fetched.read(spark).filter(F.col("valid"))
     newest_fetch = arts.groupBy("url_hash").agg(
@@ -366,18 +367,26 @@ def test_incremental_index_matches_batch_and_searches(spark, tmp_path):
         fields={"title": 30, "content": 20, "caption": 15},
         id_col="url_hash",
     )
-    live = eng.index_dv.live(spark)
+    live = eng.index.dv.live(spark)
     cols = ["url_hash", "fld", "boost10", "tok"]
     assert {tuple(r) for r in live.select(*cols).collect()} == {
         tuple(r) for r in batch.select(*cols).collect()
     }
     # cycle 2 hit the compaction cadence: vectors folded physically,
     # so the RAW table equals the live view too
-    assert eng.index.read(spark).select(*cols).count() == live.count()
+    assert eng.index.table.read(spark).select(*cols).count() == live.count()
     # the index actually serves queries (exact + fuzzy probe)
     hits = eng.search(spark, "market").collect()
     assert hits and all(r.score > 0 for r in hits)
     assert eng.search(spark, "marekt").count() > 0  # fuzzy via vocab
+    # the engine's index is a SearchIndex: its params marker refuses
+    # a reopen under other field boosts
+    with pytest.raises(ValueError, match="search index"):
+        SearchIndex(
+            str(tmp_path / "wh" / "index"),
+            fields={"title": 10, "content": 10},
+            id_col="url_hash",
+        )
 
 
 def test_resume_after_partial_derived_commit_crash(spark, tmp_path):
@@ -505,8 +514,8 @@ def test_engine_neither_reads_nor_writes_the_bloom(spark, tmp_path):
     ref = CrawlEngine(str(tmp_path / "fresh"), cycle_budget_ms=BUDGET_MS)
     ref.bootstrap(seeds, hosts)
     for c in range(1, N_CYCLES + 1):
-        eng.run_cycle(spark, c, collect_stats=False)
-        ref.run_cycle(spark, c, collect_stats=False)
+        eng.run_cycle(spark, c)
+        ref.run_cycle(spark, c)
     assert eng.bloom.current_version() == v_bloom
     assert sorted(
         p.relative_to(bloom_data) for p in bloom_data.rglob("*.parquet")
@@ -554,6 +563,36 @@ def test_recrawl_updates_articles_in_place(spark, tmp_path):
     assert stale.count() == 0
 
 
+def test_articles_compact_on_the_engine_cadence(spark, tmp_path):
+    """The keyed articles store compacts on the same cadence as every
+    other table: with frontier_compact_every=2, cycle 2 commits
+    ``cycle-00002-compact`` right after its upsert, folding the
+    re-crawl's superseded rows without changing the keyed view."""
+    eng = CrawlEngine(
+        str(tmp_path / "wh"), cycle_budget_ms=10**9,
+        maintain_articles=True, frontier_compact_every=2,
+    )
+    seeds, hosts = generate_seeds(spark, 300), generate_hosts(spark)
+    eng.bootstrap(seeds, hosts)
+    eng.run_cycle(spark, 1)
+    assert eng.articles.version_of("cycle-00001-compact") is None
+    eng.reset_seen(spark, "recrawl")  # cycle 2 re-upserts known keys
+    eng.add_seeds(seeds, op_id="recrawl-seeds")
+    eng.run_cycle(spark, 2)
+    v_upsert = eng.articles.version_of("cycle-00002-articles")
+    v_compact = eng.articles.version_of("cycle-00002-compact")
+    assert v_compact == v_upsert + 1
+    before = eng.articles.read(spark, version=v_upsert)
+    after = eng.articles.read(spark, version=v_compact)
+    assert before.count() == after.count() > 0
+    assert before.exceptAll(after).count() == 0
+    # the fold dropped every superseded row
+    def raw_rows(v: int) -> int:
+        return eng.articles.read(spark, version=v, _resolve=False).count()
+
+    assert raw_rows(v_compact) == after.count() < raw_rows(v_upsert)
+
+
 def test_retention_bounds_manifests_preserves_crawl(spark, tmp_path):
     """Compaction-cycle retention (expire_snapshots + remove_orphans)
     bounds the frontier's manifest count over a long drain WITHOUT
@@ -570,13 +609,13 @@ def test_retention_bounds_manifests_preserves_crawl(spark, tmp_path):
         )
         eng.bootstrap(generate_seeds(spark, 400), generate_hosts(spark))
         for c in (1, 2, 3, 4):
-            eng.run_cycle(spark, c, collect_stats=False)
+            eng.run_cycle(spark, c)
         outs.append(_order_and_seen(spark, eng))
         if keep:
             assert len(eng.frontier._snapshot_files()) <= 2
             # replay of the newest cycle is still a no-op after expiry
             v = eng.frontier.current_version()
-            eng.run_cycle(spark, 4, collect_stats=False)
+            eng.run_cycle(spark, 4)
             assert eng.frontier.current_version() == v
     assert outs[0] == outs[1]
 

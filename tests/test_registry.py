@@ -89,6 +89,23 @@ def test_one_parallelism_policy_and_single_pass_cap():
     assert not calls & {"join", "broadcast", "persist", "cache"}, calls
 
 
+def test_one_deletion_vector_owner_per_index():
+    """Each persisted index class owns its deletion vectors; the crawl
+    engine's index is a ``SearchIndex``, not a second hand-built
+    table + vectors pair."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "omni_crawler_spark"
+    users = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if "DeletionVectors(" in f.read_text()
+    )
+    assert users == [
+        "operators/dedup_incremental.py", "operators/ivf.py", "search_index.py"
+    ]
+
+
 @pytest.mark.parametrize("ram_gib", [1, 3, 15, 64, 512])
 def test_driver_memory_default_fits_host(monkeypatch, ram_gib):
     """The default driver heap is derived from host RAM: it never

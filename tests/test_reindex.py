@@ -258,7 +258,7 @@ def test_crawl_engine_recrawl_roundtrip(spark, tmp_path):
     }
     got = {
         tuple(r)
-        for r in eng.index_dv.live(spark)
+        for r in eng.index.dv.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -592,7 +592,7 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     cycle = 0
     while True:
         cycle += 1
-        stats = eng.run_cycle(spark, cycle, collect_stats=False)
+        stats = eng.run_cycle(spark, cycle)
         if stats["n_scheduled"] == 0:
             break
         assert cycle < 12, "frontier did not drain"
@@ -608,13 +608,13 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     # its title) may differ from the original crawl → changed path OK
     eng.recrawl(spark, one, op_id="rc-a")
     cycle += 1
-    stats = eng.run_cycle(spark, cycle, collect_stats=False)
+    stats = eng.run_cycle(spark, cycle)
     assert stats["n_scheduled"] == 1
-    tomb_rows = eng.index_dv.tomb.footer_row_count()
-    index_rows = eng.index_dv.table.footer_row_count()
+    tomb_rows = eng.index.dv.tomb.footer_row_count()
+    index_rows = eng.index.dv.table.footer_row_count()
     live_before = {
         tuple(r)
-        for r in eng.index_dv.live(spark)
+        for r in eng.index.dv.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -625,15 +625,15 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     # re-fetched page is byte-identical → the 304 short-circuit
     eng.recrawl(spark, one, op_id="rc-b")
     cycle += 1
-    stats = eng.run_cycle(spark, cycle, collect_stats=False)
+    stats = eng.run_cycle(spark, cycle)
     assert stats["n_scheduled"] == 1
-    assert eng.index_dv.tomb.footer_row_count() == tomb_rows, \
+    assert eng.index.dv.tomb.footer_row_count() == tomb_rows, \
         "unchanged re-fetch must add no tombstones"
-    assert eng.index_dv.table.footer_row_count() == index_rows, \
+    assert eng.index.dv.table.footer_row_count() == index_rows, \
         "unchanged re-fetch must append no postings"
     live_after = {
         tuple(r)
-        for r in eng.index_dv.live(spark)
+        for r in eng.index.dv.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -657,15 +657,15 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     # crash-replay of the unchanged-recrawl cycle: version_of pins the
     # comparison to the PRE-cycle articles state, so the replay stays
     # a no-op (without the pin it would see the cycle's own upsert)
-    v_tomb = eng.index_dv.tomb.current_version()
-    v_index = eng.index_dv.table.current_version()
+    v_tomb = eng.index.dv.tomb.current_version()
+    v_index = eng.index.dv.table.current_version()
     eng.recrawl(spark, one, op_id="rc-b")
-    eng.run_cycle(spark, cycle, collect_stats=False)
-    assert eng.index_dv.tomb.current_version() == v_tomb
-    assert eng.index_dv.table.current_version() == v_index
+    eng.run_cycle(spark, cycle)
+    assert eng.index.dv.tomb.current_version() == v_tomb
+    assert eng.index.dv.table.current_version() == v_index
     assert {
         tuple(r)
-        for r in eng.index_dv.live(spark)
+        for r in eng.index.dv.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -694,7 +694,7 @@ def test_crawl_engine_adaptive_revisit_scheduling(spark, tmp_path):
     cycle = 0
     while True:
         cycle += 1
-        stats = eng.run_cycle(spark, cycle, collect_stats=False)
+        stats = eng.run_cycle(spark, cycle)
         if stats["n_scheduled"] == 0:
             break
         assert cycle < 12, "frontier did not drain"
@@ -710,7 +710,7 @@ def test_crawl_engine_adaptive_revisit_scheduling(spark, tmp_path):
     one = spark.createDataFrame([(target.url_canonical,)], "url string")
     eng.recrawl(spark, one, op_id="rv-seed")
     cycle += 1
-    assert eng.run_cycle(spark, cycle, collect_stats=False)[
+    assert eng.run_cycle(spark, cycle)[
         "n_scheduled"] == 1
 
     sched = {r.url_hash: r for r in eng.revisit_schedule(spark).collect()}
@@ -742,7 +742,7 @@ def test_crawl_engine_adaptive_revisit_scheduling(spark, tmp_path):
     assert eng.frontier.footer_row_count() == rows_before
 
     cycle += 1
-    stats = eng.run_cycle(spark, cycle, collect_stats=False)
+    stats = eng.run_cycle(spark, cycle)
     assert stats["n_scheduled"] == 1  # only the due page refetched
     assert (
         eng.articles.read(spark)

@@ -56,7 +56,7 @@ def main() -> None:
         t0 = time.time()
         attempted = validated = 0
         for c in range(1, args.cycles + 1):
-            stats = eng.run_cycle(spark, c, collect_stats=False)
+            stats = eng.run_cycle(spark, c)
             print(json.dumps(stats), file=sys.stderr)
             attempted += stats["n_scheduled"]
             validated += stats["n_stored"]

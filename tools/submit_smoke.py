@@ -47,7 +47,7 @@ def main() -> None:
         )
         attempted = validated = 0
         for c in range(1, args.cycles + 1):
-            stats = engine.run_cycle(spark, c, collect_stats=False)
+            stats = engine.run_cycle(spark, c)
             attempted += stats["n_scheduled"]
             validated += stats["n_stored"]
         print(
