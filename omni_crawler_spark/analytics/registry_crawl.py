@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from omni_crawler_spark.analytics.registry import _t, ordered_small, register
 from omni_crawler_spark.functions import text as T
 from omni_crawler_spark.functions import urls as U
-from omni_crawler_spark.session import spread
+from omni_crawler_spark.session import local_rows, spread
 
 # messy raw URL built from doc_id: exercises uppercase scheme, www.
 # prefix, default port, trailing slash, unsorted query, fragment
@@ -380,7 +380,7 @@ def filter_url_blocklist(spark, sf_dir):
         F.regexp_extract("url", "^https://([^/]+)", 1).alias("host"),
         F.regexp_extract("url", "^https://[^/]+(/[^?]*)", 1).alias("path"),
     )
-    bl = spark.createDataFrame([(d,) for d in _BLOCKLIST], "domain string")
+    bl = local_rows(spark, [(d,) for d in _BLOCKLIST], "domain string")
     cand = parts.select(
         "doc_id",
         F.explode(

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.analytics.registry import _ORACLE_AVG_INT, _t, register
+from omni_crawler_spark.session import local_rows
 
 
 @register(
@@ -99,7 +100,8 @@ def set_intersect_except(spark, sf_dir):
 )
 def join_range_bucket(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
-    buckets = spark.createDataFrame(
+    buckets = local_rows(
+        spark,
         [("low", 0.0, 25.0), ("mid", 25.0, 75.0), ("high", 75.0, 1e9)],
         "bucket_name string, lo double, hi double",
     )

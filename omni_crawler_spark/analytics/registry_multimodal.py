@@ -9,7 +9,8 @@ stage counts) over a metadata table both engines derive from
 
 from __future__ import annotations
 
-import os
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -266,6 +267,15 @@ def pipeline_multimodal_counts(spark, sf_dir):
     )
 
 
+def _query_warehouse(prefix: str) -> str:
+    """A fresh crawl warehouse for one build of a crawl query. The
+    returned DataFrame reads it lazily, so it cannot go before the
+    query returns; it is removed when the process exits."""
+    wh = tempfile.mkdtemp(prefix=prefix, dir="/tmp")
+    atexit.register(shutil.rmtree, wh, ignore_errors=True)
+    return wh
+
+
 @register(
     "crawl_frontier_drain",
     None,
@@ -282,7 +292,7 @@ def crawl_frontier_drain(spark, sf_dir):
         generate_seeds,
     )
 
-    wh = tempfile.mkdtemp(prefix="drain-query-", dir="/tmp")
+    wh = _query_warehouse("drain-query-")
     eng = CrawlEngine(wh, cycle_budget_ms=10**9)
     eng.bootstrap(generate_seeds(spark, 1500, partitions=8), generate_hosts(spark))
     eng.run_cycle(spark, 1)
@@ -319,7 +329,7 @@ def pipeline_recrawl(spark, sf_dir):
         generate_seeds,
     )
 
-    wh = tempfile.mkdtemp(prefix="recrawl-query-", dir="/tmp")
+    wh = _query_warehouse("recrawl-query-")
     eng = CrawlEngine(
         wh,
         cycle_budget_ms=10**9,

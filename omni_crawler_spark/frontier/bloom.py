@@ -59,26 +59,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+
+from omni_crawler_spark.session import local_rows
 
 DEFAULT_BUCKETS = 64
 DEFAULT_FPP = 0.01
 BUCKET_BITS = 12  # key bits below this are left to the bucket
 
-BLOOM_SCHEMA = StructType(
-    [
-        StructField("bucket", IntegerType()),
-        StructField("n_keys", LongType()),
-        StructField("m_bits", LongType()),
-        StructField("k_hashes", IntegerType()),
-        StructField("words", ArrayType(LongType())),
-    ]
+BLOOM_SCHEMA = (
+    "bucket int, n_keys long, m_bits long, k_hashes int, words array<long>"
 )
 
 
@@ -155,7 +144,7 @@ def merge_bloom(
     """
     m, k = fixed_params(capacity_per_bucket, fpp)
     if prev is None:
-        prev = new_keys.sparkSession.createDataFrame([], BLOOM_SCHEMA)
+        prev = local_rows(new_keys.sparkSession, [], BLOOM_SCHEMA)
     _check_format(prev)
 
     def fold(old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:

@@ -44,7 +44,7 @@ from omni_crawler_spark.frontier.fetch import fetch_extract_validate
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.lakehouse import SnapshotTable
 from omni_crawler_spark.search_index import SearchIndex
-from omni_crawler_spark.session import spread
+from omni_crawler_spark.session import local_rows, spread
 
 
 def _indexed_fp() -> "F.Column":
@@ -228,7 +228,7 @@ class CrawlEngine:
 
     def _read_seen(self, spark: SparkSession) -> DataFrame:
         if self.seen.is_empty():
-            return spark.createDataFrame([], "url_hash long")
+            return local_rows(spark, [], "url_hash long")
         return self.seen.read(spark)
 
     def candidates(self, spark: SparkSession) -> DataFrame:
@@ -263,18 +263,26 @@ class CrawlEngine:
         """Run one crawl cycle; returns the cycle's phase timings,
         scheduled and stored counts, and frontier-commit bytes.
 
-        The cycle is TWO materialization jobs, everything else derives
-        from their committed parquet:
+        The cycle materializes TWO snapshots, and everything else
+        derives from their committed parquet. A default cycle runs
+        18-19 Spark jobs (AQE submits each shuffle stage as its own
+        job), in three steps:
 
-        1. plan  = discover→dedup→seen-filter→robots→schedule,
+        1. serial: plan = discover→dedup→seen-filter→robots→schedule,
            committed to the ``plan`` table (the cycle's fetch plan is
            itself a durable, inspectable artifact);
-        2. fetched = fetch+extract+validate over the plan's scheduled
-           rows (repartitioned for full parallelism), committed with
-           the ``valid`` flag kept (invalid attempts carry lineage).
+        2. serial: fetched = fetch+extract+validate over the plan's
+           scheduled rows (repartitioned for full parallelism),
+           committed with the ``valid`` flag kept (invalid attempts
+           carry lineage);
+        3. pooled, from driver threads: the seen, next-frontier and
+           lineage_metrics commits (plus articles and index when
+           maintained) and the two returned counts, all column scans
+           of those two snapshots.
 
-        seen / next-frontier / lineage_metrics are then cheap column
-        scans of those two snapshots — nothing upstream is ever
+        After the pool come the one-row frontier-commit lineage write
+        (it reads the frontier commit's footer) and, on compaction
+        cycles, snapshot retention. Nothing upstream is ever
         recomputed (an earlier cache-based version re-ran the fused
         applyInPandas→mapInPandas chain per commit and burned 3-4x
         the wall time), and every commit stays idempotent (op_id), so
@@ -452,7 +460,7 @@ class CrawlEngine:
                 # under the FRESH op_id f"{op}-index" and duplicate
                 # them. Re-enter the reindex path with no ids — both
                 # legs then no-op under their committed op_ids.
-                re_ids = spark.createDataFrame([], "url_hash long")
+                re_ids = local_rows(spark, [], "url_hash long")
             if re_ids is None:
                 self.index.dv.append(postings, op_id=f"{op}-index")
             else:
@@ -523,12 +531,25 @@ class CrawlEngine:
             else None
         )
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
+        def count_stored() -> int:
+            return int(
+                fetched_now.agg(
+                    F.sum(F.col("valid").cast("int")).alias("v")
+                ).collect()[0].v
+                or 0
+            )
+
+        # the two returned counts read only the committed plan and
+        # fetched snapshots, so they run beside the commits instead of
+        # after them
+        with ThreadPoolExecutor(max_workers=7) as pool:
             futures = [
                 pool.submit(fn)
                 for fn in (commit_seen, commit_frontier, commit_lineage,
                            commit_articles, commit_index)
             ]
+            n_scheduled = pool.submit(plan.filter(F.col("scheduled")).count)
+            n_stored = pool.submit(count_stored)
             for fut in futures:
                 fut.result()  # re-raise any commit failure
         mark("derived_commits")
@@ -543,7 +564,8 @@ class CrawlEngine:
         stats["frontier_commit_bytes"] = frontier_bytes
         stats["frontier_commit_op"] = "overwrite" if is_compact else "append"
         self.lineage.append(
-            spark.createDataFrame(
+            local_rows(
+                spark,
                 [(
                     -1,
                     # rows this commit wrote, from parquet footer
@@ -576,13 +598,8 @@ class CrawlEngine:
             )
             self.frontier.remove_orphans()
 
-        stats["n_scheduled"] = plan.filter(F.col("scheduled")).count()
-        stats["n_stored"] = int(
-            fetched_now.agg(
-                F.sum(F.col("valid").cast("int")).alias("v")
-            ).collect()[0].v
-            or 0
-        )
+        stats["n_scheduled"] = n_scheduled.result()
+        stats["n_stored"] = n_stored.result()
         stats["wall_sec"] = round(time.time() - t0, 3)
         return stats
 
@@ -645,13 +662,11 @@ class CrawlEngine:
         index's id column against the broadcast batch — the price of
         blanket re-crawl mode; targeted recrawl() stays O(batch))."""
         self.seen.overwrite(
-            spark.createDataFrame([], "url_hash long, url_canonical string"),
+            local_rows(spark, [], "url_hash long, url_canonical string"),
             op_id=f"{op_id}-seen",
         )
         self.reindex_marker.append(
-            spark.createDataFrame(
-                [(None, "all")], "url_hash long, scope string"
-            ),
+            local_rows(spark, [(None, "all")], "url_hash long, scope string"),
             op_id=f"{op_id}-marker",
         )
 

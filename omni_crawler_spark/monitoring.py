@@ -30,6 +30,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from omni_crawler_spark.session import local_rows
 from omni_crawler_spark.streaming.alerts import RULES_SCHEMA
 
 SYSTEM_RULES = [
@@ -40,7 +41,7 @@ SYSTEM_RULES = [
 
 
 def system_rules(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SYSTEM_RULES, RULES_SCHEMA)
+    return local_rows(spark, SYSTEM_RULES, RULES_SCHEMA)
 
 
 def _meminfo() -> dict[str, int]:
@@ -98,8 +99,8 @@ def snapshot_df(
     snap = snapshot if snapshot is not None else host_snapshot()
     ts = datetime.now(timezone.utc).replace(tzinfo=None)
     rows = [(ts, scope, k, float(v)) for k, v in snap.items()]
-    return spark.createDataFrame(
-        rows, "ts timestamp, scope string, metric string, value double"
+    return local_rows(
+        spark, rows, "ts timestamp, scope string, metric string, value double"
     )
 
 

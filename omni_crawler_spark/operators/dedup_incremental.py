@@ -52,7 +52,7 @@ from omni_crawler_spark.operators.dedup import (
     lsh_band_keys,
     minhash_signature_udf,
 )
-from omni_crawler_spark.session import spread
+from omni_crawler_spark.session import local_rows, spread
 
 
 class MinHashIndex:
@@ -279,11 +279,9 @@ class MinHashIndex:
         # cross probe: index streamed, batch broadcast (skipped when
         # the index is empty — first-ever batch bootstraps it)
         if self.table.current_version() == 0:
-            empty = spark.createDataFrame(
-                [],
-                "new_id long, dup_of long, est_jaccard double",
+            cross = local_rows(
+                spark, [], "new_id long, dup_of long, est_jaccard double"
             )
-            cross = empty
         else:
             cross = self._cross_probe(spark, b_probe)
 

@@ -22,6 +22,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from omni_crawler_spark.operators.similarity import cosine_pair_udf
+from omni_crawler_spark.session import local_rows
 
 
 def train_centroids(
@@ -115,7 +116,7 @@ def ivf_topk(
         order = np.argsort(-(centroids @ qv))[:nprobe]
         probes += [(int(r.query_id), int(c)) for c in order]
     probe_df = F.broadcast(
-        indexed.sparkSession.createDataFrame(probes, "query_id long, cell long")
+        local_rows(indexed.sparkSession, probes, "query_id long, cell long")
     )
     q = indexed.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from omni_crawler_spark.functions.text import WORD_SPLIT_RE
+from omni_crawler_spark.session import local_rows
 
 # ES multi_match boosts ×10 (advanced_search.py:52-58) — integer-exact sums
 DEFAULT_FIELDS: dict[str, int] = {
@@ -56,7 +57,7 @@ def _parse_terms(spark, query: str, fuzziness: str | None):
     ]
     if not terms:
         raise ValueError("empty query")
-    return spark.createDataFrame(terms, "term string, maxed int")
+    return local_rows(spark, terms, "term string, maxed int")
 
 
 def _resolve_fields(docs: DataFrame, fields: dict[str, int] | None):

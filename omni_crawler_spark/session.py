@@ -10,14 +10,19 @@ One place to encode the configuration we would ship to a real
   would be ~2-3x total cores; AQE coalesces down after),
 - small broadcast threshold kept at default so dimension tables
   (region/nation/hosts/rules) broadcast automatically,
-- one partition count for CPU-bound stages: ``spread``.
+- one partition count for CPU-bound stages: ``spread``,
+- one way to build driver-side rows: ``local_rows``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 MAX_DRIVER_MEMORY_GB = 24
@@ -98,3 +103,23 @@ def spread(df: DataFrame, *cols) -> DataFrame:
     partition count keeps AQE from coalescing a CPU-bound stage by its
     (small) shuffle BYTES onto a couple of tasks."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
+
+
+def local_rows(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl``'s column order) as a
+    DataFrame of exactly the ``ddl`` schema: the engine's one way to
+    build rows on the driver. They go through one Arrow table, which
+    plans a ``LocalTableScan`` for any row count. The list form
+    ``createDataFrame(<list>)`` plans ``Scan ExistingRDD`` instead, and
+    Python workers unpickle its partitions: a one-row write costs
+    ~0.35 s more that way. A pandas frame with 0 rows falls back to
+    that scan too. Naive timestamps are read as UTC wall time (the
+    list form applies the process time zone)."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table)

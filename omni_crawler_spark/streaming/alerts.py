@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from omni_crawler_spark.session import local_rows
+
 # mirrors the five defaults (alert_engine.py:49-110), retargeted at the
 # synthetic events stream's event_type/value space
 DEFAULT_RULES = [
@@ -51,7 +53,7 @@ RULES_SCHEMA = (
 
 
 def default_rules(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_RULES, RULES_SCHEMA)
+    return local_rows(spark, DEFAULT_RULES, RULES_SCHEMA)
 
 
 def _condition_holds(value, cond, threshold):

@@ -446,6 +446,32 @@ def test_resume_idempotent_cycle(spark, tmp_path):
     assert eng2.seen.read(spark).count() == n_seen
 
 
+def test_cycle_counts_match_committed_snapshots(spark, tmp_path):
+    """run_cycle's pooled counts: ``n_scheduled`` is the cycle's
+    scheduled ``plan`` rows, ``n_stored`` its valid ``fetched`` rows,
+    on append and compaction cycles alike; replaying the committed
+    last cycle returns the same two counts."""
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(wh, cycle_budget_ms=3000, frontier_compact_every=2)
+    eng.bootstrap(generate_seeds(spark, 500), generate_hosts(spark))
+    counts = {}
+    for c in (1, 2, 3):
+        stats = eng.run_cycle(spark, c)
+        counts[c] = (stats["n_scheduled"], stats["n_stored"])
+        plan = eng.plan.read(
+            spark, version=eng.plan.version_of(f"cycle-{c:05d}-plan")
+        )
+        fetched = eng.fetched.read(spark).filter(F.col("cycle_id") == c)
+        assert counts[c] == (
+            plan.filter(F.col("scheduled")).count(),
+            fetched.filter(F.col("valid")).count(),
+        )
+        assert 0 < counts[c][1] <= counts[c][0]
+    replay = CrawlEngine(wh, cycle_budget_ms=3000, frontier_compact_every=2)
+    stats = replay.run_cycle(spark, 3)
+    assert (stats["n_scheduled"], stats["n_stored"]) == counts[3]
+
+
 def test_resume_continues_from_snapshot(spark, tmp_path):
     """Cycles 1..2 run in one engine, cycle 3 in a fresh engine over
     the same warehouse → identical final state to an uninterrupted

@@ -38,3 +38,23 @@ def test_executor_snapshots_probe(spark):
     assert len(rows) == 4
     assert all(0 <= r.cpu_percent <= 100 for r in rows)
     assert all(r.host for r in rows)
+
+
+def test_snapshot_ts_is_utc_wall_time_off_utc(spark, monkeypatch):
+    """``ts`` is the snapshot's UTC wall time whatever the process
+    time zone: a naive UTC datetime must not be shifted by it."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        before = int(time.time())
+        df = M.snapshot_df(spark, snapshot={"cpu_percent": 1.0})
+        epoch = df.select(F.unix_timestamp("ts").alias("s")).first().s
+        after = int(time.time()) + 1
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert before <= epoch <= after

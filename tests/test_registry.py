@@ -7,6 +7,8 @@ assert structural invariants at sf0.001 so pytest stays fast.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import duckdb
 import pytest
 
@@ -87,6 +89,102 @@ def test_one_parallelism_policy_and_single_pass_cap():
         n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)
     }
     assert not calls & {"join", "broadcast", "persist", "cache"}, calls
+
+
+_LINEAGE_DDL = (
+    "partition_id int, n_in long, n_out long, n_err long, "
+    "cycle_id int, phase string, t_start double, t_end double"
+)
+
+
+@pytest.mark.parametrize(
+    "rows,ddl",
+    [
+        ([], _LINEAGE_DDL),
+        ([(-1, 12, 3456, 0, 7, "frontier-commit:append", 1.5, 2.5)],
+         _LINEAGE_DDL),
+        ([(datetime(2025, 6, 1, 12, 30), "a"),
+          (None, None)],
+         "ts timestamp, s string"),
+    ],
+    ids=["empty", "lineage-row", "timestamp"],
+)
+def test_local_rows_is_a_local_table_scan(spark, monkeypatch, rows, ddl):
+    """``session.local_rows`` plans a ``LocalTableScan`` (no Python
+    workers), keeps the DDL schema exactly, and in UTC holds the rows
+    the list form ``createDataFrame(<list>)`` holds."""
+    import time
+
+    from pyspark.sql.types import StructType
+
+    from omni_crawler_spark.session import local_rows
+
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    try:
+        df = local_rows(spark, rows, ddl)
+        got = df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        want = spark.createDataFrame(rows, ddl).collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.schema == StructType.fromDDL(ddl)
+    assert got == want
+
+
+def test_driver_rows_come_from_local_rows():
+    """``createDataFrame(`` appears in the package only inside
+    ``session.local_rows``: driver-side rows never take the
+    ``Scan ExistingRDD`` path."""
+    import ast
+    import pathlib
+
+    def calls(node) -> int:
+        return sum(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            for n in ast.walk(node)
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "omni_crawler_spark"
+    trees = {
+        str(f.relative_to(pkg)): ast.parse(f.read_text())
+        for f in pkg.rglob("*.py")
+    }
+    assert {k: n for k, t in trees.items() if (n := calls(t))} == {
+        "session.py": 1
+    }
+    helper = next(
+        n for n in trees["session.py"].body
+        if isinstance(n, ast.FunctionDef) and n.name == "local_rows"
+    )
+    assert calls(helper) == 1
+
+
+@pytest.mark.parametrize("name", ["crawl_frontier_drain", "pipeline_recrawl"])
+def test_crawl_queries_remove_their_warehouse(spark, sf_dir, monkeypatch, name):
+    """A crawl query's temp warehouse is read lazily by the returned
+    DataFrame, so it stays until process exit, then goes."""
+    import atexit
+    import os
+    import shutil
+
+    registered = []
+    monkeypatch.setattr(
+        atexit, "register",
+        lambda fn, *a, **kw: registered.append((fn, a, kw)),
+    )
+    REGISTRY[name].build(spark, sf_dir).collect()
+    cleanups = [(fn, a, kw) for fn, a, kw in registered if fn is shutil.rmtree]
+    assert len(cleanups) == 1
+    fn, a, kw = cleanups[0]
+    wh = a[0]
+    assert os.path.isdir(wh)
+    fn(*a, **kw)
+    assert not os.path.exists(wh)
 
 
 def test_one_deletion_vector_owner_per_index():
