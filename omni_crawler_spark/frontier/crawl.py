@@ -184,7 +184,9 @@ class CrawlEngine:
         )
 
     def bootstrap(self, seeds: DataFrame, hosts: DataFrame) -> None:
-        """Seed the frontier: canonicalize, hash, host-split. A hosts
+        """Seed the frontier: canonicalize, hash, host-split; commit
+        the raw ``hosts`` dim's ``host_policy`` as the ``hosts`` table,
+        so each robots.txt is parsed once per crawl, not per cycle. A
         dim carrying raw ``robots_txt`` also contributes its
         ``Sitemap:`` directives as frontier seeds (how real crawlers
         find most sitemaps — RFC 9309 §2.3; the reference parses
@@ -193,24 +195,18 @@ class CrawlEngine:
         self.frontier.append(
             self._admit(self._prepare_seeds(seeds)), op_id="bootstrap"
         )
-        self.hosts.overwrite(hosts, op_id="bootstrap-hosts")
-        self._seed_robots_sitemaps(hosts)
-
-    def _seed_robots_sitemaps(self, hosts: DataFrame) -> None:
-        """robots ``Sitemap:`` URLs → frontier seeds (priority 10,
-        source 'sitemap-robots'). The sitemap URL itself is fetched
-        like any page; its <loc> entries come back as that fetch's
-        ``links`` and join the next cycle's frontier through the
-        normal discovery path. O(hosts dim): the Arrow parse runs
-        over one row per host, never the frontier; an already-seen
-        sitemap URL is anti-joined away like any other candidate, so
-        repeated bootstraps cannot refetch it."""
+        self.hosts.overwrite(P.host_policy(hosts), op_id="bootstrap-hosts")
         if "robots_txt" not in hosts.columns:
             return
-        sm = hosts.select(
-            F.explode(
-                P.robots_sitemaps_udf()(F.col("robots_txt"))
-            ).alias("url")
+        # sitemap URLs of the committed dim → seeds (priority 10,
+        # source 'sitemap-robots'). The sitemap is fetched like any
+        # page; its <loc> entries come back as that fetch's ``links``
+        # and join the next cycle's frontier through the normal
+        # discovery path. An already-seen sitemap URL is anti-joined
+        # away like any other candidate, so repeated bootstraps cannot
+        # refetch it.
+        sm = self.hosts.read(hosts.sparkSession).select(
+            F.explode("sitemaps").alias("url")
         )
         rows = self._frontier_rows(
             sm, "sitemap-robots", 10,
@@ -312,7 +308,9 @@ class CrawlEngine:
             op_id=f"{op}-plan",
         )
         mark("plan")
-        plan = self.plan.read(spark)
+        # this cycle's plan, not the latest: a replayed older cycle
+        # must count, fetch and mark seen its own plan rows
+        plan = self.plan.read(spark, version=self.plan.version_of(f"{op}-plan"))
         todo = plan.filter(F.col("scheduled")).transform(spread)
 
         # -- job 2: fetch + extract + validate ----------------------------

@@ -5,6 +5,9 @@ Replaces the reference's global asyncio.Semaphore(3) + priority sort
 src/discovery/url_discovery_engine.py:102-103) with the north rule's
 host-hash-partitioned queue:
 
+- **host policy**: ``host_policy`` turns the raw hosts dim into the
+  one dim both steps below read; each robots.txt is parsed there,
+  once per crawl.
 - **robots**: URLs whose path matches a host disallow prefix are
   dropped before scheduling (reference has only the config flag,
   config/master_config.yaml:10 — this is new code).
@@ -31,7 +34,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # the engine's robots User-agent token (what a real crawl would send
 # and match against User-agent groups)
@@ -105,7 +107,7 @@ def parse_robots_groups(
             else:
                 # hostile/typo'd robots.txt is normal web input:
                 # reject nan/inf/negative outright;
-                # robots_crawl_delay_ms clamps the rest to one day so
+                # _delay_ms clamps the rest to one day so
                 # one bad host can never overflow the scheduler's
                 # int32 delay column
                 if d == d and 0 <= d < float("inf"):
@@ -132,22 +134,6 @@ def parse_robots_sitemaps(text: str) -> list[str]:
             seen.add(u)
             out.append(u)
     return out
-
-
-def robots_sitemaps_udf():
-    """Arrow-batched ``Sitemap:`` extractor — runs over the HOSTS DIM
-    only (one row per host), never the frontier."""
-
-    @pandas_udf("array<string>")
-    def parse(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if t is None else parse_robots_sitemaps(t)
-                for t in texts
-            ]
-        )
-
-    return parse
 
 
 def _group_for_agent(text: str, agent: str):
@@ -183,33 +169,88 @@ def robots_crawl_delay_ms(
     """The governing group's Crawl-delay in milliseconds, or None
     when the file sets none — feeds the scheduler's per-host
     crawl_delay_ms budget (urllib.robotparser.crawl_delay analog)."""
-    g = _group_for_agent(text, agent)
-    if g is None or g[2] is None:
+    return _delay_ms(_group_for_agent(text, agent))
+
+
+def _delay_ms(group) -> int | None:
+    """A group's Crawl-delay in milliseconds, clamped to one day."""
+    if group is None or group[2] is None:
         return None
-    return min(int(g[2] * 1000), 86_400_000)
+    return min(int(group[2] * 1000), 86_400_000)
 
 
-def robots_rules_udf(agent: str = ROBOTS_UA):
-    """Arrow-batched parser: raw robots_txt column → rules array for
-    ``agent``. Runs over the HOSTS DIM only (one row per host), never
-    the frontier — parsing stays O(hosts); the per-URL verdict is the
-    pure column expression ``robots_verdict``."""
+def host_policy(hosts: DataFrame) -> DataFrame:
+    """The crawl's host-policy dim, one row per host of the raw
+    ``hosts`` dim, with the columns ``robots_filter`` and ``schedule``
+    read:
 
-    @pandas_udf(_RULES_TYPE)
-    def parse(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if t is None
-                else [
-                    {"path": p, "allow": al, "pattern": rule_pattern(p)}
-                    for p, al in robots_rules_for_agent(t, agent)
-                ]
-                for t in texts
-            ]
+    - ``robots_rules`` (array<struct<path,allow,pattern>>) for our
+      agent, parsed from a raw ``robots_txt`` column, or else every
+      ``robots_disallow`` prefix as a literal Disallow rule;
+    - ``crawl_delay_ms``: an explicit column wins, else the file's
+      Crawl-delay (NULL when neither is set);
+    - ``max_parallel``: the column, else NULL;
+    - ``sitemaps``: the file's ``Sitemap:`` URLs (NULL without
+      ``robots_txt``).
+
+    A ``robots_txt`` file is parsed once, in one Arrow pass over the
+    dim; without it no Python runs. NULL fields are the scheduler's
+    defaults, as for hosts absent from the dim."""
+    cols = hosts.columns
+    if "robots_txt" in cols:
+
+        @F.pandas_udf(
+            f"struct<robots_rules:{_RULES_TYPE},crawl_delay_ms:int,"
+            "sitemaps:array<string>>"
         )
+        def parse(texts: pd.Series) -> pd.DataFrame:
+            rows = []
+            for t in texts:
+                if t is None:
+                    rows.append((None, None, None))
+                    continue
+                g = _group_for_agent(t, ROBOTS_UA)
+                rules = [
+                    {"path": p, "allow": al, "pattern": rule_pattern(p)}
+                    for p, al in (g[1] if g else [])
+                ]
+                rows.append((rules, _delay_ms(g), parse_robots_sitemaps(t)))
+            out = pd.DataFrame(
+                rows, columns=["robots_rules", "crawl_delay_ms", "sitemaps"]
+            )
+            out["crawl_delay_ms"] = out["crawl_delay_ms"].astype("Int32")
+            return out
 
-    return parse
+        # one UDF column, expanded by a second projection, so the
+        # file is parsed once per host, not once per field
+        hosts = hosts.withColumn("_policy", parse(F.col("robots_txt")))
+        rules = F.col("_policy.robots_rules")
+        delay = F.col("_policy.crawl_delay_ms")
+        sitemaps = F.col("_policy.sitemaps")
+    else:
+        rules = F.transform(
+            F.col("robots_disallow"),
+            lambda p: F.struct(
+                p.alias("path"),
+                F.lit(False).alias("allow"),
+                F.lit(None).cast("string").alias("pattern"),
+            ),
+        )
+        delay = F.lit(None).cast("int")
+        sitemaps = F.lit(None).cast("array<string>")
+    if "crawl_delay_ms" in cols:
+        delay = F.col("crawl_delay_ms")
+    max_parallel = (
+        F.col("max_parallel") if "max_parallel" in cols
+        else F.lit(None).cast("int")
+    )
+    return hosts.select(
+        "host",
+        rules.alias("robots_rules"),
+        delay.alias("crawl_delay_ms"),
+        max_parallel.alias("max_parallel"),
+        sitemaps.alias("sitemaps"),
+    )
 
 
 def robots_verdict(path: "F.Column", rules: "F.Column") -> "F.Column":
@@ -247,56 +288,15 @@ def robots_verdict(path: "F.Column", rules: "F.Column") -> "F.Column":
     return best["allow"]
 
 
-def hosts_with_parsed_robots(hosts: DataFrame) -> DataFrame:
-    """Normalize the hosts dim to carry ``robots_rules``
-    (array<struct<path,allow>>): pass-through if present, parsed from
-    raw ``robots_txt`` (per-agent groups + Allow precedence) if that
-    column exists, else derived from the legacy ``robots_disallow``
-    prefix array (all-disallow rules — identical verdicts to the old
-    any-prefix-blocks behavior)."""
-    if "robots_rules" in hosts.columns:
-        elem = hosts.schema["robots_rules"].dataType.elementType
-        if "pattern" in elem.names:
-            return hosts
-        # rules arrays built before the wildcard field existed:
-        # treat every path as literal (exactly the old behavior)
-        return hosts.withColumn(
-            "robots_rules",
-            F.transform(
-                F.col("robots_rules"),
-                lambda r: F.struct(
-                    r["path"].alias("path"),
-                    r["allow"].alias("allow"),
-                    F.lit(None).cast("string").alias("pattern"),
-                ),
-            ),
-        )
-    if "robots_txt" in hosts.columns:
-        return hosts.withColumn(
-            "robots_rules", robots_rules_udf()(F.col("robots_txt"))
-        )
-    return hosts.withColumn(
-        "robots_rules",
-        F.transform(
-            F.col("robots_disallow"),
-            lambda p: F.struct(
-                p.alias("path"),
-                F.lit(False).alias("allow"),
-                F.lit(None).cast("string").alias("pattern"),
-            ),
-        ),
-    )
-
-
 def robots_filter(frontier: DataFrame, hosts: DataFrame) -> DataFrame:
     """Drop URLs disallowed for our agent by their host's robots
     rules (User-agent group selection + longest-match Allow/Disallow
-    precedence). Hosts is a small dim → broadcast join, no shuffle on
-    the frontier side; hosts absent from the dim are allowed."""
+    precedence). ``hosts`` is the ``host_policy`` dim, small →
+    broadcast join, no shuffle on the frontier side; hosts absent
+    from the dim are allowed."""
     path = F.regexp_replace(
         F.col("url_canonical"), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", ""
     )
-    hosts = hosts_with_parsed_robots(hosts)
     joined = frontier.join(
         F.broadcast(hosts.select("host", "robots_rules")), "host", "left"
     )
@@ -320,26 +320,9 @@ def schedule(
     Output adds: lane:int, crawl_seq:long (1-based within host+lane),
     start_ms:long, scheduled:boolean(start_ms < budget).
 
-    A hosts dim carrying only raw ``robots_txt`` gets its
-    ``crawl_delay_ms`` from the file's Crawl-delay directive (per our
-    agent's governing group; Arrow UDF over the dim only), falling
-    back to the default budget when the file sets none.
+    ``hosts`` is the ``host_policy`` dim; a host absent from it, or
+    with a NULL field, gets the defaults (500 ms, one lane).
     """
-    if "crawl_delay_ms" not in hosts.columns and "robots_txt" in hosts.columns:
-
-        @pandas_udf("int")
-        def delay_ms(texts: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    None if t is None else robots_crawl_delay_ms(t)
-                    for t in texts
-                ],
-                dtype="Int32",
-            )
-
-        hosts = hosts.withColumn("crawl_delay_ms", delay_ms(F.col("robots_txt")))
-    if "max_parallel" not in hosts.columns:
-        hosts = hosts.withColumn("max_parallel", F.lit(None).cast("int"))
     f = frontier.join(
         F.broadcast(hosts.select("host", "crawl_delay_ms", "max_parallel")),
         "host",

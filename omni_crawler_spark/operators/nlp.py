@@ -13,7 +13,9 @@ gives both paths the same vectorized pandas-UDF shape:
   so a missing model is a loud config error, never a silent fallback.
 - ``*_udf(backend="deterministic")`` (and ``backend="auto"``, which
   probes availability) builds the reference's own fallback logic —
-  byte-reproducible, used by the oracle-paired registry queries.
+  byte-reproducible. No registry query imports this module: the
+  oracle-paired enrichment queries compute their deterministic twins
+  as column expressions in ``analytics/``.
 
 Input truncation matches the reference exactly (NER first 100k chars,
 phrases first 5k) so per-row outputs are comparable across backends.
@@ -195,8 +197,10 @@ def sentiment_udf(backend: str = "auto"):
 def key_phrases_udf(backend: str = "auto", top_k: int = 15):
     """N5: key phrases. model = spaCy noun_chunks over the first 5k
     chars, 10<len<50, dedup, top-15 (content_enhancement.py:132-153);
-    deterministic = most-frequent bigrams (the twin behind the
-    oracle-paired enrich_key_phrases query)."""
+    deterministic = the ``top_k`` most-frequent bigrams of the first
+    5k chars, by (count desc, phrase). The oracle-paired
+    enrich_key_phrases query does not call this UDF: it ranks the
+    whole text's bigrams in that order as columns and keeps 3."""
     mode = _resolve(backend, "spacy")
 
     if mode == "model":

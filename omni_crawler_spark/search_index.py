@@ -14,12 +14,12 @@ vs the scan it replaced at sf0.1).
 as the MinHash/IVF incremental indexes (operators/dedup_incremental.py,
 operators/ivf.py):
 
-- ``bootstrap`` pays the one-time corpus tokenization and commits the
-  postings ``(tok, fld, boost10, doc_id, gen)`` to a
-  :class:`SnapshotTable` under an idempotent ``op_id`` — replays and
-  concurrent sessions resolve to one copy;
-- ``index_batch`` appends postings for NEW docs only — O(batch) per
-  crawl cycle, the ES save-time indexing analog;
+- ``bootstrap`` commits the postings ``(tok, fld, boost10, doc_id,
+  gen)`` of NEW docs to a :class:`SnapshotTable` under an idempotent
+  ``op_id`` — replays and concurrent sessions resolve to one copy. It
+  serves the one-time corpus tokenization and, O(batch), each crawl
+  cycle's or micro-batch's new docs (the ES save-time indexing
+  analog);
 - ``reindex`` / ``delete`` give the index the reference's
   replace-by-id semantics (every reference sink replaces: ES doc_id =
   article_id omni_storage.py:275-296, PG ``ON CONFLICT DO UPDATE``
@@ -98,18 +98,13 @@ class SearchIndex:
     def bootstrap(
         self, spark: SparkSession, docs: DataFrame, op_id: str | None = None
     ) -> None:
-        """Index an existing corpus (one-time backfill); idempotent
-        under ``op_id`` WITHIN the snapshot-retention window (see
-        SnapshotTable.expire_snapshots)."""
-        self.dv.append(self._postings_for(docs), op_id=op_id)
-
-    def index_batch(
-        self, spark: SparkSession, docs: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Append postings for a batch of NEW docs — O(batch) per
-        cycle, never a corpus re-tokenize. Caller guarantees the ids
-        are new (the crawl pipeline's seen-filter already does); for
-        a CHANGED known doc use :meth:`reindex`, which tombstones the
+        """Append postings for docs NEW to the index: the one-time
+        corpus backfill, or one crawl cycle's or micro-batch's new
+        docs — O(batch), never a corpus re-tokenize. Idempotent under
+        ``op_id`` WITHIN the snapshot-retention window (see
+        SnapshotTable.expire_snapshots). Caller guarantees the ids are
+        new (the crawl pipeline's seen-filter already does); for a
+        CHANGED known doc use :meth:`reindex`, which tombstones the
         stale postings instead of letting them match forever."""
         self.dv.append(self._postings_for(docs), op_id=op_id)
 

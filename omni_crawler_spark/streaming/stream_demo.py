@@ -174,7 +174,7 @@ def streaming_search_index(
     index = SearchIndex(index_root)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        index.index_batch(
+        index.bootstrap(
             batch_df.sparkSession, batch_df, op_id=f"stream-{batch_id}"
         )
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
@@ -210,7 +210,7 @@ def streaming_search_upsert(
     streaming form of the reference's replace-by-article-id stores
     (PG ``ON CONFLICT DO UPDATE`` omni_storage.py:137-205, ES doc_id
     :275-296). A batch of brand-new docs degenerates to
-    ``index_batch`` semantics (the tombstone each doc gets only kills
+    ``bootstrap`` semantics (the tombstone each doc gets only kills
     generations older than its own postings, of which a new doc has
     none), so one code path serves both arrivals and re-crawls.
 

@@ -206,7 +206,7 @@ def simulate(
     # frontier entries: dicts with url, priority, discovery_ts, source
     frontier = [dict(s) for s in seeds]
     # robots Sitemap: directives seed the frontier at bootstrap
-    # (mirror of CrawlEngine._seed_robots_sitemaps)
+    # (mirror of CrawlEngine.bootstrap)
     for host in sorted(hosts):
         txt = hosts[host].get("robots_txt")
         if txt:

@@ -449,8 +449,8 @@ def test_resume_idempotent_cycle(spark, tmp_path):
 def test_cycle_counts_match_committed_snapshots(spark, tmp_path):
     """run_cycle's pooled counts: ``n_scheduled`` is the cycle's
     scheduled ``plan`` rows, ``n_stored`` its valid ``fetched`` rows,
-    on append and compaction cycles alike; replaying the committed
-    last cycle returns the same two counts."""
+    on append and compaction cycles alike; replaying a committed
+    cycle, the last or an older one, returns that cycle's two counts."""
     wh = str(tmp_path / "wh")
     eng = CrawlEngine(wh, cycle_budget_ms=3000, frontier_compact_every=2)
     eng.bootstrap(generate_seeds(spark, 500), generate_hosts(spark))
@@ -467,9 +467,12 @@ def test_cycle_counts_match_committed_snapshots(spark, tmp_path):
             fetched.filter(F.col("valid")).count(),
         )
         assert 0 < counts[c][1] <= counts[c][0]
-    replay = CrawlEngine(wh, cycle_budget_ms=3000, frontier_compact_every=2)
-    stats = replay.run_cycle(spark, 3)
-    assert (stats["n_scheduled"], stats["n_stored"]) == counts[3]
+    for c in (3, 1):
+        replay = CrawlEngine(
+            wh, cycle_budget_ms=3000, frontier_compact_every=2
+        )
+        stats = replay.run_cycle(spark, c)
+        assert (stats["n_scheduled"], stats["n_stored"]) == counts[c]
 
 
 def test_resume_continues_from_snapshot(spark, tmp_path):

@@ -3,17 +3,20 @@ budgets, max_parallel lanes, robots, cycle-budget deferral)."""
 
 from __future__ import annotations
 
+import inspect
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.frontier import politeness as P
+from omni_crawler_spark.frontier.crawl import CrawlEngine
+from omni_crawler_spark.frontier.synthetic import generate_hosts, generate_seeds
 
 
 @pytest.fixture(scope="module")
 def hosts(spark):
-    return spark.createDataFrame(
+    return P.host_policy(spark.createDataFrame(
         [
             ("slow.example.com", 1000, 1, ["/private"]),
             ("fast.example.com", 100, 4, []),
@@ -21,7 +24,7 @@ def hosts(spark):
         ],
         "host string, crawl_delay_ms int, max_parallel int, "
         "robots_disallow array<string>",
-    )
+    ))
 
 
 def _frontier(spark, rows):
@@ -158,7 +161,10 @@ def test_robots_filter_from_raw_txt(spark):
             ("slow.example.com", "/ok/x", 10),
         ],
     )
-    kept = {r.url_canonical for r in P.robots_filter(f, hosts_txt).collect()}
+    kept = {
+        r.url_canonical
+        for r in P.robots_filter(f, P.host_policy(hosts_txt)).collect()
+    }
     assert kept == {"https://slow.example.com/ok/x"}
 
 
@@ -219,7 +225,7 @@ def test_robots_longest_match_allow_precedence(spark):
     )
     kept = {
         r.url_canonical.split(".com")[1]
-        for r in P.robots_filter(f, hosts_txt).collect()
+        for r in P.robots_filter(f, P.host_policy(hosts_txt)).collect()
     }
     assert kept == {"/private/ok/page", "/dup/x", "/elsewhere"}
 
@@ -257,7 +263,7 @@ def test_robots_verdicts_match_urllib_robotparser(spark):
         f = _frontier(spark, [("h.example.com", p, 1) for p in paths])
         got = {
             r.url_canonical.split(".com", 1)[1]
-            for r in P.robots_filter(f, hosts_txt).collect()
+            for r in P.robots_filter(f, P.host_policy(hosts_txt)).collect()
         }
         assert got == want, txt
 
@@ -299,7 +305,9 @@ def test_schedule_uses_robots_crawl_delay(spark):
         [("slowed.example.com", f"/a{i}", 1) for i in range(3)]
         + [("plain.example.com", f"/b{i}", 1) for i in range(3)],
     )
-    out = P.schedule(f, hosts_txt, cycle_budget_ms=10**9).collect()
+    out = P.schedule(
+        f, P.host_policy(hosts_txt), cycle_budget_ms=10**9
+    ).collect()
     slowed = sorted(
         r.start_ms for r in out if r.host == "slowed.example.com"
     )
@@ -359,30 +367,31 @@ def test_robots_wildcard_and_anchor_rules(spark):
     f = _frontier(
         spark, [("w.example.com", p, 10) for p, _ in cases]
     )
-    kept = {r.url_canonical for r in P.robots_filter(f, hosts_txt).collect()}
+    kept = {
+        r.url_canonical
+        for r in P.robots_filter(f, P.host_policy(hosts_txt)).collect()
+    }
     for p, allowed in cases:
         url = f"https://w.example.com{p}"
         assert (url in kept) == allowed, (p, allowed)
 
 
-def test_robots_rules_passthrough_without_pattern_field(spark):
-    """A caller-built robots_rules array predating the pattern field
-    still works — every path is treated as a literal prefix."""
-    rules = [("h.example.com", [("/private", False), ("/private/ok", True)])]
-    hosts = spark.createDataFrame(
-        rules,
-        "host string, robots_rules array<struct<path:string,allow:boolean>>",
+def test_cycle_plan_runs_no_python_over_committed_hosts(spark, tmp_path):
+    """Bootstrap parses a raw robots_txt dim once, into the committed
+    ``hosts`` table; the cycle's robots filter and scheduler then read
+    its columns, so their executed plan has no Python node."""
+    raw = generate_hosts(spark).withColumn(
+        "robots_txt",
+        F.lit("User-agent: *\nCrawl-delay: 1\nDisallow: /private*\n"),
     )
-    f = _frontier(
-        spark,
-        [
-            ("h.example.com", "/private/x", 10),
-            ("h.example.com", "/private/ok/y", 10),
-            ("h.example.com", "/pub", 10),
-        ],
+    eng = CrawlEngine(str(tmp_path / "wh"))
+    eng.bootstrap(generate_seeds(spark, 40), raw)
+    hosts = eng.hosts.read(spark)
+    out = P.schedule(
+        P.robots_filter(eng.candidates(spark), hosts), hosts, 60_000
     )
-    kept = {r.url_canonical for r in P.robots_filter(f, hosts).collect()}
-    assert kept == {
-        "https://h.example.com/private/ok/y",
-        "https://h.example.com/pub",
-    }
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert out.count() > 0
+    assert inspect.getsource(P).count("pandas_udf") == 1

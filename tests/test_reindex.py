@@ -304,7 +304,7 @@ def test_search_index_reindex_crash_between_legs_replays_safely(
         [(9, "Other page", "totally unrelated words")],
         "doc_id long, title string, content string",
     )
-    ix.index_batch(spark, more, op_id="b9")
+    ix.bootstrap(spark, more, op_id="b9")
     # replay the full reindex — postings leg no-ops, tombstone leg
     # must adopt the COMMITTED generation
     ix.reindex(spark, changed, op_id="re-1")
@@ -390,7 +390,7 @@ def test_minhash_delete_then_reindex_resurrects(spark, tmp_path):
 
 def test_deletion_vectors_random_ops_match_model(spark, tmp_path):
     """Model-based check of the shared deletion-vector machinery:
-    a seeded random sequence of index_batch / reindex / delete /
+    a seeded random sequence of bootstrap / reindex / delete /
     compact ops must leave the live view equal to a trivial Python
     dict model (doc -> its newest tokens, absent if deleted) after
     EVERY step — including compactions interleaved mid-sequence."""
@@ -414,7 +414,7 @@ def test_deletion_vectors_random_ops_match_model(spark, tmp_path):
             d = next_new
             next_new += 1
             t = text_for(d, rev[d])
-            ix.index_batch(
+            ix.bootstrap(
                 spark,
                 spark.createDataFrame([(d, t)], "doc_id long, content string"),
                 op_id=f"s{step}",

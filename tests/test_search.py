@@ -173,7 +173,7 @@ def test_search_index_no_rebuild_on_query(docs, tmp_path, monkeypatch):
 
 
 def test_search_index_incremental_batch(docs, tmp_path):
-    """index_batch appends postings for new docs only; afterwards the
+    """bootstrap appends postings for new docs only; afterwards the
     probe sees the union corpus — identical to one-shot indexing."""
     from omni_crawler_spark.search_index import SearchIndex
 
@@ -183,7 +183,7 @@ def test_search_index_incremental_batch(docs, tmp_path):
     ix = SearchIndex(str(tmp_path / "ix"))
     ix.bootstrap(spark, old, op_id="boot")
     assert {r.doc_id for r in ix.query(spark, "market").collect()} == {1}
-    ix.index_batch(spark, new, op_id="cycle-1")
+    ix.bootstrap(spark, new, op_id="cycle-1")
     full = sorted(
         (r.doc_id, r.score) for r in ix.query(spark, "market").collect()
     )
