@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.analytics.registry import _t, ordered_small, register
+from omni_crawler_spark.frontier import politeness as P
 from omni_crawler_spark.functions import text as T
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.session import local_rows, spread
@@ -896,13 +897,12 @@ def crawl_redirect_resolve(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# REP longest-match evaluation as oracle-paired evidence: the engine
-# enforces robots rules inside the fetch path (frontier/politeness.py,
-# Arrow-parsed, pytest-pinned); this query re-expresses the MATCHING
-# SEMANTICS — most-specific (longest) rule wins, Allow wins ties,
-# no-match means allowed (RFC 9309 §2.2.2) — over a synthetic rule
-# set both engines derive, so the precedence logic itself is
-# value-checked by the DuckDB gate, not only by unit tests.
+# REP longest-match evaluation as oracle-paired evidence: the query
+# writes a robots.txt per synthetic host and runs the crawl's own
+# parser and matcher over it (frontier/politeness.py ``parse_policy``
+# + ``robots_match``), so the DuckDB gate value-checks the code the
+# fetch path runs — most-specific (longest) rule wins, Allow wins
+# ties, no-match means allowed (RFC 9309 §2.2.2).
 # ---------------------------------------------------------------------------
 
 # five rules per host, planted so every RFC 9309 matching feature
@@ -918,6 +918,13 @@ def crawl_redirect_resolve(spark, sf_dir):
 #   r5 Disallow /secK/article-19$   anchored rule, LONGER than r2 →
 #                                   doc 19 blocked despite the
 #                                   article-1 carve-out
+# The oracle SQL below differs from the engine on two conventions the
+# planted rules cannot tell apart: it leaves '$' out of a rule's
+# length (the engine counts its octets), and it does not escape regex
+# characters in rule paths (the engine does). No planted path holds a
+# regex character besides '*' and '$', and r5, the one anchored rule,
+# only competes with r1 and r2 of its own section, which it outlengths
+# either way.
 _ROBOTS_RULES_SQL = """
   SELECT 'host' || i || '.example.com' AS host,
          '/sec' || (i % 7) || '/' AS rule_path,
@@ -984,26 +991,24 @@ _ROBOTS_RULES_SQL = """
     """,
     doc="RFC 9309 rule evaluation, oracle-paired and covering the "
     "FULL matching grammar: prefix rules, '*' wildcards (any "
-    "octets), '$' end anchors, MOST-SPECIFIC-wins (longest rule, "
-    "anchor excluded from the length), Allow beats Disallow on "
-    "ties, and unmatched-means-allowed (§2.2.2). The synthetic set "
-    "plants each interplay on REACHABLE doc_ids: a section-wide "
-    "Disallow /secK/ with a longer literal Allow /secK/article-1 "
-    "carve-out; in the next section a wildcard Disallow "
-    "/secK'/article-1*3 (blocks 123) whose wildcard Allow "
+    "octets), '$' end anchors, MOST-SPECIFIC-wins (longest rule), "
+    "Allow beats Disallow on ties, and unmatched-means-allowed "
+    "(§2.2.2). The synthetic set plants each interplay on REACHABLE "
+    "doc_ids: a section-wide Disallow /secK/ with a longer literal "
+    "Allow /secK/article-1 carve-out; in the next section a wildcard "
+    "Disallow /secK'/article-1*3 (blocks 123) whose wildcard Allow "
     "/secK'/article-13* carve-out TIES its length on ids 130-139 — "
     "so the Allow-wins-ties rule is value-checked; and an anchored "
     "Disallow /secK/article-19$ that out-lengths the article-1 "
     "carve-out, blocking exactly doc 19 — '$' and "
-    "longest-overrides-Allow checked together. "
-    "Rules translate to regexes at parse time in BOTH engines "
-    "('*'→'.*', '^' prefix anchor, '$' passes through — the same "
-    "translation frontier/politeness.py:149-208 applies on the "
-    "fetch path, where literal rules keep a startswith fast path). "
-    "100 TB shape: the rule table is a broadcast dim (real robots "
-    "corpora are ~10^6 rules), regex match + per-URL argmax via one "
-    "map-side broadcast join and a groupBy(doc_id) max_by — no "
-    "window over the corpus",
+    "longest-overrides-Allow checked together. The Spark side is "
+    "the crawl's own matcher: each host's rules are written as a "
+    "robots.txt, parsed on the driver by politeness.parse_policy, "
+    "and matched by politeness.robots_match over one broadcast join "
+    "of the 20-row policy dim — no shuffle, no aggregate. The oracle "
+    "leaves '$' out of a rule's length and does not escape regex "
+    "characters; the planted rules give the same answer under both "
+    "conventions",
 )
 def crawl_robots_eval(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -1019,62 +1024,34 @@ def crawl_robots_eval(spark, sf_dir):
             F.lit("/article-"), doc_id.cast("string"),
         ).alias("path"),
     )
-    i = F.col("id")
-    hosts20 = spark.range(20)
-
-    def rule(sec: "F.Column", tail: str, is_allow: int):
-        return hosts20.select(
-            F.concat(F.lit("host"), i.cast("string"),
-                     F.lit(".example.com")).alias("host"),
-            F.concat(F.lit("/sec"), sec.cast("string"),
-                     F.lit(tail)).alias("rule_path"),
-            F.lit(is_allow).alias("is_allow"),
-        )
-
-    rules = (
-        rule(i % 7, "/", 0)
-        .unionByName(rule(i % 7, "/article-1", 1))
-        .unionByName(rule((i + 1) % 7, "/article-1*3", 0))
-        .unionByName(rule((i + 1) % 7, "/article-13*", 1))
-        .unionByName(rule(i % 7, "/article-19$", 0))
-        .withColumn(
-            "rule_re",
-            F.concat(
-                F.lit("^"),
-                F.regexp_replace("rule_path", "\\*", ".*"),
-            ),
-        )
-        .withColumn(
-            "rule_len",
-            F.length(F.regexp_replace("rule_path", "\\$", "")),
-        )
+    policy = local_rows(
+        spark,
+        [
+            (
+                f"host{i}.example.com",
+                P.parse_policy(
+                    "User-agent: *\n"
+                    f"Disallow: /sec{i % 7}/\n"
+                    f"Allow: /sec{i % 7}/article-1\n"
+                    f"Disallow: /sec{(i + 1) % 7}/article-1*3\n"
+                    f"Allow: /sec{(i + 1) % 7}/article-13*\n"
+                    f"Disallow: /sec{i % 7}/article-19$\n"
+                )[0],
+            )
+            for i in range(20)
+        ],
+        f"host string, robots_rules {P.RULES_TYPE}",
     )
-    best = (
-        parts.join(F.broadcast(rules), "host")
-        .filter(F.expr("path rlike rule_re"))
-        .groupBy("doc_id")
-        .agg(
-            F.max_by(
-                F.struct("rule_path", "is_allow"),
-                F.struct(
-                    F.col("rule_len").alias("l"),
-                    F.col("is_allow").alias("a"),
-                    F.col("rule_path").alias("p"),
-                ),
-            ).alias("m")
-        )
-        .select("doc_id", "m.rule_path", "m.is_allow")
-    )
-    verdict = (
-        F.when(F.col("rule_path").isNull(), F.lit("allowed"))
-        .when(F.col("is_allow") == 1, F.lit("allowed"))
-        .otherwise(F.lit("disallowed"))
-    )
+    m = F.col("m")
     return ordered_small(
-        parts.join(F.broadcast(best), "doc_id", "left").select(
+        parts.join(F.broadcast(policy), "host", "left")
+        .withColumn("m", P.robots_match(F.col("path"), F.col("robots_rules")))
+        .select(
             "doc_id", "host", "path",
-            F.coalesce(F.col("rule_path"), F.lit("")).alias("matched_rule"),
-            verdict.alias("verdict"),
+            F.coalesce(m["path"], F.lit("")).alias("matched_rule"),
+            F.when(m["allow"], F.lit("allowed"))
+            .otherwise(F.lit("disallowed"))
+            .alias("verdict"),
         ),
         "doc_id",
     )

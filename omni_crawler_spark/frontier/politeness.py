@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 # and match against User-agent groups)
 ROBOTS_UA = "omni-crawler-spark"
 
-_RULES_TYPE = "array<struct<path:string,allow:boolean,pattern:string>>"
+RULES_TYPE = "array<struct<path:string,allow:boolean,pattern:string>>"
 
 
 def rule_pattern(path: str) -> str | None:
@@ -179,6 +179,19 @@ def _delay_ms(group) -> int | None:
     return min(int(group[2] * 1000), 86_400_000)
 
 
+def parse_policy(text: str) -> tuple[list[dict], int | None, list[str]]:
+    """One robots.txt → ``(robots_rules, crawl_delay_ms, sitemaps)``
+    for our agent, in ``host_policy``'s column forms: each rule is a
+    ``{path, allow, pattern}`` dict (``pattern`` from
+    ``rule_pattern``)."""
+    g = _group_for_agent(text, ROBOTS_UA)
+    rules = [
+        {"path": p, "allow": al, "pattern": rule_pattern(p)}
+        for p, al in (g[1] if g else [])
+    ]
+    return rules, _delay_ms(g), parse_robots_sitemaps(text)
+
+
 def host_policy(hosts: DataFrame) -> DataFrame:
     """The crawl's host-policy dim, one row per host of the raw
     ``hosts`` dim, with the columns ``robots_filter`` and ``schedule``
@@ -200,21 +213,14 @@ def host_policy(hosts: DataFrame) -> DataFrame:
     if "robots_txt" in cols:
 
         @F.pandas_udf(
-            f"struct<robots_rules:{_RULES_TYPE},crawl_delay_ms:int,"
+            f"struct<robots_rules:{RULES_TYPE},crawl_delay_ms:int,"
             "sitemaps:array<string>>"
         )
         def parse(texts: pd.Series) -> pd.DataFrame:
-            rows = []
-            for t in texts:
-                if t is None:
-                    rows.append((None, None, None))
-                    continue
-                g = _group_for_agent(t, ROBOTS_UA)
-                rules = [
-                    {"path": p, "allow": al, "pattern": rule_pattern(p)}
-                    for p, al in (g[1] if g else [])
-                ]
-                rows.append((rules, _delay_ms(g), parse_robots_sitemaps(t)))
+            rows = [
+                (None, None, None) if t is None else parse_policy(t)
+                for t in texts
+            ]
             out = pd.DataFrame(
                 rows, columns=["robots_rules", "crawl_delay_ms", "sitemaps"]
             )
@@ -253,39 +259,45 @@ def host_policy(hosts: DataFrame) -> DataFrame:
     )
 
 
-def robots_verdict(path: "F.Column", rules: "F.Column") -> "F.Column":
-    """True iff ``path`` is allowed under ``rules``
-    (array<struct<path,allow,pattern>>): RFC 9309 precedence — the
-    LONGEST matching rule path wins (most octets of the rule); on a
-    length tie Allow wins; no matching rule (or no rules) → allowed.
-    Rule paths carrying the RFC special characters ``*``/trailing
-    ``$`` match through their regex translation (``rule_pattern``);
-    plain rules — the overwhelming majority of real robots files —
-    stay on the cheap ``startswith`` prefix match. Pure column
-    expression over the broadcast host dim's rules array — zero
-    Python on the frontier path (regexp_like is a JVM expression;
-    only the rare wildcard rules pay a per-row pattern evaluation)."""
+def robots_match(path: "F.Column", rules: "F.Column") -> "F.Column":
+    """The rule in ``rules`` (array<struct<path,allow,pattern>>) that
+    governs ``path``, as struct<path, allow>: RFC 9309 precedence —
+    the LONGEST matching rule path wins (most octets of the rule, a
+    trailing ``$`` included); on a length tie Allow wins. No matching
+    rule → ``path`` NULL and ``allow`` true; a NULL ``rules`` array →
+    a NULL struct. Rule paths carrying the RFC special characters
+    ``*``/trailing ``$`` match through their regex translation
+    (``rule_pattern``); plain rules — the overwhelming majority of
+    real robots files — stay on the cheap ``startswith`` prefix
+    match. Pure column expression over the broadcast host dim's rules
+    array — zero Python on the frontier path (regexp_like is a JVM
+    expression; only the rare wildcard rules pay a per-row pattern
+    evaluation)."""
     matching = F.filter(
         rules,
         lambda r: F.when(
             r["pattern"].isNull(), F.startswith(path, r["path"])
         ).otherwise(F.regexp_like(path, r["pattern"])),
     )
-    best = F.aggregate(
+    return F.aggregate(
         matching,
         F.struct(
-            F.lit(-1).cast("int").alias("ln"), F.lit(True).alias("allow")
+            F.lit(-1).cast("int").alias("ln"),
+            F.lit(None).cast("string").alias("path"),
+            F.lit(True).alias("allow"),
         ),
         lambda acc, r: F.when(
             (F.length(r["path"]) > acc["ln"])
             | ((F.length(r["path"]) == acc["ln"]) & r["allow"]),
             F.struct(
                 F.length(r["path"]).cast("int").alias("ln"),
+                r["path"].alias("path"),
                 r["allow"].alias("allow"),
             ),
         ).otherwise(acc),
+        lambda acc: F.struct(acc["path"].alias("path"),
+                             acc["allow"].alias("allow")),
     )
-    return best["allow"]
 
 
 def robots_filter(frontier: DataFrame, hosts: DataFrame) -> DataFrame:
@@ -300,9 +312,9 @@ def robots_filter(frontier: DataFrame, hosts: DataFrame) -> DataFrame:
     joined = frontier.join(
         F.broadcast(hosts.select("host", "robots_rules")), "host", "left"
     )
-    allowed = robots_verdict(path, F.col("robots_rules"))
+    allowed = robots_match(path, F.col("robots_rules"))["allow"]
     # NULL rules (unknown host / unreadable robots) → allowed: the
-    # aggregate over a NULL array yields a NULL verdict, coalesced
+    # aggregate over a NULL array yields a NULL match, coalesced
     # to True here
     return joined.filter(F.coalesce(allowed, F.lit(True))).drop(
         "robots_rules"

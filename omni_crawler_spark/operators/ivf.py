@@ -211,10 +211,9 @@ class IVFIndex:
                 vec_col=self.vec_col,
                 id_col=self.id_col,
             )
-            tmp = f"{self._cent_path}.tmp-{uuid.uuid4().hex}"
+            tmp = f"{self._cent_path}.tmp-{uuid.uuid4().hex}.npy"
             np.save(tmp, cent)
-            os.replace(tmp + ".npy" if not tmp.endswith(".npy") else tmp,
-                       self._cent_path)
+            os.replace(tmp, self._cent_path)
         self.add_batch(spark, corpus, op_id=op_id)
 
     def add_batch(

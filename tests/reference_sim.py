@@ -20,7 +20,7 @@ from omni_crawler_spark.frontier.synthetic import (
     synth_page_html,
     synth_sitemap_xml,
 )
-from omni_crawler_spark.frontier.xxh64 import xxh64_str
+from tests.xxh64 import xxh64_str
 
 # --- canonicalization (mirror of functions/urls.py rules) -----------------
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from omni_crawler_spark.frontier import bloom as B
 from omni_crawler_spark.frontier.crawl import CrawlEngine
 from omni_crawler_spark.frontier.synthetic import generate_hosts, generate_seeds
-from omni_crawler_spark.frontier.xxh64 import xxh64_str
+from tests.xxh64 import xxh64_str
 from omni_crawler_spark.functions import urls as U
 from omni_crawler_spark.lakehouse import SnapshotTable
 from omni_crawler_spark.search_index import SearchIndex

@@ -349,6 +349,8 @@ def test_robots_wildcard_and_anchor_rules(spark):
         "Disallow: /private*\n"
         "Allow: /private-ok\n"
         "Disallow: /exact$\n"
+        "Allow: /tie\n"
+        "Disallow: /tie$\n"
     )
     hosts_txt = spark.createDataFrame(
         [("w.example.com", txt)], "host string, robots_txt string"
@@ -362,6 +364,9 @@ def test_robots_wildcard_and_anchor_rules(spark):
                                         # Disallow /private* (9 octets)
         ("/exact", False),              # anchored exact match
         ("/exact/sub", True),           # anchor: subpath not blocked
+        ("/tie", False),                # Disallow /tie$ (5 octets, '$'
+                                        # counted) beats Allow /tie (4)
+        ("/tie/x", True),               # only Allow /tie matches
         ("/other", True),
     ]
     f = _frontier(

@@ -390,8 +390,8 @@ def test_robots_eval_longest_match_precedence(spark, sf_dir):
     """REP semantics in the oracle-paired query, re-derived by a
     THIRD implementation (Python re over the same synthetic rule
     set): longest rule wins ('$' excluded from the length), Allow
-    beats Disallow on ties — the wildcard Disallow article-*3 vs its
-    anchored Allow article-13$ is an exact length tie — and
+    beats Disallow on ties — the wildcard Disallow article-1*3 vs its
+    wildcard Allow article-13* is an exact length tie — and
     unmatched means allowed."""
     import re
 
@@ -431,6 +431,30 @@ def test_robots_eval_longest_match_precedence(spark, sf_dir):
     assert by_id[135].matched_rule.endswith("article-13*")
     assert by_id[19].verdict == "disallowed"              # '$' + longest
     assert by_id[19].matched_rule.endswith("article-19$")
+
+
+def test_robots_eval_runs_the_engine_matcher(spark, sf_dir, monkeypatch):
+    """The oracle-paired robots query evaluates the crawl's own robots
+    parser and matcher, so the DuckDB gate checks the code the fetch
+    path runs; one broadcast join does it, with no aggregate and no
+    hash shuffle."""
+    from omni_crawler_spark.frontier import politeness as P
+
+    calls = {"parse_policy": 0, "robots_match": 0}
+    for name in calls:
+        real = getattr(P, name)
+
+        def counted(*a, _real=real, _name=name, **k):
+            calls[_name] += 1
+            return _real(*a, **k)
+
+        monkeypatch.setattr(P, name, counted)
+    df = REGISTRY["crawl_robots_eval"].build(spark, sf_dir)
+    assert calls["parse_policy"] >= 1 and calls["robots_match"] >= 1, calls
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    assert "hashpartitioning" not in plan, plan
 
 
 def test_pipeline_image_layout_stage_monotone(spark, sf_dir):

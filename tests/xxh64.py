@@ -4,9 +4,7 @@ spec) matching Spark's ``xxhash64`` SQL function bit-for-bit.
 Spark hashes each column value's type-specific byte representation
 with seed 42 by default (strings → UTF-8 bytes). The reference-
 semantics simulator (tests/reference_sim.py) needs the same 64-bit
-values to reproduce lane assignment and bloom bucketing without a
-JVM, and the bloom probe arithmetic (frontier/bloom.py::_positions)
-consumes these hashes directly.
+values to reproduce URL hashes and lane assignment without a JVM.
 
 Verified against Spark in tests/test_frontier.py::test_xxh64_matches_spark.
 """
