@@ -449,10 +449,8 @@ def dedup_incremental_batch(spark, sf_dir):
     ix = MinHashIndex(
         cache_root("/tmp/ocs_mhidx", sf_dir), shingle_k=14, threshold=0.9
     )
-    ix.bootstrap(spark, corpus, "doc_id", "text", op_id="bootstrap")
-    kept, dropped = ix.dedup_batch(
-        spark, batch, "doc_id", "text", op_id="batch1"
-    )
+    ix.bootstrap(spark, corpus, op_id="bootstrap")
+    kept, dropped = ix.dedup_batch(spark, batch, op_id="batch1")
     out = kept.select(
         "doc_id",
         F.lit("kept").alias("status"),

@@ -361,7 +361,7 @@ def pipeline_recrawl(spark, sf_dir):
     )
     probe_cols = ["url_hash", "fld", "boost10", "tok"]
     live = (
-        eng.index.postings(spark)
+        eng.index.live(spark)
         .join(F.broadcast(t_hashes), "url_hash", "left_semi")
         .select(*probe_cols)
     )

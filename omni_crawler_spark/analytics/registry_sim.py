@@ -499,7 +499,7 @@ def sim_ivf_topk(spark, sf_dir):
     from omni_crawler_spark.operators import ivf as I
 
     e = _t(spark, sf_dir, "embeddings")
-    cent = I.train_centroids(e, n_cells=16, dim=64)
+    cent = I.train_centroids(e, n_cells=16)
     return I.ivf_topk(e, [0, 1, 2, 3, 4], cent, k=5, nprobe=4).orderBy(
         "query_id", "rank"
     )
@@ -772,9 +772,9 @@ def sim_ivf_incremental(spark, sf_dir):
     from omni_crawler_spark.operators.ivf import IVFIndex
 
     e = _t(spark, sf_dir, "embeddings")
-    ix = IVFIndex(cache_root("/tmp/ocs_ivfidx", sf_dir), n_cells=16, dim=64)
+    ix = IVFIndex(cache_root("/tmp/ocs_ivfidx", sf_dir), n_cells=16)
     ix.bootstrap(spark, e.filter(F.col("vec_id") % 2 == 1), op_id="boot")
-    ix.add_batch(spark, e.filter(F.col("vec_id") % 2 == 0), op_id="b1")
+    ix.bootstrap(spark, e.filter(F.col("vec_id") % 2 == 0), op_id="b1")
     ix.reindex(
         spark,
         e.filter(F.col("vec_id").isin(1, 3)).select(

@@ -442,12 +442,7 @@ class CrawlEngine:
             # broadcast join instead of a corpus-sized groupBy.
             if not self.maintain_index:
                 return
-            from omni_crawler_spark.search import build_inverted_index
-
             valid_now = fetched_now.filter(F.col("valid"))
-            postings = build_inverted_index(
-                valid_now, self.index.fields, self.index.id_col
-            )
             re_ids = self._pending_reindex_ids(spark, valid_now)
             if re_ids is None and (
                 self.index.table.version_of(f"{op}-index-post") is not None
@@ -460,7 +455,7 @@ class CrawlEngine:
                 # legs then no-op under their committed op_ids.
                 re_ids = local_rows(spark, [], "url_hash long")
             if re_ids is None:
-                self.index.dv.append(postings, op_id=f"{op}-index")
+                self.index.bootstrap(spark, valid_now, op_id=f"{op}-index")
             else:
                 re_ids = re_ids.localCheckpoint()
                 unchanged_recrawl = (
@@ -471,6 +466,7 @@ class CrawlEngine:
                     and re_ids.limit(1).count() > 0
                     else None
                 )
+                changed = valid_now
                 if unchanged_recrawl is not None:
                     # unchanged re-fetches keep their live postings:
                     # no tombstone, no re-post (the new postings are
@@ -480,13 +476,13 @@ class CrawlEngine:
                         "url_hash",
                         "left_anti",
                     )
-                    postings = postings.join(
+                    changed = valid_now.join(
                         F.broadcast(unchanged_recrawl),
                         "url_hash",
                         "left_anti",
                     )
-                self.index.dv.reindex(
-                    spark, postings, re_ids, op_id=f"{op}-index"
+                self.index.reindex(
+                    spark, changed, re_ids, op_id=f"{op}-index"
                 )
                 self._consume_reindex_marker(spark, valid_now, op)
             if is_compact:

@@ -1,13 +1,18 @@
-"""Shared deletion-vector machinery for persisted indexes.
+"""The persisted-index lifecycle: one table under deletion vectors.
 
-One implementation of the merge-on-read update/delete pattern used by
-both :class:`~omni_crawler_spark.search_index.SearchIndex` (inverted
-postings) and
+:class:`DeletionVectors` is the base class of every persisted index
+here — :class:`~omni_crawler_spark.search_index.SearchIndex`
+(inverted postings),
 :class:`~omni_crawler_spark.operators.dedup_incremental.MinHashIndex`
-(banded signatures) — the Iceberg/Delta deletion-vector analog of the
-reference's replace-by-article-id stores (PG ``ON CONFLICT DO
-UPDATE`` omni_storage.py:137-205, SQLite ``INSERT OR REPLACE``
-:410-464, ES doc_id :275-296):
+(banded signatures) and :class:`~omni_crawler_spark.operators.ivf.IVFIndex`
+(frozen-centroid assignments). The subclasses differ only in
+:meth:`DeletionVectors.rows`, how a batch of documents becomes index
+rows; ``bootstrap``, ``reindex``, ``delete``, ``compact`` and ``live``
+are one merge-on-read update/delete implementation — the
+Iceberg/Delta deletion-vector analog of the reference's
+replace-by-article-id stores (PG ``ON CONFLICT DO UPDATE``
+omni_storage.py:137-205, SQLite ``INSERT OR REPLACE`` :410-464, ES
+doc_id :275-296):
 
 - index rows carry ``gen:int`` (generation); pre-existing roots
   without the column read as generation 0;
@@ -54,31 +59,42 @@ from omni_crawler_spark.lakehouse.table import SnapshotTable
 
 
 class DeletionVectors:
-    """Deletion-vector state and operations for one index table.
-
-    ``table`` holds the index rows (plus the managed ``gen`` column);
-    the tombstone :class:`SnapshotTable` lives under
+    """A persisted index: the index rows at ``root`` (plus the managed
+    ``gen`` column) and the tombstone :class:`SnapshotTable` at
     ``<root>/tombstones``. ``id_col`` names the document-identity
-    column in both."""
+    column in both. Subclasses override :meth:`rows`."""
 
-    def __init__(self, table: SnapshotTable, root: str, id_col: str):
-        self.table = table
+    def __init__(self, root: str, name: str, id_col: str):
         self.id_col = id_col
+        self.table = SnapshotTable(root, name=name)
         self.tomb = SnapshotTable(
-            os.path.join(root, "tombstones"), name=f"{table.name}_tomb"
+            os.path.join(root, "tombstones"), name=f"{name}_tomb"
         )
+
+    def rows(self, batch: DataFrame) -> DataFrame:
+        """The index rows of ``batch``, without a ``gen`` column."""
+        return batch
 
     # -- generations ---------------------------------------------------------
 
     def next_gen(self) -> int:
         return self.table.current_version() + 1
 
-    def append(self, rows: DataFrame, op_id: str | None = None) -> None:
-        """Append new-id rows at a fresh generation (bootstrap /
-        per-cycle batch indexing)."""
-        self.table.append(
-            rows.withColumn("gen", F.lit(self.next_gen())), op_id=op_id
-        )
+    def _append(self, rows: DataFrame, op_id: str | None) -> int:
+        """Append ``rows`` at a fresh generation; return it."""
+        gen = self.next_gen()
+        self.table.append(rows.withColumn("gen", F.lit(gen)), op_id=op_id)
+        return gen
+
+    def bootstrap(
+        self, spark: SparkSession, batch: DataFrame, op_id: str | None = None
+    ) -> None:
+        """Index docs NEW to the index at a fresh generation: the
+        one-time backfill, or one cycle's or micro-batch's new docs —
+        O(batch). Idempotent under ``op_id`` within the
+        snapshot-retention window. For a CHANGED known doc use
+        :meth:`reindex`, which tombstones its stale rows."""
+        self._append(self.rows(batch), op_id)
 
     # -- tombstones ----------------------------------------------------------
 
@@ -107,16 +123,18 @@ class DeletionVectors:
     def reindex(
         self,
         spark: SparkSession,
-        rows: DataFrame,
-        ids: DataFrame,
+        batch: DataFrame,
+        ids: DataFrame | None = None,
         op_id: str | None = None,
     ) -> None:
-        """Replace the indexed rows of ``ids`` with ``rows`` (the new
-        rows for exactly those ids, WITHOUT a gen column). O(batch);
-        crash-replay converges (see module docstring)."""
-        gen = self.next_gen()
+        """Replace the indexed rows of ``ids`` (default: ``batch``'s
+        ids) with the rows of ``batch`` — the PG ``ON CONFLICT DO
+        UPDATE`` analog. O(batch); crash-replay converges (see module
+        docstring)."""
+        if ids is None:
+            ids = batch.select(self.id_col)
         op_p = None if op_id is None else f"{op_id}-post"
-        self.table.append(rows.withColumn("gen", F.lit(gen)), op_id=op_p)
+        gen = self._append(self.rows(batch), op_p)
         if op_id is not None:
             # recover the COMMITTED generation: on replay the table
             # has moved on and next_gen() would overshoot the rows we
@@ -133,10 +151,13 @@ class DeletionVectors:
             ids, gen, None if op_id is None else f"{op_id}-tomb"
         )
 
-    def delete(self, ids: DataFrame, op_id: str | None = None) -> None:
-        """Drop ids from the index (rows reclaimed at compact). The
-        floor is the first generation not yet written: every row that
-        exists now dies, a row written later (a reindex) lives."""
+    def delete(
+        self, spark: SparkSession, ids: DataFrame, op_id: str | None = None
+    ) -> None:
+        """Drop ids from the index (pages gone on re-crawl); rows are
+        reclaimed at :meth:`compact`. The floor is the first
+        generation not yet written: every row that exists now dies, a
+        row written later (a reindex) lives."""
         self._tombstone(ids, self.next_gen(), op_id)
 
     # -- reads ---------------------------------------------------------------

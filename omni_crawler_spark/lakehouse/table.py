@@ -124,7 +124,11 @@ class SnapshotTable:
         self.root = root
         self.name = name
         self.key = key
-        assert on_conflict in ("update", "ignore")
+        if on_conflict not in ("update", "ignore"):
+            raise ValueError(
+                "on_conflict must be 'update' or 'ignore', got "
+                f"{on_conflict!r}"
+            )
         self.on_conflict = on_conflict
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)

@@ -20,18 +20,16 @@ with work proportional to the BATCH:
 - surviving signatures are appended under an idempotent ``op_id`` —
   replaying a crashed cycle cannot double-index (same contract as
   every other crawl commit, lakehouse/table.py);
-- ``reindex``/``delete`` replace or drop a doc's signature when a
-  re-crawl changes or removes the page (the reference's every store
-  is replace-by-article-id: PG ``ON CONFLICT DO UPDATE``
-  omni_storage.py:137-205, SQLite ``INSERT OR REPLACE`` :410-464) —
-  the SHARED deletion-vector machinery
-  (lakehouse/deletion_vectors.py, one implementation for this index
-  and SearchIndex): index rows carry a generation, a tiny broadcast
-  tombstone table records each re-indexed doc's live floor
-  (latest-wins, so delete-then-reindex resurrects), probes
-  anti-filter stale signatures, and ``compact`` folds the vectors
-  away. O(batch) per re-crawl, never a corpus-sized rewrite;
-  crash-replay converges (floors recovered from the committed leg).
+- the index is a
+  :class:`~omni_crawler_spark.lakehouse.deletion_vectors.DeletionVectors`
+  table whose rows are the banded signatures, so ``reindex`` /
+  ``delete`` replace or drop a doc's signature when a re-crawl
+  changes or removes the page (the reference's every store is
+  replace-by-article-id: PG ``ON CONFLICT DO UPDATE``
+  omni_storage.py:137-205, SQLite ``INSERT OR REPLACE`` :410-464):
+  probes anti-filter stale signatures through a tiny broadcast
+  tombstone table and ``compact`` folds them away. O(batch) per
+  re-crawl, never a corpus-sized rewrite.
 
 Reference parity: the reference dedups only by exact content hash at
 insert time (src/storage/omni_storage.py INSERT ... ON CONFLICT);
@@ -41,11 +39,13 @@ cannot do and a training-data pipeline needs every cycle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
-from omni_crawler_spark.lakehouse.table import SnapshotTable
+from omni_crawler_spark.lakehouse.table import ensure_params_marker
 from omni_crawler_spark.operators.dedup import (
     bucket_pairs,
     drop_oversized,
@@ -55,14 +55,15 @@ from omni_crawler_spark.operators.dedup import (
 from omni_crawler_spark.session import local_rows, spread
 
 
-class MinHashIndex:
+class MinHashIndex(DeletionVectors):
     """Persisted banded-signature index for incremental near-dedup.
 
-    One row per (doc_id, band): ``(doc_id, band, band_hash, sig)``.
-    Carrying ``sig`` on every band row costs bands× duplication — the
-    sandbox-simple layout; at 10^10 docs the index splits into a
-    (doc_id, sig) table and a (band, band_hash, doc_id) posting table
-    bucketed by band_hash, joined only for the candidate doc_ids.
+    One row per (doc_id, band): ``(doc_id, band, band_hash, sig)``,
+    signed from the ``text`` column. Carrying ``sig`` on every band
+    row costs bands× duplication — the sandbox-simple layout; at
+    10^10 docs the index splits into a (doc_id, sig) table and a
+    (band, band_hash, doc_id) posting table bucketed by band_hash,
+    joined only for the candidate doc_ids.
     """
 
     def __init__(
@@ -74,18 +75,16 @@ class MinHashIndex:
         threshold: float = 0.9,
         max_bucket_size: int = 200,
     ):
-        assert num_perm % bands == 0
-        self.table = SnapshotTable(root, name="minhash_index")
-        self.dv = DeletionVectors(self.table, root, "doc_id")
+        if num_perm % bands:
+            raise ValueError(
+                f"num_perm {num_perm} is not a multiple of bands {bands}"
+            )
+        super().__init__(root, "minhash_index", "doc_id")
         # signature-parameter marker: an index holds signatures under
         # ONE (num_perm, shingle_k, bands) config; opening an existing
         # root with different params would silently mix incomparable
         # signatures, so fail loudly instead (atomic create-or-check:
         # concurrent bootstraps cannot observe a half-written marker)
-        import os
-
-        from omni_crawler_spark.lakehouse.table import ensure_params_marker
-
         params = {
             "num_perm": num_perm,
             "shingle_k": shingle_k,
@@ -101,20 +100,15 @@ class MinHashIndex:
         self.threshold = threshold
         self.max_bucket_size = max_bucket_size
 
-    # -- signature plumbing --------------------------------------------------
-
-    def banded(self, df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """(doc_id, band, band_hash, sig) rows for ``df`` — one
+    def rows(self, batch: DataFrame) -> DataFrame:
+        """(doc_id, band, band_hash, sig) rows for ``batch`` — one
         vectorized signature pass, then a codegen'd band explode."""
         sig_udf = minhash_signature_udf(self.num_perm, self.shingle_k)
         # spread: the Arrow signature kernel is the CPU cost
         sig = (
-            df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+            batch.select("doc_id", "text")
             .transform(spread, "doc_id")
-            .select(
-                "doc_id",
-                sig_udf(F.col(text_col)).alias("sig"),
-            )
+            .select("doc_id", sig_udf(F.col("text")).alias("sig"))
         )
         return sig.select(
             "doc_id",
@@ -138,17 +132,6 @@ class MinHashIndex:
         )
         return agree / F.size(sig_a)
 
-    @property
-    def tomb(self) -> SnapshotTable:
-        return self.dv.tomb
-
-    def _live(self, spark: SparkSession, keep_gen: bool = False) -> DataFrame:
-        """Index rows minus deletion-vector casualties (shared
-        machinery, lakehouse/deletion_vectors.py): the tombstone
-        floors are broadcast (O(#reindexed-since-compaction), tiny);
-        the index side streams with no shuffle."""
-        return self.dv.live(spark, keep_gen=keep_gen)
-
     def _cross_probe(
         self, spark: SparkSession, b_probe: DataFrame
     ) -> DataFrame:
@@ -158,7 +141,7 @@ class MinHashIndex:
         signatures of re-indexed docs are anti-filtered first
         (deletion vectors) so a changed page is only ever matched
         against its NEWEST signature."""
-        idx = self._live(spark)
+        idx = self.live(spark)
         return (
             idx.withColumnRenamed("doc_id", "old_id")
             .withColumnRenamed("sig", "old_sig")
@@ -188,68 +171,10 @@ class MinHashIndex:
             )
         )
 
-    # -- index lifecycle -----------------------------------------------------
-
-    def compact(self, spark: SparkSession, op_id: str | None = None) -> int:
-        """Fold the append-per-batch data dirs into one snapshot with
-        the deletion vectors APPLIED (stale signatures of re-indexed
-        docs physically dropped, tombstones cleared) — an index
-        appended to every cycle accumulates O(cycles) directories that
-        every probe must list and open, the same read-amplification
-        bound as the frontier log's periodic compaction
-        (frontier/crawl.py). Replaying a completed compaction no-ops;
-        a crash between the two commits is safe (re-applying
-        tombstones to resolved rows is a no-op)."""
-        return self.dv.compact(spark, op_id=op_id)
-
-    def bootstrap(
-        self,
-        spark: SparkSession,
-        corpus: DataFrame,
-        id_col: str,
-        text_col: str,
-        op_id: str | None = None,
-    ) -> None:
-        """Index an existing corpus (one-time backfill)."""
-        self.dv.append(self.banded(corpus, id_col, text_col), op_id=op_id)
-
-    def reindex(
-        self,
-        spark: SparkSession,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        op_id: str | None = None,
-    ) -> None:
-        """Replace the stored signatures of ``docs`` (re-crawled,
-        changed pages): one O(batch) signature pass appended at a
-        fresh generation + one tombstone row per doc marking older
-        generations dead — subsequent probes use ONLY the new
-        signature. Crash anywhere replays to the same state (the
-        tombstone floor is recovered from the committed signature
-        leg, lakehouse/deletion_vectors.py)."""
-        self.dv.reindex(
-            spark,
-            self.banded(docs, id_col, text_col),
-            docs.select(F.col(id_col).alias("doc_id")),
-            op_id=op_id,
-        )
-
-    def delete(
-        self, spark: SparkSession, ids: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Drop docs from the index (pages gone on re-crawl): one
-        tombstone row per id; signatures are reclaimed at ``compact``
-        and a later :meth:`reindex` resurrects the doc. ``ids`` must
-        carry a ``doc_id`` column."""
-        self.dv.delete(ids.select("doc_id"), op_id=op_id)
-
     def dedup_batch(
         self,
         spark: SparkSession,
         batch: DataFrame,
-        id_col: str,
-        text_col: str,
         op_id: str | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Dedup ``batch`` against the index AND itself; index the
@@ -269,7 +194,7 @@ class MinHashIndex:
         collision-bounded small; ``kept`` depends only on ``batch`` +
         ``dropped``).
         """
-        b = self.banded(batch, id_col, text_col).persist()
+        b = self.rows(batch).persist()
 
         # drop degenerate (boilerplate) buckets within the batch
         b_probe = drop_oversized(
@@ -319,8 +244,8 @@ class MinHashIndex:
         # (a~b~c keeps a, drops b and c — standard LSH-dedup greedy);
         # exact chain resolution is the CC operator's job downstream.
         kept = batch.join(
-            dropped.select(F.col("new_id").alias(id_col)),
-            id_col,
+            dropped.select(F.col("new_id").alias("doc_id")),
+            "doc_id",
             "left_anti",
         )
         kept_banded = b.join(
@@ -328,6 +253,6 @@ class MinHashIndex:
             "doc_id",
             "left_anti",
         )
-        self.dv.append(kept_banded, op_id=op_id)
+        self._append(kept_banded, op_id)
         b.unpersist()
         return kept, dropped

@@ -10,9 +10,16 @@ Search: queries probe their ``nprobe`` nearest centroid cells only —
 at 10^10 vectors with 4096 cells and nprobe=8, each query scores
 ~0.2% of the corpus instead of all of it, and the cell id is the
 natural partition key for the index table.
+Persist: :class:`IVFIndex` keeps the assignments in a
+deletion-vector table (lakehouse/deletion_vectors.py) — batches are
+appended O(batch) with frozen centroids, and changed vectors are
+replaced by id.
 """
 
 from __future__ import annotations
+
+import os
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -21,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
+from omni_crawler_spark.lakehouse.table import ensure_params_marker
 from omni_crawler_spark.operators.similarity import cosine_pair_udf
 from omni_crawler_spark.session import local_rows
 
@@ -28,7 +37,6 @@ from omni_crawler_spark.session import local_rows
 def train_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
-    dim: int = 64,
     sample: int = 2048,
     iters: int = 10,
     seed: int = 42,
@@ -138,53 +146,42 @@ def ivf_topk(
     )
 
 
-class IVFIndex:
+class IVFIndex(DeletionVectors):
     """Persisted IVF index: centroids trained once, assignments
     appended in O(batch) — the similarity-search twin of the
     incremental dedup index (operators/dedup_incremental.py).
 
     Layout under ``root``: ``centroids.npy`` (tiny, written once,
-    atomic rename) + a SnapshotTable of (id, embedding, cell) rows.
+    atomic rename), ``index_params.json`` (``n_cells``, ``id_col``,
+    ``vec_col``; a root reopened with other params fails loudly) and
+    a :class:`DeletionVectors` table of (id, embedding, cell) rows.
     New batches are assigned with the FROZEN centroids (one broadcast
     matmul per Arrow batch, no corpus re-read); searches probe the
-    persisted assignments, so query cost is independent of how many
+    live assignments, so query cost is independent of how many
     batches built the index. Centroid drift at 10^10-vector horizons
     is handled the way production IVF systems do: retrain offline
     into a NEW root, cut over, never mutate in place.
 
-    Re-crawl semantics: like the other two persisted indexes
-    (SearchIndex, MinHashIndex), a changed page's embedding is
-    replaced via :meth:`reindex` / dropped via :meth:`delete` through
-    the SHARED deletion-vector machinery
-    (lakehouse/deletion_vectors.py) — the analog of the reference's
-    replace-by-article-id stores (PG ``ON CONFLICT DO UPDATE``
-    omni_storage.py:137-205, SQLite ``INSERT OR REPLACE`` :410-464,
-    ES doc_id :275-296). Searches anti-filter stale assignments with
-    a broadcast tombstone-floor join (O(#reindexed-since-compaction),
-    index side streams); ``compact`` folds the vectors physically.
+    A changed page's embedding is replaced through the inherited
+    ``reindex`` and dropped through ``delete`` — the analog of the
+    reference's replace-by-article-id stores (PG ``ON CONFLICT DO
+    UPDATE`` omni_storage.py:137-205, SQLite ``INSERT OR REPLACE``
+    :410-464, ES doc_id :275-296).
     """
 
     def __init__(
         self,
         root: str,
         n_cells: int = 16,
-        dim: int = 64,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ):
-        import os
-
-        from omni_crawler_spark.lakehouse.deletion_vectors import (
-            DeletionVectors,
+        super().__init__(root, "ivf_assignments", id_col)
+        params = {"n_cells": n_cells, "id_col": id_col, "vec_col": vec_col}
+        ensure_params_marker(
+            os.path.join(root, "index_params.json"), params, "IVF index"
         )
-        from omni_crawler_spark.lakehouse.table import SnapshotTable
-
-        self.root = root
-        self.table = SnapshotTable(root, name="ivf_assignments")
-        self.dv = DeletionVectors(self.table, root, id_col)
         self.n_cells = n_cells
-        self.dim = dim
-        self.id_col = id_col
         self.vec_col = vec_col
         self._cent_path = os.path.join(root, "centroids.npy")
         self._centroids: np.ndarray | None = None
@@ -194,70 +191,34 @@ class IVFIndex:
             self._centroids = np.load(self._cent_path)
         return self._centroids
 
-    def bootstrap(
-        self, spark, corpus: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Train centroids (once — an existing centroid file wins, so
-        replays and later sessions reuse the frozen ones) and index
-        the corpus."""
-        import os
-        import uuid
+    def rows(self, batch: DataFrame) -> DataFrame:
+        """Assign with the frozen centroids — O(batch)."""
+        return ivf_index(batch, self._load_centroids(), self.vec_col).select(
+            self.id_col, self.vec_col, "cell"
+        )
 
+    def bootstrap(
+        self, spark, batch: DataFrame, op_id: str | None = None
+    ) -> None:
+        """Train the centroids on the first batch (once — an existing
+        centroid file wins, so replays, later batches and later
+        sessions reuse the frozen ones) and index the batch."""
         if not os.path.isfile(self._cent_path):
             cent = train_centroids(
-                corpus,
+                batch,
                 n_cells=self.n_cells,
-                dim=self.dim,
                 vec_col=self.vec_col,
                 id_col=self.id_col,
             )
             tmp = f"{self._cent_path}.tmp-{uuid.uuid4().hex}.npy"
             np.save(tmp, cent)
             os.replace(tmp, self._cent_path)
-        self.add_batch(spark, corpus, op_id=op_id)
-
-    def add_batch(
-        self, spark, batch: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Assign with the frozen centroids and append — O(batch)."""
-        self.dv.append(self._assigned(batch), op_id=op_id)
-
-    def _assigned(self, batch: DataFrame) -> DataFrame:
-        return ivf_index(batch, self._load_centroids(), self.vec_col).select(
-            self.id_col, self.vec_col, "cell"
-        )
-
-    def reindex(
-        self, spark, batch: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Replace the stored embedding+assignment of ``batch``'s ids
-        (re-crawled, changed pages whose embeddings moved): one
-        O(batch) frozen-centroid assignment appended at a fresh
-        generation + one tombstone row per id marking older
-        generations dead — subsequent searches score ONLY the new
-        vector. Crash anywhere replays to the same state (the floor
-        is recovered from the committed assignment leg,
-        lakehouse/deletion_vectors.py)."""
-        self.dv.reindex(
-            spark,
-            self._assigned(batch),
-            batch.select(self.id_col),
-            op_id=op_id,
-        )
-
-    def delete(
-        self, spark, ids: DataFrame, op_id: str | None = None
-    ) -> None:
-        """Drop vectors from the index (pages gone on re-crawl): one
-        tombstone row per id; rows are reclaimed at ``compact`` and a
-        later :meth:`reindex` resurrects the id. ``ids`` must carry
-        the index's id column."""
-        self.dv.delete(ids.select(self.id_col), op_id=op_id)
+        super().bootstrap(spark, batch, op_id=op_id)
 
     def search(
         self, spark, query_ids: list[int], k: int = 5, nprobe: int = 4
     ) -> DataFrame:
-        indexed = self.dv.live(spark)
+        indexed = self.live(spark)
         return ivf_topk(
             indexed,
             query_ids,
@@ -268,10 +229,3 @@ class IVFIndex:
             vec_col=self.vec_col,
             indexed=indexed,
         )
-
-    def compact(self, spark, op_id: str | None = None) -> int:
-        """Fold append-per-batch dirs into one snapshot with the
-        deletion vectors APPLIED (stale assignments of re-indexed ids
-        physically dropped, tombstones cleared) — read-amp bound,
-        same cadence policy as the dedup index."""
-        return self.dv.compact(spark, op_id=op_id)

@@ -61,7 +61,8 @@ def train_codebooks(
     """(n_sub, n_centroids, dim/n_sub) codebooks via per-subspace
     k-means (fixed seed/iters). Vectors are L2-normalized first so PQ
     distances align with cosine."""
-    assert dim % n_sub == 0
+    if dim % n_sub:
+        raise ValueError(f"dim {dim} is not a multiple of n_sub {n_sub}")
     d_sub = dim // n_sub
     x = _sample_matrix(embeddings, sample, id_col, vec_col)
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)

@@ -81,6 +81,40 @@ def dedup_within_watermark(
     )
 
 
+def _index_stream(
+    spark: SparkSession,
+    docs_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    index,
+    on_batch,
+    compact_every: int,
+) -> StreamingQuery:
+    """Drain ``docs_dir`` one file per micro-batch through
+    ``on_batch(batch_df, batch_id)``, the per-batch call into the
+    persisted ``index``. Every ``compact_every`` batches the index's
+    O(batches) append dirs fold into one snapshot, bounding probe-side
+    read amplification; the compaction's op_id is idempotent, so a
+    replayed compaction batch no-ops."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        on_batch(batch_df, batch_id)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            index.compact(
+                batch_df.sparkSession, op_id=f"compact-{batch_id}"
+            )
+
+    stream = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(docs_dir)
+    return (
+        stream.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def streaming_incremental_dedup(
     spark: SparkSession,
     docs_dir: str,
@@ -115,33 +149,16 @@ def streaming_incremental_dedup(
         index_root, shingle_k=shingle_k, threshold=threshold
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _dedup(batch_df: DataFrame, batch_id: int) -> None:
         kept, _dropped = index.dedup_batch(
-            batch_df.sparkSession,
-            batch_df,
-            "doc_id",
-            "text",
-            op_id=f"stream-{batch_id}",
+            batch_df.sparkSession, batch_df, op_id=f"stream-{batch_id}"
         )
         kept.write.mode("overwrite").parquet(
             f"{kept_dir}/batch_id={batch_id}"
         )
-        # bound probe-side read amplification: fold the O(batches)
-        # append dirs into one snapshot on a fixed cadence (idempotent
-        # op_id — a replayed compaction batch no-ops)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(
-                batch_df.sparkSession, op_id=f"compact-{batch_id}"
-            )
 
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _index_stream(
+        spark, docs_dir, schema, checkpoint_dir, index, _dedup, compact_every
     )
 
 
@@ -173,23 +190,13 @@ def streaming_search_index(
 
     index = SearchIndex(index_root)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _append(batch_df: DataFrame, batch_id: int) -> None:
         index.bootstrap(
             batch_df.sparkSession, batch_df, op_id=f"stream-{batch_id}"
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(
-                batch_df.sparkSession, op_id=f"compact-{batch_id}"
-            )
 
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _index_stream(
+        spark, docs_dir, schema, checkpoint_dir, index, _append, compact_every
     )
 
 
@@ -223,21 +230,11 @@ def streaming_search_upsert(
 
     index = SearchIndex(index_root)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         index.reindex(
             batch_df.sparkSession, batch_df, op_id=f"stream-{batch_id}"
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(
-                batch_df.sparkSession, op_id=f"compact-{batch_id}"
-            )
 
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _index_stream(
+        spark, docs_dir, schema, checkpoint_dir, index, _upsert, compact_every
     )

@@ -59,21 +59,21 @@ def test_replay_is_idempotent_and_index_grows_across_batches(spark):
     ix = MinHashIndex(
         tempfile.mkdtemp(prefix="mhidx_t_"), shingle_k=14, threshold=0.9
     )
-    ix.bootstrap(spark, corpus, "doc_id", "text", op_id="boot")
-    kept1, _ = ix.dedup_batch(spark, b1, "doc_id", "text", op_id="b1")
+    ix.bootstrap(spark, corpus, op_id="boot")
+    kept1, _ = ix.dedup_batch(spark, b1, op_id="b1")
     n_b1 = b1.count()
     assert kept1.count() >= n_b1 - 2  # 114 may drop vs corpus dup 89
     v_after = ix.table.current_version()
 
     # replaying the same op_id must not double-append
-    ix.dedup_batch(spark, b1, "doc_id", "text", op_id="b1")
+    ix.dedup_batch(spark, b1, op_id="b1")
     assert ix.table.current_version() == v_after
 
     # a later batch that copies batch-1 docs must drop ENTIRELY
     # against the grown index (proof the index, not just the
     # bootstrap corpus, participates in the probe)
     b2 = b1.select((F.col("doc_id") + 500000).alias("doc_id"), "text")
-    kept2, dropped2 = ix.dedup_batch(spark, b2, "doc_id", "text", op_id="b2")
+    kept2, dropped2 = ix.dedup_batch(spark, b2, op_id="b2")
     assert kept2.count() == 0
     drops = {r.new_id: r.dup_of for r in dropped2.collect()}
     assert set(drops) == {500000 + i for i in range(100, 150)}
@@ -88,14 +88,9 @@ def test_cross_probe_is_broadcast_no_index_shuffle(spark):
     ix = MinHashIndex(
         tempfile.mkdtemp(prefix="mhidx_p_"), shingle_k=14, threshold=0.9
     )
-    ix.bootstrap(
-        spark, d.filter(F.col("doc_id") < 200), "doc_id", "text", op_id="b"
-    )
+    ix.bootstrap(spark, d.filter(F.col("doc_id") < 200), op_id="b")
     probe = ix._cross_probe(
-        spark,
-        ix.banded(
-            d.filter(F.col("doc_id") >= 200).limit(20), "doc_id", "text"
-        ),
+        spark, ix.rows(d.filter(F.col("doc_id") >= 200).limit(20))
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -110,6 +105,8 @@ def test_index_rejects_mismatched_signature_params(spark):
     with pytest.raises(ValueError, match="built with"):
         MinHashIndex(root, shingle_k=5)
     MinHashIndex(root, shingle_k=14)  # matching params reopen fine
+    with pytest.raises(ValueError, match="bands"):
+        MinHashIndex(tempfile.mkdtemp(prefix="mhidx_b_"), bands=10)
 
 
 def test_compaction_bounds_dirs_and_preserves_probe(spark):
@@ -124,8 +121,6 @@ def test_compaction_bounds_dirs_and_preserves_probe(spark):
         ix.dedup_batch(
             spark,
             d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            "doc_id",
-            "text",
             op_id=f"b{i}",
         )
     manifest = ix.table.history()[-1]
@@ -135,9 +130,7 @@ def test_compaction_bounds_dirs_and_preserves_probe(spark):
     )
     before = {
         (r.new_id, r.dup_of)
-        for r in ix._cross_probe(
-            spark, ix.banded(probe, "doc_id", "text")
-        ).collect()
+        for r in ix._cross_probe(spark, ix.rows(probe)).collect()
     }
     ix.compact(spark, op_id="compact-1")
     assert len(ix.table.history()[-1]["data_dirs"]) == 1
@@ -145,8 +138,6 @@ def test_compaction_bounds_dirs_and_preserves_probe(spark):
     assert len(ix.table.history()[-1]["data_dirs"]) == 1
     after = {
         (r.new_id, r.dup_of)
-        for r in ix._cross_probe(
-            spark, ix.banded(probe, "doc_id", "text")
-        ).collect()
+        for r in ix._cross_probe(spark, ix.rows(probe)).collect()
     }
     assert before == after and len(before) > 0

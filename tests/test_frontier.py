@@ -367,7 +367,7 @@ def test_incremental_index_matches_batch_and_searches(spark, tmp_path):
         fields={"title": 30, "content": 20, "caption": 15},
         id_col="url_hash",
     )
-    live = eng.index.dv.live(spark)
+    live = eng.index.live(spark)
     cols = ["url_hash", "fld", "boost10", "tok"]
     assert {tuple(r) for r in live.select(*cols).collect()} == {
         tuple(r) for r in batch.select(*cols).collect()

@@ -26,20 +26,20 @@ def embeddings(spark):
 
 
 def test_centroids_deterministic(embeddings):
-    c1 = I.train_centroids(embeddings, n_cells=8, dim=16)
-    c2 = I.train_centroids(embeddings, n_cells=8, dim=16)
+    c1 = I.train_centroids(embeddings, n_cells=8)
+    c2 = I.train_centroids(embeddings, n_cells=8)
     assert np.array_equal(c1, c2)
 
 
 def test_index_covers_all(embeddings):
-    cent = I.train_centroids(embeddings, n_cells=8, dim=16)
+    cent = I.train_centroids(embeddings, n_cells=8)
     idx = I.ivf_index(embeddings, cent)
     assert idx.filter(F.col("cell").isNull()).count() == 0
     assert idx.select("cell").distinct().count() <= 8
 
 
 def test_ivf_recall_vs_exact(embeddings):
-    cent = I.train_centroids(embeddings, n_cells=8, dim=16)
+    cent = I.train_centroids(embeddings, n_cells=8)
     qids = [0, 1, 2, 3]
     exact = {
         (r.query_id, r.neighbor_id)
@@ -60,14 +60,14 @@ def test_persisted_index_incremental_equals_oneshot(spark, embeddings):
     import tempfile
 
     root = tempfile.mkdtemp(prefix="ivfidx_")
-    ix = I.IVFIndex(root, n_cells=8, dim=16)
+    ix = I.IVFIndex(root, n_cells=8)
     first = embeddings.filter(F.col("vec_id") < 200)
     rest = embeddings.filter(F.col("vec_id") >= 200)
     ix.bootstrap(spark, first, op_id="boot")
     v = ix.table.current_version()
     ix.bootstrap(spark, first, op_id="boot")  # replay no-ops
     assert ix.table.current_version() == v
-    ix.add_batch(spark, rest, op_id="b1")
+    ix.bootstrap(spark, rest, op_id="b1")
 
     qids = [0, 1, 2, 3]
     got = {
@@ -91,3 +91,14 @@ def test_persisted_index_incremental_equals_oneshot(spark, embeddings):
         for r in ix.search(spark, qids, k=5, nprobe=2).collect()
     }
     assert after == got
+
+
+def test_ivf_index_rejects_mismatched_params(tmp_path):
+    """A root's centroids and assignments hold under ONE (n_cells,
+    id_col, vec_col) config: reopening it with other params fails
+    loudly instead of silently reusing the old centroids."""
+    root = str(tmp_path / "ivf")
+    I.IVFIndex(root, n_cells=2)
+    with pytest.raises(ValueError, match="built with"):
+        I.IVFIndex(root, n_cells=8)
+    I.IVFIndex(root, n_cells=2)  # matching params reopen fine

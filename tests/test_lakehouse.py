@@ -130,6 +130,8 @@ def test_upsert_ignore_keeps_first(spark, tmp_path):
     t.upsert(spark.createDataFrame(
         [("u1", 99), ("u2", 20)], "url string, quality int"))
     assert _rows(t, spark) == {("u1", 10), ("u2", 20)}
+    with pytest.raises(ValueError, match="on_conflict"):
+        SnapshotTable(str(tmp_path / "t2"), key=["url"], on_conflict="skip")
 
 
 def test_upsert_replay_idempotent(spark, tmp_path):
@@ -360,7 +362,7 @@ def _dv(tmp_path):
     from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
 
     root = str(tmp_path / "ix")
-    return DeletionVectors(SnapshotTable(root, "ix"), root, "id")
+    return DeletionVectors(root, "ix", "id")
 
 
 def test_dv_compact_keeps_racing_append(spark, tmp_path):
@@ -368,10 +370,11 @@ def test_dv_compact_keeps_racing_append(spark, tmp_path):
     read the index must survive: the index leg's pinned commit loses
     and it re-applies the tombstones to the new snapshot."""
     dv, other = _dv(tmp_path), _dv(tmp_path)
-    dv.append(spark.range(0, 3))
-    dv.delete(spark.range(1, 2))
+    dv.bootstrap(spark, spark.range(0, 3))
+    dv.delete(spark, spark.range(1, 2))
     _race_after_read(
-        dv.table, lambda: other.append(spark.range(100, 102), op_id="racer")
+        dv.table,
+        lambda: other.bootstrap(spark, spark.range(100, 102), op_id="racer"),
     )
     dv.compact(spark, op_id="cp")
     assert sorted(r.id for r in other.live(spark).collect()) == [0, 2, 100, 101]
@@ -387,10 +390,11 @@ def test_dv_compact_keeps_racing_tombstone(spark, tmp_path):
     the tombstones must survive the tombstone leg: only what the index
     leg applied is cleared."""
     dv, other = _dv(tmp_path), _dv(tmp_path)
-    dv.append(spark.range(0, 4))
-    dv.delete(spark.range(1, 2))
+    dv.bootstrap(spark, spark.range(0, 4))
+    dv.delete(spark, spark.range(1, 2))
     _race_after_read(
-        dv.tomb, lambda: other.delete(spark.range(2, 3), op_id="racer")
+        dv.tomb,
+        lambda: other.delete(spark, spark.range(2, 3), op_id="racer"),
     )
     dv.compact(spark, op_id="cp")
     assert sorted(r.id for r in other.live(spark).collect()) == [0, 3]
@@ -404,8 +408,8 @@ def test_dv_compact_between_reindex_legs_keeps_resurrected_id(spark, tmp_path):
     That floor must not reach them: the delete's floor is the first
     generation not yet written, so rows written after it stay live."""
     dv, other = _dv(tmp_path), _dv(tmp_path)
-    dv.append(spark.range(0, 3))
-    dv.delete(spark.range(1, 2))
+    dv.bootstrap(spark, spark.range(0, 3))
+    dv.delete(spark, spark.range(1, 2))
     tombstone = dv._tombstone
 
     def compact_then_tombstone(*a, **kw):

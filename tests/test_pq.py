@@ -37,6 +37,8 @@ def test_encode_shape_and_determinism(embeddings, codebooks):
     assert a == b
     assert all(len(v) == 4 for v in a.values())
     assert all(0 <= c < 16 for v in a.values() for c in v)
+    with pytest.raises(ValueError, match="n_sub"):
+        PQ.train_codebooks(embeddings, dim=30, n_sub=4)
 
 
 def test_pq_recall_vs_exact(embeddings, codebooks):

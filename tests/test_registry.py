@@ -187,21 +187,32 @@ def test_crawl_queries_remove_their_warehouse(spark, sf_dir, monkeypatch, name):
     assert not os.path.exists(wh)
 
 
-def test_one_deletion_vector_owner_per_index():
-    """Each persisted index class owns its deletion vectors; the crawl
-    engine's index is a ``SearchIndex``, not a second hand-built
-    table + vectors pair."""
+def test_one_deletion_vector_owner_per_index(tmp_path):
+    """Each persisted index class IS a ``DeletionVectors`` table; the
+    crawl engine's index is a ``SearchIndex``, not a second hand-built
+    table + vectors pair; and no other module touches the tombstones
+    or reaches into an index's vectors through a ``.dv`` attribute."""
     import pathlib
+    import re
+
+    from omni_crawler_spark.frontier.crawl import CrawlEngine
+    from omni_crawler_spark.lakehouse.deletion_vectors import DeletionVectors
+    from omni_crawler_spark.operators.dedup_incremental import MinHashIndex
+    from omni_crawler_spark.operators.ivf import IVFIndex
+    from omni_crawler_spark.search_index import SearchIndex
+
+    for cls in (SearchIndex, MinHashIndex, IVFIndex):
+        assert issubclass(cls, DeletionVectors), cls
+    assert isinstance(CrawlEngine(str(tmp_path / "wh")).index, SearchIndex)
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "omni_crawler_spark"
     users = sorted(
         str(f.relative_to(pkg))
         for f in pkg.rglob("*.py")
-        if "DeletionVectors(" in f.read_text()
+        if '"tombstones"' in f.read_text()
+        or re.search(r"\.dv\b", f.read_text())
     )
-    assert users == [
-        "operators/dedup_incremental.py", "operators/ivf.py", "search_index.py"
-    ]
+    assert users == ["lakehouse/deletion_vectors.py"]
 
 
 @pytest.mark.parametrize("ram_gib", [1, 3, 15, 64, 512])

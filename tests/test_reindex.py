@@ -75,11 +75,11 @@ def test_search_index_reindex_replay_noop_and_compact(docs, tmp_path):
     assert ix.tomb.current_version() == v_tomb
 
     before = sorted(
-        tuple(r) for r in ix.postings(spark).orderBy("tok", "fld").collect()
+        tuple(r) for r in ix.live(spark).orderBy("tok", "fld").collect()
     )
     ix.compact(spark, op_id="cmp-1")
     after = sorted(
-        tuple(r) for r in ix.postings(spark).orderBy("tok", "fld").collect()
+        tuple(r) for r in ix.live(spark).orderBy("tok", "fld").collect()
     )
     assert before == after  # compaction preserves the live view
     assert ix.tomb.read(spark).count() == 0  # vectors folded away
@@ -124,29 +124,29 @@ def test_minhash_index_reindex_uses_only_new_signature(spark, tmp_path):
     ix.bootstrap(
         spark, _mh_docs(spark, [(1, _T1), (2, "unrelated corpus filler "
                                              "completely different words")]),
-        "doc_id", "text", op_id="boot",
+        op_id="boot",
     )
     # a near-copy of T1 is caught against doc 1's stored signature
     kept, dropped = ix.dedup_batch(
         spark, _mh_docs(spark, [(100, _T1 + " tail")]),
-        "doc_id", "text", op_id="b1",
+        op_id="b1",
     )
     assert {r.new_id: r.dup_of for r in dropped.collect()} == {100: 1}
 
     # doc 1's page changed on re-crawl: its signature is REPLACED
     ix.reindex(
-        spark, _mh_docs(spark, [(1, _T2)]), "doc_id", "text", op_id="re-1"
+        spark, _mh_docs(spark, [(1, _T2)]), op_id="re-1"
     )
     # old-text near-copies no longer match doc 1 (stale sig is dead)
     kept2, dropped2 = ix.dedup_batch(
         spark, _mh_docs(spark, [(101, _T1 + " other tail")]),
-        "doc_id", "text", op_id="b2",
+        op_id="b2",
     )
     assert 101 not in {r.new_id for r in dropped2.collect()}
     # new-text near-copies DO match doc 1's fresh signature
     kept3, dropped3 = ix.dedup_batch(
         spark, _mh_docs(spark, [(102, _T2 + " tail")]),
-        "doc_id", "text", op_id="b3",
+        op_id="b3",
     )
     assert {r.new_id: r.dup_of for r in dropped3.collect()} == {102: 1}
 
@@ -155,16 +155,16 @@ def test_minhash_index_reindex_replay_delete_compact(spark, tmp_path):
     ix = MinHashIndex(str(tmp_path / "mh"), shingle_k=5, threshold=0.85)
     ix.bootstrap(
         spark, _mh_docs(spark, [(1, _T1), (2, _T2)]),
-        "doc_id", "text", op_id="boot",
+        op_id="boot",
     )
     ix.reindex(
         spark, _mh_docs(spark, [(1, _T2 + " variant")]),
-        "doc_id", "text", op_id="re-1",
+        op_id="re-1",
     )
     v_post, v_tomb = ix.table.current_version(), ix.tomb.current_version()
     ix.reindex(
         spark, _mh_docs(spark, [(1, _T2 + " variant")]),
-        "doc_id", "text", op_id="re-1",
+        op_id="re-1",
     )
     assert ix.table.current_version() == v_post
     assert ix.tomb.current_version() == v_tomb
@@ -174,13 +174,13 @@ def test_minhash_index_reindex_replay_delete_compact(spark, tmp_path):
     )
     live_before = sorted(
         (r.doc_id, r.band, r.band_hash)
-        for r in ix._live(spark).collect()
+        for r in ix.live(spark).collect()
     )
     assert {d for d, _, _ in live_before} == {1}
     ix.compact(spark, op_id="cmp")
     live_after = sorted(
         (r.doc_id, r.band, r.band_hash)
-        for r in ix._live(spark).collect()
+        for r in ix.live(spark).collect()
     )
     assert live_before == live_after
     assert ix.tomb.read(spark).count() == 0
@@ -258,7 +258,7 @@ def test_crawl_engine_recrawl_roundtrip(spark, tmp_path):
     }
     got = {
         tuple(r)
-        for r in eng.index.dv.live(spark)
+        for r in eng.index.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -293,10 +293,8 @@ def test_search_index_reindex_crash_between_legs_replays_safely(
     )
     # simulate the crash: run ONLY the postings leg (same op id and
     # gen the real reindex would use), no tombstone
-    ix.dv.table.append(
-        ix._postings_for(changed).withColumn(
-            "gen", F.lit(ix.dv.next_gen())
-        ),
+    ix.table.append(
+        ix.rows(changed).withColumn("gen", F.lit(ix.next_gen())),
         op_id="re-1-post",
     )
     # the table moves on before the replay (another batch lands)
@@ -360,7 +358,7 @@ def test_compact_replay_noops_and_empty_tomb_fast_path(docs, tmp_path):
     assert ix.tomb.current_version() == v_tomb
     # fresh compaction after the clear: tombstone table has rows==0
     # (though version>0) → single rewrite leg, no floors join
-    assert ix.dv._tomb_rows() == 0
+    assert ix._tomb_rows() == 0
     ix.compact(spark, op_id="cmp-2")
     assert ix.tomb.current_version() == v_tomb  # tomb untouched
     assert _hits(ix, spark, "tulip") == {1, 3}
@@ -370,20 +368,19 @@ def test_minhash_delete_then_reindex_resurrects(spark, tmp_path):
     ix = MinHashIndex(str(tmp_path / "mh"), shingle_k=5, threshold=0.85)
     ix.bootstrap(
         spark, _mh_docs(spark, [(1, _T1), (2, _T2)]),
-        "doc_id", "text", op_id="boot",
+        op_id="boot",
     )
     ix.delete(spark, spark.createDataFrame([(1,)], "doc_id long"),
               op_id="del-1")
     kept, dropped = ix.dedup_batch(
         spark, _mh_docs(spark, [(100, _T1 + " x")]),
-        "doc_id", "text", op_id="b1",
+        op_id="b1",
     )
     assert 100 not in {r.new_id for r in dropped.collect()}  # 1 gone
-    ix.reindex(spark, _mh_docs(spark, [(1, _T1)]), "doc_id", "text",
-               op_id="re-back")
+    ix.reindex(spark, _mh_docs(spark, [(1, _T1)]), op_id="re-back")
     kept2, dropped2 = ix.dedup_batch(
         spark, _mh_docs(spark, [(101, _T1 + " y")]),
-        "doc_id", "text", op_id="b2",
+        op_id="b2",
     )
     assert {r.new_id: r.dup_of for r in dropped2.collect()} == {101: 1}
 
@@ -445,7 +442,7 @@ def test_deletion_vectors_random_ops_match_model(spark, tmp_path):
         if ix.table.is_empty():
             continue
         live = {}
-        for r in ix.postings(spark).collect():
+        for r in ix.live(spark).collect():
             live.setdefault(r.doc_id, set()).add(r.tok)
         assert live == model, (step, op)
 
@@ -478,7 +475,7 @@ def test_ivf_index_reindex_moves_vector_between_cells(spark, tmp_path):
     from omni_crawler_spark.operators import ivf as I
 
     rng, emb = _two_cluster_embeddings(spark)
-    ix = I.IVFIndex(str(tmp_path / "ivf"), n_cells=2, dim=16)
+    ix = I.IVFIndex(str(tmp_path / "ivf"), n_cells=2)
     ix.bootstrap(spark, emb, op_id="boot")
 
     def neighbors(q, k=12):
@@ -519,17 +516,17 @@ def test_ivf_index_reindex_replay_delete_compact(spark, tmp_path):
     from omni_crawler_spark.operators import ivf as I
 
     rng, emb = _two_cluster_embeddings(spark)
-    ix = I.IVFIndex(str(tmp_path / "ivf"), n_cells=2, dim=16)
+    ix = I.IVFIndex(str(tmp_path / "ivf"), n_cells=2)
     ix.bootstrap(spark, emb, op_id="boot")
     moved = np.concatenate(([-5.0], np.zeros(15)))
     changed = spark.createDataFrame(
         [(0, [float(x) for x in moved])], "vec_id long, embedding array<float>"
     )
     ix.reindex(spark, changed, op_id="re-0")
-    v_post, v_tomb = ix.table.current_version(), ix.dv.tomb.current_version()
+    v_post, v_tomb = ix.table.current_version(), ix.tomb.current_version()
     ix.reindex(spark, changed, op_id="re-0")  # replay no-ops
     assert ix.table.current_version() == v_post
-    assert ix.dv.tomb.current_version() == v_tomb
+    assert ix.tomb.current_version() == v_tomb
 
     # delete: vec 19's page is gone on re-crawl
     ix.delete(
@@ -551,7 +548,7 @@ def test_ivf_index_reindex_replay_delete_compact(spark, tmp_path):
     }
     assert after == before
     assert len(ix.table.history()[-1]["data_dirs"]) == 1
-    assert ix.dv.tomb.footer_row_count() == 0
+    assert ix.tomb.footer_row_count() == 0
     raw = ix.table.read(spark)
     assert raw.filter(F.col("vec_id") == 19).count() == 0
     assert raw.filter(F.col("vec_id") == 0).count() == 1
@@ -610,11 +607,11 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     cycle += 1
     stats = eng.run_cycle(spark, cycle)
     assert stats["n_scheduled"] == 1
-    tomb_rows = eng.index.dv.tomb.footer_row_count()
-    index_rows = eng.index.dv.table.footer_row_count()
+    tomb_rows = eng.index.tomb.footer_row_count()
+    index_rows = eng.index.table.footer_row_count()
     live_before = {
         tuple(r)
-        for r in eng.index.dv.live(spark)
+        for r in eng.index.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -627,13 +624,13 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     cycle += 1
     stats = eng.run_cycle(spark, cycle)
     assert stats["n_scheduled"] == 1
-    assert eng.index.dv.tomb.footer_row_count() == tomb_rows, \
+    assert eng.index.tomb.footer_row_count() == tomb_rows, \
         "unchanged re-fetch must add no tombstones"
-    assert eng.index.dv.table.footer_row_count() == index_rows, \
+    assert eng.index.table.footer_row_count() == index_rows, \
         "unchanged re-fetch must append no postings"
     live_after = {
         tuple(r)
-        for r in eng.index.dv.live(spark)
+        for r in eng.index.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
@@ -657,15 +654,15 @@ def test_crawl_engine_unchanged_recrawl_skips_index_churn(spark, tmp_path):
     # crash-replay of the unchanged-recrawl cycle: version_of pins the
     # comparison to the PRE-cycle articles state, so the replay stays
     # a no-op (without the pin it would see the cycle's own upsert)
-    v_tomb = eng.index.dv.tomb.current_version()
-    v_index = eng.index.dv.table.current_version()
+    v_tomb = eng.index.tomb.current_version()
+    v_index = eng.index.table.current_version()
     eng.recrawl(spark, one, op_id="rc-b")
     eng.run_cycle(spark, cycle)
-    assert eng.index.dv.tomb.current_version() == v_tomb
-    assert eng.index.dv.table.current_version() == v_index
+    assert eng.index.tomb.current_version() == v_tomb
+    assert eng.index.table.current_version() == v_index
     assert {
         tuple(r)
-        for r in eng.index.dv.live(spark)
+        for r in eng.index.live(spark)
         .filter(F.col("url_hash") == target.url_hash)
         .select("url_hash", "fld", "boost10", "tok")
         .collect()
